@@ -36,10 +36,19 @@ manifests) from first principles:
   the loser re-reads and retries — Delta's optimistic concurrency
   protocol, single-writer-wins per version.
 
-Scale note: the manifest holds file PATHS (plus row counts), i.e.
-metadata bounded by file count, not data size; Spark reads the listed
-files with the ordinary vectorized parquet reader, so all pushdown/
-pruning behavior is unchanged.
+Scale note: the manifest holds file PATHS, i.e. metadata bounded by
+file count, not data size; Spark reads the listed files with the
+ordinary vectorized parquet reader, so all pushdown/pruning behavior
+is unchanged.
+
+File statistics are a TABLE PROPERTY: `init_table(stats_cols=...)`
+names the indexed columns once, in the version-0 manifest (Delta's
+`dataSkippingNumIndexedCols`), and every later manifest repeats it.
+Each commit records per-file min/max of those columns for the files
+it adds, read on the driver from the parquet footers Spark has just
+written — no extra Spark job, and no writer can leave them out.
+Checkpoints carry the merged statistics, so snapshot_pruned resolves
+them from the same bounded checkpoint-plus-deltas walk as the files.
 """
 
 from __future__ import annotations
@@ -79,20 +88,25 @@ def _checkpoint_path(root: str, version: int) -> str:
 CHECKPOINT_EVERY = 16
 
 
-def current_version(root: str) -> int:
-    """Highest committed version, or -1 for an empty/uninitialized
-    table. O(#versions) listing of the log directory only."""
+def _log_versions(root: str) -> list[int]:
+    """Versions whose delta manifest is in the log (vacuum removes
+    those below its cutoff). O(#versions) listing of the log only."""
     log = _log_dir(root)
     if not os.path.isdir(log):
-        return -1
-    versions = [
+        return []
+    return [
         int(f.split(".")[0])
         for f in os.listdir(log)
         if f.endswith(".json")
         and ".checkpoint." not in f
         and f.split(".")[0].isdigit()
     ]
-    return max(versions) if versions else -1
+
+
+def current_version(root: str) -> int:
+    """Highest committed version, or -1 for an empty/uninitialized
+    table."""
+    return max(_log_versions(root), default=-1)
 
 
 def _read_raw(root: str, version: int) -> dict:
@@ -104,11 +118,16 @@ def _read_raw(root: str, version: int) -> dict:
         return json.load(f)
 
 
-def _resolve_files(root: str, version: int) -> list[str]:
-    """The closed data-file list of snapshot `version`: walk back to
-    the nearest checkpoint (or legacy full manifest) at-or-below, then
-    replay the delta manifests forward. Bounded by CHECKPOINT_EVERY
-    deltas after the first checkpoint exists."""
+def _resolve(root: str, version: int) -> tuple[list[str], dict, list[str]]:
+    """Snapshot `version` as (data files, per-file stats, deletion-
+    vector files): walk back to the nearest checkpoint (or legacy full
+    manifest, or version 0) at-or-below, then replay the delta
+    manifests forward. Bounded by CHECKPOINT_EVERY deltas after the
+    first checkpoint exists. Stats ride with their files: a removed
+    file drops its entry, an added file brings its commit's entry.
+    Vectors are add-only until a 'dv_reset' replaces the set; ones
+    targeting since-removed files are inert, not invalid (the
+    anti-join simply never matches them)."""
     deltas: list[dict] = []
     v = version
     while True:
@@ -120,21 +139,39 @@ def _resolve_files(root: str, version: int) -> list[str]:
         cp = _checkpoint_path(root, v)
         if os.path.exists(cp):
             with open(cp) as f:
-                files = set(json.load(f)["files"])
+                c = json.load(f)
+            files, stats = set(c["files"]), c.get("stats", {})
+            dvs = set(c.get("dvs", ()))
             break
         m = _read_raw(root, v)
-        if "files" in m:  # legacy full manifest (pre-delta format)
-            files = set(m["files"])
+        if "files" in m:  # legacy full manifest (pre-delta, pre-DV format)
+            files, stats, dvs = set(m["files"]), m.get("stats") or {}, set()
             break
         deltas.append(m)
         if v == 0:  # version 0's delta is against the empty table
-            files = set()
+            files, stats, dvs = set(), {}, set()
             break
         v -= 1
-    for m in reversed(deltas):
+    for m in reversed(deltas):  # oldest first: resets must apply in order
         files.difference_update(m["remove"])
         files.update(m["add"])
-    return sorted(files)
+        for f in m["remove"]:
+            stats.pop(f, None)
+        stats.update(m.get("stats") or {})
+        if "dv_reset" in m:
+            dvs = set(m["dv_reset"])
+        dvs.update(m.get("dv", ()))
+    return sorted(files), stats, sorted(dvs)
+
+
+def _resolve_files(root: str, version: int) -> list[str]:
+    """The closed data-file list of snapshot `version`."""
+    return _resolve(root, version)[0]
+
+
+def _resolve_dv_files(root: str, version: int) -> list[str]:
+    """Accumulated deletion-vector files visible at `version`."""
+    return _resolve(root, version)[2]
 
 
 def read_manifest(
@@ -159,35 +196,31 @@ def write_checkpoint(root: str, version: int | None = None) -> int:
     `version` (latest if None) — atomic via temp-file + os.replace, so
     a concurrent reader never sees a partial listing. Idempotent."""
     v = current_version(root) if version is None else version
-    files = _resolve_files(root, v)
-    # the dvs union rides in every checkpoint so merge-on-read deletes
-    # survive vacuum (the cutoff checkpoint is written before the
-    # delta manifests carrying the 'dv' keys are dropped)
-    dvs = _resolve_dv_files(root, v)
-    tmp = os.path.join(_log_dir(root), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump({"version": v, "files": files, "dvs": dvs}, f)
-    os.replace(tmp, _checkpoint_path(root, v))
+    # the dvs union and the merged file stats ride in every checkpoint
+    # so merge-on-read deletes and data skipping survive vacuum (the
+    # cutoff checkpoint is written before the delta manifests carrying
+    # the 'dv' and 'stats' keys are dropped)
+    files, stats, dvs = _resolve(root, v)
+    _replace_json(
+        _checkpoint_path(root, v),
+        {"version": v, "files": files, "dvs": dvs, "stats": stats},
+    )
     return v
 
 
+def _replace_json(path: str, obj) -> None:
+    """Write a log sidecar atomically (temp file + os.replace): a
+    concurrent reader sees the old file or the new one, never part."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def _earliest_version(root: str) -> int:
-    """Lowest version whose manifest still exists in the log (vacuum
-    removes manifests below its cutoff). 0 on a never-vacuumed or
-    empty table."""
-    log = _log_dir(root)
-    if not os.path.isdir(log):
-        return 0
-    return min(
-        (
-            int(f.split(".")[0])
-            for f in os.listdir(log)
-            if f.endswith(".json")
-            and ".checkpoint." not in f
-            and f.split(".")[0].isdigit()
-        ),
-        default=0,
-    )
+    """Lowest version whose manifest still exists in the log. 0 on a
+    never-vacuumed or empty table."""
+    return min(_log_versions(root), default=0)
 
 
 def _table_id_path(root: str) -> str:
@@ -246,10 +279,7 @@ def _record_vacuumed_ops(root: str, ops: set) -> None:
     Written by vacuum BEFORE it unlinks the manifests that carry them,
     so committed_ops never loses a tag across maintenance."""
     merged = _vacuumed_ops(root) | set(ops)
-    tmp = os.path.join(_log_dir(root), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump({"ops": sorted(merged)}, f)
-    os.replace(tmp, _vacuumed_ops_path(root))
+    _replace_json(_vacuumed_ops_path(root), {"ops": sorted(merged)})
 
 
 def _record_vacuum_cutoff(root: str, cutoff: int) -> None:
@@ -259,10 +289,7 @@ def _record_vacuum_cutoff(root: str, cutoff: int) -> None:
     prev = vacuum_cutoff(root)
     if cutoff <= prev:
         return
-    tmp = os.path.join(_log_dir(root), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump({"cutoff": cutoff}, f)
-    os.replace(tmp, _vacuum_marker_path(root))
+    _replace_json(_vacuum_marker_path(root), {"cutoff": cutoff})
 
 
 def vacuum_cutoff(root: str) -> int:
@@ -283,6 +310,7 @@ def _commit(
     add: list[str] = (),
     remove: list[str] = (),
     stats: dict | None = None,
+    stats_cols: tuple = (),
     cdc: list[str] | None = None,
     dv: list[str] | None = None,
     dv_reset: list[str] | None = None,
@@ -294,16 +322,39 @@ def _commit(
     — optimistic concurrency, loser retries against the new snapshot.
     Every CHECKPOINT_EVERY-th version also writes a full checkpoint
     sidecar AFTER the commit point (crash between the two is safe:
-    resolution just walks back to the previous checkpoint)."""
+    resolution just walks back to the previous checkpoint).
+
+    Statistics are recorded HERE, for every writer: each added file
+    gets footer min/max of the table's statistics columns — at version
+    0 `stats_cols` (the property: init_table, clone), later version-1's
+    plus `stats_cols` for this commit only (optimize_zorder). `stats`
+    holds entries already known for added files (blooms; a restore's
+    or clone's resolved ones); footers fill the columns they lack."""
     os.makedirs(_log_dir(root), exist_ok=True)
     if version == 0:
         table_id(root)  # stamp this incarnation's identity at birth
+        table_cols = list(stats_cols)
+    else:
+        try:
+            table_cols = _table_stats_cols(root, version - 1)
+        except FileNotFoundError:  # vacuumed, so a newer head exists
+            raise ConcurrentCommitError(f"version {version} is stale")
+    cols = list(dict.fromkeys([*table_cols, *stats_cols]))
+    stats = dict(stats or {})
+    for f in add:
+        have = stats.get(f, {})
+        if not all(c in have for c in cols):
+            stats[f] = {**_footer_stats(f, cols), **have}
     manifest = {
         "version": version,
         "op": op,
         "add": sorted(add),
         "remove": sorted(remove),
     }
+    if table_cols:
+        # the property repeats in every manifest, so a writer reads it
+        # from the head in one small read, and vacuum can never drop it
+        manifest["stats_cols"] = table_cols
     if stats:
         # OPTIONAL per-file column min/max for data skipping —
         # readers that ignore this key stay correct (a file without
@@ -351,9 +402,7 @@ def _strip_uri(p: str) -> str:
     _metadata.file_path, "file:/x" or "file:///x", possibly with a
     query suffix) to a plain absolute path. URIs are percent-encoded
     (a table root containing a space arrives as %20), so the path is
-    unquoted AFTER the scheme/query handling — skipping this made
-    every _manifest_form mapping miss on such roots, silently turning
-    delete_where/merge_upsert into no-ops (ADVICE r9)."""
+    unquoted AFTER the scheme/query handling."""
     if p.startswith("file:"):
         p = p[5:]
         while p.startswith("//"):
@@ -367,20 +416,12 @@ def _manifest_form(
     """Map executor-reported file URIs back to the EXACT path strings
     the manifest stores. input_file_name()/_metadata.file_path are
     always absolute, but manifests keep paths as the table root was
-    given — under a relative root, recording or intersecting the
-    absolute form would silently never match a manifest entry (the
-    ADVICE r8 resurrection bug class), so every comparison goes
-    through realpath on both sides. In strict mode (scan-derived
-    URIs) a miss is a protocol violation — the scan read a file the
-    snapshot does not own, or a URI form this decoder mishandles —
-    and raising keeps it LOUD instead of silently committing an
-    empty 'affected' set (ADVICE r9). strict=False is the
-    INTERSECTION mode for deletion-vector targets (ADVICE r10):
-    vectors are add-only until a dv_reset, so a live vector may
-    legitimately target a since-removed file; the read path treats
-    such targets as inert (the anti-join never matches), and the
-    DV-pending interlock must mirror that by dropping them, not
-    hard-failing every CoW delete/merge."""
+    given, so every comparison goes through realpath on both sides.
+    In strict mode (scan-derived URIs) a miss is a protocol violation
+    — the scan read a file the snapshot does not own — and raises
+    instead of silently committing an empty 'affected' set.
+    strict=False INTERSECTS (deletion-vector targets: a live vector
+    may target a since-removed file, which is inert)."""
     by_real = {os.path.realpath(f): f for f in manifest_files}
     out: set[str] = set()
     for u in uris:
@@ -398,17 +439,22 @@ def _manifest_form(
     return out
 
 
-def _write_data_files(df: DataFrame, root: str) -> list[str]:
-    """Write df as immutable parquet files under data/ (a fresh
-    UUID-named subdirectory per write — files are never overwritten)
-    and return their paths."""
-    sub = os.path.join(_data_dir(root), uuid.uuid4().hex)
+def _write_parquet(df: DataFrame, sub: str) -> list[str]:
+    """Write df as immutable parquet files into the fresh directory
+    `sub` (mode error: files are never overwritten) and return their
+    paths."""
     df.write.mode("error").parquet(sub)
     return [
         os.path.join(sub, f)
         for f in os.listdir(sub)
         if f.endswith(".parquet")
     ]
+
+
+def _write_data_files(df: DataFrame, root: str) -> list[str]:
+    """Data files of one write, in a fresh UUID-named subdirectory of
+    data/."""
+    return _write_parquet(df, os.path.join(_data_dir(root), uuid.uuid4().hex))
 
 
 def _stat_encode(v):
@@ -420,11 +466,7 @@ def _stat_encode(v):
     (order-preserving: fixed two digits per byte). Everything JSON
     already handles passes through, including None for an all-NULL
     file, which the probe treats as 'no stats'."""
-    if isinstance(v, datetime.datetime):
-        # naive and aware timestamps both isoformat; Spark returns
-        # session-local naive datetimes for TIMESTAMP columns
-        return v.isoformat()
-    if isinstance(v, datetime.date):
+    if isinstance(v, datetime.date):  # datetime.datetime included
         return v.isoformat()
     if isinstance(v, decimal.Decimal):
         return str(v)
@@ -462,12 +504,7 @@ def _probe_coerce(lo, hi):
             lambda s: datetime.datetime.fromisoformat(s),
         )
     if isinstance(probe, (bytes, bytearray)):
-        enc = _stat_encode
-        return (
-            enc(lo) if lo is not None else None,
-            enc(hi) if hi is not None else None,
-            lambda s: s,
-        )
+        return _stat_encode(lo), _stat_encode(hi), lambda s: s
     if isinstance(probe, decimal.Decimal):
         return lo, hi, lambda s: decimal.Decimal(s)
     if isinstance(probe, (int, float)) and not isinstance(probe, bool):
@@ -483,36 +520,94 @@ def _probe_coerce(lo, hi):
     return lo, hi, lambda s: s
 
 
-def _collect_file_stats(
-    spark: SparkSession, files: list[str], cols: tuple
-) -> dict:
-    """Per-file min/max of `cols` over just-written files — ONE
-    aggregate job at write time (grouped on input_file_name), the
-    Delta/Iceberg write-side stats collection. Returns
-    {path: {col: [lo, hi]}} with plain (non-URI) paths. Cost is a
-    single scan of the batch being committed, never of the table."""
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"_mn_{c}"))
-        aggs.append(F.max(c).alias(f"_mx_{c}"))
-    rows = (
-        spark.read.parquet(*files)
-        .groupBy(F.input_file_name().alias("_f"))
-        .agg(*aggs)
-        .collect()
-    )
-    out: dict = {}
-    # stats dict keys must be the manifest's OWN path strings (relative
-    # under a relative root), else the pruning probe never matches
-    by_real = {os.path.realpath(f): f for f in files}
-    for r in rows:
-        path = by_real.get(
-            os.path.realpath(_strip_uri(r["_f"])), _strip_uri(r["_f"])
+def _table_stats_cols(root: str, version: int) -> list[str]:
+    """The table's statistics columns (its property, set at version 0
+    and repeated in every manifest) as of `version`."""
+    return _read_raw(root, version).get("stats_cols", [])
+
+
+def _footer_decoder(col):
+    """Decoder from a parquet footer's raw min/max (pyarrow
+    Statistics.min_raw / max_raw) of column `col` (a ColumnSchema) to
+    the Python value Spark's collect() returns for it, so _stat_encode
+    encodes both alike. None for a type with no order-safe decode,
+    whose files then carry no stats for the column."""
+    lt = json.loads(col.logical_type.to_json())
+    kind, phys = lt["Type"], col.physical_type
+    if kind == "Decimal":
+        # INT32/INT64 hold the unscaled int, (FIXED_LEN_)BYTE_ARRAY its
+        # big-endian two's complement; a string-built Decimal is exact
+        def dec(raw):
+            if not isinstance(raw, int):
+                raw = int.from_bytes(raw, "big", signed=True)
+            return decimal.Decimal(f"{raw}e-{lt['scale']}")
+
+        return dec
+    if kind == "Date":
+        return lambda raw: datetime.date(1970, 1, 1) + datetime.timedelta(raw)
+    if kind == "Timestamp":
+        unit = {"milliseconds": 1000, "microseconds": 1}.get(lt["timeUnit"])
+        if unit is None:
+            return None
+        if lt["isAdjustedToUTC"]:  # TIMESTAMP: as PySpark's fromInternal
+            return lambda raw: datetime.datetime.fromtimestamp(
+                raw * unit // 1_000_000
+            ).replace(microsecond=raw * unit % 1_000_000)
+        # TIMESTAMP_NTZ: wall-clock time, no zone
+        return lambda raw: datetime.datetime(1970, 1, 1) + datetime.timedelta(
+            microseconds=raw * unit
         )
-        out[path] = {
-            c: [_stat_encode(r[f"_mn_{c}"]), _stat_encode(r[f"_mx_{c}"])]
-            for c in cols
-        }
+    if kind == "String":
+        return lambda raw: raw.decode("utf-8")
+    plain = kind == "None"
+    if kind == "Int" and lt["isSigned"] or plain and phys in (
+        "BOOLEAN", "INT32", "INT64"
+    ):
+        return lambda raw: raw
+    if plain and phys in ("FLOAT", "DOUBLE"):
+        # a NaN bound (Spark orders NaN above every number) is no bound
+        return lambda raw: None if raw != raw else raw
+    if plain and phys in ("BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY"):
+        return bytes
+    # unsigned ints (they order wrongly past the signed range), INT96
+    # and anything newer
+    return None
+
+
+def _footer_stats(path: str, cols) -> dict:
+    """{col: [lo, hi]} for a data file, from its parquet footer alone
+    (no data read, no Spark job): each column's row-group min/max
+    decoded and merged, then encoded as _stat_encode encodes the
+    Spark aggregate. Row groups that are entirely NULL are skipped.
+    A column left out — all NULL, not in the file, or a row group
+    without min/max (Spark's INT96 timestamps have none) — has 'no
+    stats', so its file is never skipped for it."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    out: dict = {}
+    for j in range(md.num_columns):
+        col = md.schema.column(j)
+        decode = _footer_decoder(col) if col.path in cols else None
+        if decode is None:
+            continue
+        lo = hi = None
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            st = rg.column(j).statistics
+            if st is not None and st.has_null_count:
+                if st.null_count == rg.num_rows:
+                    continue
+            mn = mx = None
+            if st is not None and st.has_min_max:
+                mn, mx = decode(st.min_raw), decode(st.max_raw)
+            if mn is None or mx is None:
+                lo = hi = None
+                break
+            lo = mn if lo is None else min(lo, mn)
+            hi = mx if hi is None else max(hi, mx)
+        if lo is not None:
+            out[col.path] = [_stat_encode(lo), _stat_encode(hi)]
     return out
 
 
@@ -524,43 +619,24 @@ def init_table(
     bloom_cols: tuple = (),
 ) -> int:
     """Create version 0 from df. Errors if the table already exists.
-    stats_cols: columns whose per-file min/max land in the manifest
-    for data skipping (snapshot_pruned). bloom_cols: columns whose
-    per-file bloom bitmaps land there too (snapshot_bloom_lookup)."""
+    stats_cols: the table's statistics columns — a table property:
+    every commit from now on records its files' footer min/max for
+    them, for data skipping (snapshot_pruned). bloom_cols: columns
+    whose per-file bloom bitmaps land in this commit's manifest too
+    (snapshot_bloom_lookup)."""
     if current_version(root) >= 0:
         raise FileExistsError(f"table already initialized at {root}")
+    missing = [c for c in stats_cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"init_table: stats_cols {missing} not in df")
     files = _write_data_files(df, root)
-    stats = (
-        _collect_file_stats(spark, files, stats_cols)
-        if stats_cols
-        else None
+    blooms = (
+        collect_file_blooms(spark, files, bloom_cols) if bloom_cols else None
     )
-    if bloom_cols:
-        blooms = collect_file_blooms(spark, files, bloom_cols)
-        stats = stats or {}
-        for path, ent in blooms.items():
-            stats.setdefault(path, {}).update(ent)
-    _commit(root, 0, "init", add=files, stats=stats)
+    _commit(
+        root, 0, "init", add=files, stats=blooms, stats_cols=tuple(stats_cols)
+    )
     return 0
-
-
-def _resolve_stats(root: str, version: int) -> dict:
-    """Merged per-file stats for snapshot `version`: replay every
-    surviving delta manifest's optional stats key forward (removed
-    files drop). Files committed without stats — or whose manifests
-    were vacuumed away — simply have no entry and are never skipped,
-    so the result is always safe, only possibly less selective.
-    O(#surviving versions) manifest reads, like committed_ops."""
-    stats: dict = {}
-    for v in range(_earliest_version(root), version + 1):
-        try:
-            m = _read_raw(root, v)
-        except FileNotFoundError:
-            continue
-        for f in m.get("remove", ()):
-            stats.pop(f, None)
-        stats.update(m.get("stats") or {})
-    return stats
 
 
 def snapshot_pruned(
@@ -581,8 +657,7 @@ def snapshot_pruned(
     over a range-clustered table opens O(matching files), not
     O(table). Returns (DataFrame, n_files_read, n_files_total)."""
     v = current_version(root) if version is None else version
-    files = _resolve_files(root, v)
-    stats = _resolve_stats(root, v)
+    files, stats, dvs = _resolve(root, v)
     lo_c, hi_c, decode = _probe_coerce(lo, hi)
     kept = []
     for f in files:
@@ -595,11 +670,16 @@ def snapshot_pruned(
             kept.append(f)
         elif decode(s[0]) <= hi_c and decode(s[1]) >= lo_c:
             kept.append(f)
-    dvs = _resolve_dv_files(root, v)
+    return _read_kept(
+        spark, kept, files, dvs, (F.col(col) >= lo) & (F.col(col) <= hi)
+    )
+
+
+def _read_kept(spark, kept, files, dvs, pred):
+    """(rows of the `kept` files that satisfy `pred`, n kept, n
+    files): the exact filter after file skipping."""
     df = (
-        _apply_dvs(spark, spark.read.parquet(*kept), dvs).filter(
-            (F.col(col) >= lo) & (F.col(col) <= hi)
-        )
+        _apply_dvs(spark, spark.read.parquet(*kept), dvs).filter(pred)
         if kept
         else spark.read.parquet(*files).filter(F.lit(False))
     )
@@ -620,18 +700,24 @@ def append(
     re-read the head and re-commit the same file list (Delta's
     blind-append concurrency rule; the data files were already
     durable, only the metadata pointer moves). Returns the committed
-    version. stats_cols: per-file min/max for data skipping, as in
-    init_table."""
+    version. The commit records footer statistics for the table's
+    stats_cols (see init_table); passing `stats_cols` here only checks
+    they are among them, and a column the table does not index raises
+    ValueError."""
+    if stats_cols:
+        head = current_version(root)
+        own = _table_stats_cols(root, head) if head >= 0 else []
+        extra = [c for c in stats_cols if c not in own]
+        if extra:
+            raise ValueError(
+                f"append: {extra} are not statistics columns of {root} "
+                f"(it indexes {own}; see init_table(stats_cols=...))"
+            )
     files = _write_data_files(df, root)
-    stats = (
-        _collect_file_stats(spark, files, stats_cols)
-        if stats_cols
-        else None
-    )
     while True:
         v = current_version(root) + 1
         try:
-            _commit(root, v, op, add=files, stats=stats)
+            _commit(root, v, op, add=files)
             return v
         except ConcurrentCommitError:
             continue
@@ -639,13 +725,10 @@ def append(
 
 #: per-process incremental scan state for committed_ops: root ->
 #: (table_id, last_scanned_version, op_of_that_version, frozenset(ops)).
-#: Each call only reads manifests committed since the last scan, so a
-#: long-running stream's per-batch idempotence check is O(new commits),
-#: not O(#versions) — cumulative cost linear, not quadratic. The
-#: table_id pins the entry to ONE table incarnation: a table removed
-#: and recreated at the same root gets a fresh uuid, so a same-numbered
-#: version carrying the same generic op tag (plain "append") can never
-#: validate a stale entry and silently skip a first-time batch.
+#: Each call only reads manifests committed since the last scan (O(new
+#: commits) per stream batch). The table_id pins the entry to ONE table
+#: incarnation, so a table recreated at the same root whose version
+#: carries the same op tag can never validate a stale entry.
 _OPS_CACHE: dict[str, tuple[str, int, str, frozenset]] = {}
 
 
@@ -665,16 +748,19 @@ def clone(root: str, dest: str, version: int | None = None) -> int:
     if current_version(dest) >= 0:
         raise FileExistsError(f"table already initialized at {dest}")
     v = current_version(root) if version is None else version
-    files = _resolve_files(root, v)
+    files, stats, dvs = _resolve(root, v)
     os.makedirs(_data_dir(dest), exist_ok=True)
     # deletion vectors are part of the snapshot's logical content —
-    # a clone that dropped them would resurrect MoR-deleted rows
+    # a clone that dropped them would resurrect MoR-deleted rows. The
+    # statistics property and the files' resolved stats carry over.
     _commit(
         dest,
         0,
         f"clone:{root}@{v}",
         add=files,
-        dv=_resolve_dv_files(root, v) or None,
+        stats=stats,
+        stats_cols=tuple(_table_stats_cols(root, v)),
+        dv=dvs or None,
     )
     return 0
 
@@ -778,11 +864,8 @@ def snapshot(
     accumulated deletion vectors (merge-on-read deletes; a no-op
     branch when the table has none)."""
     v = current_version(root) if version is None else version
-    return _apply_dvs(
-        spark,
-        spark.read.parquet(*_resolve_files(root, v)),
-        _resolve_dv_files(root, v),
-    )
+    files, _, dvs = _resolve(root, v)
+    return _apply_dvs(spark, spark.read.parquet(*files), dvs)
 
 
 def table_changes(
@@ -906,17 +989,9 @@ def _change_dir(root: str, version: int) -> str:
 
 
 def _write_change_files(df: DataFrame, root: str, version: int) -> list[str]:
-    """Persist change rows for `version` as immutable parquet under
-    _change_data/ (outside data/, so they are never part of any
-    snapshot) and return their paths. Never overwrites: each attempt
-    gets a fresh uuid dir."""
-    sub = _change_dir(root, version)
-    df.write.mode("error").parquet(sub)
-    return [
-        os.path.join(sub, f)
-        for f in os.listdir(sub)
-        if f.endswith(".parquet")
-    ]
+    """Persist change rows for `version` under _change_data/ (outside
+    data/, so they are never part of any snapshot)."""
+    return _write_parquet(df, _change_dir(root, version))
 
 
 class ChangeDataUnavailable(RuntimeError):
@@ -931,19 +1006,16 @@ def change_inventory(
 ) -> list[tuple[str, str | None, int]]:
     """Driver-side (metadata-only) plan of a CDF read over versions
     (v_from, v_to]: one (file, derived_change_type, version) task per
-    change file. Commits that only ADD files (init/append/ingest) need
-    no materialized change data — their added data files ARE the
-    insert rows, tagged at read time (Delta's exact optimization):
-    added rows genuinely appear, whatever the op name — so an
-    add-only restore reads as inserts too. ANY commit that removed
-    files (delete, merge, optimize, a typical restore) must have been
-    written with cdf=True, else ChangeDataUnavailable — never a
-    silently wrong feed. Layout-only commits (optimize /
-    optimize_zorder) record an EMPTY change set (cdc=[]): content-
-    identical rewrites have no row-level delta, so the feed skips
-    them instead of erroring — Delta's OPTIMIZE-emits-no-events rule. Cost: O(log entries) driver
-    metadata; every yielded task is an independent file scan — the
-    whole feed is embarrassingly parallel with NO read-time join."""
+    change file. Commits that only ADD files (init/append/ingest, an
+    add-only restore) need no materialized change data — their added
+    data files ARE the insert rows, tagged at read time (Delta's
+    exact optimization). ANY commit that removed files (delete, merge,
+    a typical restore) must have been written with cdf=True, else
+    ChangeDataUnavailable — never a silently wrong feed. Layout-only
+    commits (optimize / optimize_zorder) record an EMPTY change set
+    (cdc=[]), which the feed skips (Delta: OPTIMIZE emits no events).
+    Cost: O(log entries) driver metadata; every yielded task is an
+    independent file scan, with NO read-time join."""
     v_to = current_version(root) if v_to is None else v_to
     out: list[tuple[str, str | None, int]] = []
     for v in range(v_from + 1, v_to + 1):
@@ -1003,48 +1075,7 @@ def _dv_dir(root: str, version: int) -> str:
 
 
 def _write_dv_files(df: DataFrame, root: str, version: int) -> list[str]:
-    sub = _dv_dir(root, version)
-    df.write.mode("error").parquet(sub)
-    return [
-        os.path.join(sub, f)
-        for f in os.listdir(sub)
-        if f.endswith(".parquet")
-    ]
-
-
-def _resolve_dv_files(root: str, version: int) -> list[str]:
-    """Accumulated deletion-vector files visible at `version`: walk
-    back to the nearest checkpoint (its optional 'dvs' key carries the
-    union — which is also what keeps MoR deletes durable across
-    vacuum: the cutoff checkpoint is written before old manifests
-    drop), then union the 'dv' keys of the newer delta manifests.
-    Vectors are add-only; ones targeting since-removed files are
-    inert, not invalid (the anti-join simply never matches them)."""
-    dvs: set[str] = set()
-    deltas: list[dict] = []
-    v = version
-    while True:
-        if v < 0:
-            return sorted(dvs)
-        cp = _checkpoint_path(root, v)
-        if os.path.exists(cp):
-            with open(cp) as f:
-                dvs = set(json.load(f).get("dvs", []))
-            break
-        m = _read_raw(root, v)
-        deltas.append(m)
-        if "files" in m:  # legacy full manifest predates DV support
-            break
-        if "dv_reset" in m:  # replacement point: nothing older matters
-            break
-        if v == 0:
-            break
-        v -= 1
-    for m in reversed(deltas):  # oldest first: resets must apply in order
-        if "dv_reset" in m:
-            dvs = set(m["dv_reset"])
-        dvs.update(m.get("dv", ()))
-    return sorted(dvs)
+    return _write_parquet(df, _dv_dir(root, version))
 
 
 def _dv_row_count(dvs: list[str]) -> int:
@@ -1058,27 +1089,35 @@ def _dv_row_count(dvs: list[str]) -> int:
 DV_BROADCAST_MAX_ROWS = 5_000_000
 
 
-def _apply_dvs(spark: SparkSession, df: DataFrame, dvs: list[str]) -> DataFrame:
-    """Subtract deletion vectors from a RAW file scan (df must be the
-    scan itself so the _metadata pseudo-column binds): one anti-join
-    on (file, position). Vectors are bounded by deleted-not-yet-
-    compacted rows, so the delete side broadcasts below
-    DV_BROADCAST_MAX_ROWS (a production format would pack them as
-    roaring bitmaps; the parquet pair relation keeps the oracle
-    compare and the join shape identical)."""
-    if not dvs:
-        return df
-    dv = spark.read.parquet(*dvs).select("_dv_file", "_dv_pos")
-    if _dv_row_count(dvs) <= DV_BROADCAST_MAX_ROWS:
-        dv = F.broadcast(dv)
+def _live_positions(
+    spark: SparkSession, df: DataFrame, dvs: list[str]
+) -> DataFrame:
+    """A RAW file scan (df must be the scan itself so the _metadata
+    pseudo-column binds) with each row's (_dv_file, _dv_pos) position,
+    minus the rows deletion vectors `dvs` delete: one anti-join on
+    (file, position). Vectors are bounded by deleted-not-yet-compacted
+    rows, so the delete side broadcasts below DV_BROADCAST_MAX_ROWS (a
+    production format would pack them as roaring bitmaps; the parquet
+    pair relation keeps the oracle compare and the join shape
+    identical)."""
     stamped = df.select(
         F.col("_metadata.file_path").alias("_dv_file"),
         F.col("_metadata.row_index").alias("_dv_pos"),
         "*",
     )
-    return stamped.join(dv, ["_dv_file", "_dv_pos"], "left_anti").drop(
-        "_dv_file", "_dv_pos"
-    )
+    if not dvs:
+        return stamped
+    dv = spark.read.parquet(*dvs).select("_dv_file", "_dv_pos")
+    if _dv_row_count(dvs) <= DV_BROADCAST_MAX_ROWS:
+        dv = F.broadcast(dv)
+    return stamped.join(dv, ["_dv_file", "_dv_pos"], "left_anti")
+
+
+def _apply_dvs(spark: SparkSession, df: DataFrame, dvs: list[str]) -> DataFrame:
+    """Subtract deletion vectors from a RAW file scan."""
+    if not dvs:
+        return df
+    return _live_positions(spark, df, dvs).drop("_dv_file", "_dv_pos")
 
 
 def _live_dv_targets(root: str, version: int | None = None) -> set[str]:
@@ -1086,28 +1125,22 @@ def _live_dv_targets(root: str, version: int | None = None) -> set[str]:
     targets (plain paths). Metadata-cheap: one footer-column read per
     vector file."""
     v = current_version(root) if version is None else version
-    dvs = _resolve_dv_files(root, v)
+    files, _, dvs = _resolve(root, v)
     if not dvs:
         return set()
     import pyarrow.parquet as pq
 
-    # _manifest_form realpath-normalizes BOTH sides (same rule as
-    # vacuum's containment check): _metadata.file_path is always an
-    # absolute URI, but manifests store paths as the table root was
-    # given — a relative root would otherwise make the intersection
-    # empty, silently disabling the DeletionVectorsPending interlock
-    # and letting a CoW rewrite resurrect vector-hidden rows.
     targets: set[str] = set()
     for f in dvs:
         targets.update(
             str(p)
             for p in pq.read_table(f, columns=["_dv_file"]).column(0)
         )
-    # intersection mode: a vector targeting a since-removed file is
-    # inert on the read path, so it must not trip the DV-pending
-    # interlock either (ADVICE r10 — contract reconciled with the
-    # _resolve_dv_files docstring)
-    return _manifest_form(targets, _resolve_files(root, v), strict=False)
+    # _manifest_form realpath-normalizes BOTH sides, so a relative root
+    # cannot empty the intersection and disable the DV-pending
+    # interlock; intersection mode, because a vector targeting a
+    # since-removed file is inert on the read path too
+    return _manifest_form(targets, files, strict=False)
 
 
 def delete_where_mor(
@@ -1125,19 +1158,8 @@ def delete_where_mor(
     change data, so the CDF feed sees MoR deletes exactly like CoW
     ones. Returns the committed version."""
     base = current_version(root)
-    files = _resolve_files(root, base)
-    scan = spark.read.parquet(*files).select(
-        F.col("_metadata.file_path").alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
-        "*",
-    )
-    prior = _resolve_dv_files(root, base)
-    live = scan
-    if prior:
-        pr = spark.read.parquet(*prior).select("_dv_file", "_dv_pos")
-        if _dv_row_count(prior) <= DV_BROADCAST_MAX_ROWS:
-            pr = F.broadcast(pr)
-        live = scan.join(pr, ["_dv_file", "_dv_pos"], "left_anti")
+    files, _, prior = _resolve(root, base)
+    live = _live_positions(spark, spark.read.parquet(*files), prior)
     hits = live.filter(F.coalesce(cond, F.lit(False)))
     dv_files = _write_dv_files(
         hits.select("_dv_file", "_dv_pos"), root, base + 1
@@ -1158,6 +1180,51 @@ def delete_where_mor(
     return base + 1
 
 
+def _check_unique_keys(updates: DataFrame, key_cols: list[str], who: str):
+    """SQL MERGE (and Delta) error when multiple source rows match one
+    target key; appending duplicates verbatim would silently corrupt
+    key uniqueness — enforce the same contract here, with ONE
+    aggregate over `updates`. The keys are counted as a struct so a
+    NULL key part still counts as a key (count(DISTINCT a, b) would
+    skip the row)."""
+    n_updates, n_keys = updates.agg(
+        F.count(F.lit(1)), F.count_distinct(F.struct(*key_cols))
+    ).first()
+    if n_updates != n_keys:
+        raise ValueError(
+            f"{who}: updates contain {n_updates - n_keys} "
+            f"duplicate rows for {key_cols}; pre-deduplicate on the "
+            "merge key (one source row per target key, as SQL MERGE "
+            "requires)"
+        )
+
+
+def _merge_changes(
+    matched: DataFrame | None, updates: DataFrame, key_cols: list[str]
+) -> DataFrame:
+    """Write-time change rows of a MERGE in Delta's CDF vocabulary:
+    the `matched` old rows as update_preimage, the update rows that
+    replace them as update_postimage, the other update rows as insert
+    (all of them when nothing matched: `matched` is None)."""
+
+    def tag(df, change):
+        return df.withColumn("_change_type", F.lit(change))
+
+    if matched is None:
+        return tag(updates, "insert")
+    old_keys = matched.select(*key_cols).distinct()
+    return (
+        tag(matched, "update_preimage")
+        .unionByName(
+            tag(updates.join(old_keys, key_cols, "left_semi"),
+                "update_postimage")
+        )
+        .unionByName(
+            tag(updates.join(old_keys, key_cols, "left_anti"), "insert")
+        )
+    )
+
+
 def merge_upsert_mor(
     spark: SparkSession,
     root: str,
@@ -1176,48 +1243,24 @@ def merge_upsert_mor(
     / insert change rows so the CDF feed sees the merge exactly like
     the CoW path's. Returns the committed version."""
     base = current_version(root)
-    files = _resolve_files(root, base)
+    files, _, prior = _resolve(root, base)
+    _check_unique_keys(updates, key_cols, "merge_upsert_mor")
     keys = updates.select(*key_cols).distinct()
-    n_updates, n_keys = updates.count(), keys.count()
-    if n_updates != n_keys:
-        raise ValueError(
-            f"merge_upsert_mor: updates contain {n_updates - n_keys} "
-            f"duplicate rows for {key_cols}; pre-deduplicate on the "
-            "merge key (one source row per target key, as SQL MERGE "
-            "requires)"
-        )
-    scan = spark.read.parquet(*files).select(
-        F.col("_metadata.file_path").alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
-        "*",
-    )
-    prior = _resolve_dv_files(root, base)
-    live = scan
-    if prior:
-        pr = spark.read.parquet(*prior).select("_dv_file", "_dv_pos")
-        if _dv_row_count(prior) <= DV_BROADCAST_MAX_ROWS:
-            pr = F.broadcast(pr)
-        live = scan.join(pr, ["_dv_file", "_dv_pos"], "left_anti")
+    live = _live_positions(spark, spark.read.parquet(*files), prior)
     # matched old rows: still-live rows whose key is in the update set
     matched = live.join(F.broadcast(keys), key_cols, "left_semi")
     dv_files = _write_dv_files(
         matched.select("_dv_file", "_dv_pos"), root, base + 1
     )
     new_files = _write_data_files(updates, root)
-    change_files: list[str] = []
+    change_files = None
     if cdf:
-        old_keys = matched.select(*key_cols).distinct()
-        pre = matched.drop("_dv_file", "_dv_pos").withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = updates.join(old_keys, key_cols, "left_semi").withColumn(
-            "_change_type", F.lit("update_postimage")
-        )
-        ins = updates.join(old_keys, key_cols, "left_anti").withColumn(
-            "_change_type", F.lit("insert")
-        )
         change_files = _write_change_files(
-            pre.unionByName(post).unionByName(ins), root, base + 1
+            _merge_changes(
+                matched.drop("_dv_file", "_dv_pos"), updates, key_cols
+            ),
+            root,
+            base + 1,
         )
     _commit(
         root,
@@ -1225,7 +1268,7 @@ def merge_upsert_mor(
         "merge-mor",
         add=new_files,
         dv=dv_files,
-        cdc=change_files if cdf else None,
+        cdc=change_files,
     )
     return base + 1
 
@@ -1264,6 +1307,25 @@ def table_history(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
+def _cow_base(root: str, what: str) -> tuple[int, list[str]]:
+    """(head version, its data files) for a copy-on-write rewrite,
+    refused while live deletion vectors target those files: the raw
+    rewrite would resurrect the rows they hide."""
+    base = current_version(root)
+    if _live_dv_targets(root, base):
+        raise DeletionVectorsPending(
+            f"copy-on-write {what} on a table with live deletion "
+            "vectors; run optimize() first to materialize them"
+        )
+    return base, _resolve_files(root, base)
+
+
+def _source_files(uris: DataFrame, files: list[str]) -> set[str]:
+    """Manifest paths of the files named by the one-column relation
+    `uris` of input_file_name() values."""
+    return _manifest_form((r[0] for r in uris.distinct().collect()), files)
+
+
 def delete_where(spark: SparkSession, root: str, cond, cdf: bool = False) -> int:
     """ACID DELETE via file-level copy-on-write: only files that
     contain at least one matching row are rewritten (without their
@@ -1276,25 +1338,12 @@ def delete_where(spark: SparkSession, root: str, cond, cdf: bool = False) -> int
     SAME affected files the rewrite already reads (one extra filtered
     pass over O(touched files), never the table), and downstream CDF
     reads become pure parallel file scans with no join at all."""
-    base = current_version(root)
-    if _live_dv_targets(root, base):
-        raise DeletionVectorsPending(
-            "copy-on-write DELETE on a table with live deletion "
-            "vectors; run optimize() first to materialize them"
-        )
-    files = _resolve_files(root, base)
-    snap = spark.read.parquet(*files)
+    base, files = _cow_base(root, "DELETE")
     # one filtered scan finds the affected files; the predicate pushes
     # into the parquet scan, so unaffected files are mostly skipped by
     # row-group stats before they are even read
-    affected = _manifest_form(
-        (
-            r["f"]
-            for r in snap.filter(cond)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        ),
+    affected = _source_files(
+        spark.read.parquet(*files).filter(cond).select(F.input_file_name()),
         files,
     )
     new_files: list[str] = []
@@ -1376,28 +1425,37 @@ def vacuum(
         cutoff = max(latest - keep_versions + 1, 0)
         # single forward replay from the earliest surviving version (a
         # prior vacuum left it checkpointed): accumulate the union of
-        # files referenced by dropped versions vs kept versions —
-        # O(total delta entries), never versions x files
+        # files referenced by dropped versions vs kept versions, and
+        # the change-data and deletion-vector files the kept versions
+        # reference (same transitions as _resolve) — O(total delta
+        # entries), never versions x files
         first_v = _earliest_version(root)
-        files = set(_resolve_files(root, first_v))
+        files, _, dvs = _resolve(root, first_v)
+        files, dvs = set(files), set(dvs)
         dropped: set[str] = set()
         live: set[str] = set()
+        live_aux: set[str] = set()
         dropped_ops: set[str] = set()
         for v in range(first_v, latest + 1):
+            m = _read_raw(root, v)
             if v > first_v:
-                m = _read_raw(root, v)
-                if "files" in m:  # legacy full manifest
-                    files = set(m["files"])
+                if "files" in m:  # legacy full manifest, pre-DV
+                    files, dvs = set(m["files"]), set()
                 else:
                     files.difference_update(m["remove"])
                     files.update(m["add"])
+                if "dv_reset" in m:
+                    dvs = set(m["dv_reset"])
+                dvs.update(m.get("dv", ()))
             if v < cutoff:
                 dropped |= files
                 # this manifest is about to be unlinked: preserve its
                 # op tag so exactly-once dedup history survives
-                dropped_ops.add(_read_raw(root, v)["op"])
+                dropped_ops.add(m["op"])
             else:
                 live |= files
+                live_aux |= dvs
+                live_aux.update(m.get("cdc") or ())
         # durably record the cutoff BEFORE the head re-check (guard
         # (b)): a restore() racing this pass either commits before the
         # re-check — the head moved, we rescan — or commits after it,
@@ -1503,26 +1561,6 @@ def vacuum(
     # racing this vacuum (the winner's manifest lands after our scan).
     # Always under this table's own root, so no containment question
     # arises.
-    live_aux: set[str] = set()
-    # One backward resolution at the cutoff, then a SINGLE forward
-    # replay across cutoff..latest maintaining the running DV set
-    # (dv_reset truncates, dv appends — the same transition
-    # _resolve_dv_files applies), unioning each version's resolved
-    # set. Per-version _resolve_dv_files calls here were
-    # O(kept_versions * log length) driver-side JSON reads (ADVICE
-    # r9); this is O(log length), matching the data-file loop above.
-    dvs_running = set(_resolve_dv_files(root, cutoff))
-    live_aux.update(dvs_running)
-    live_aux.update(_read_raw(root, cutoff).get("cdc") or ())
-    for v in range(cutoff + 1, latest + 1):
-        m = _read_raw(root, v)
-        live_aux.update(m.get("cdc") or ())
-        if "files" in m:  # legacy full manifest predates DV support
-            dvs_running = set()
-        if "dv_reset" in m:
-            dvs_running = set(m["dv_reset"])
-        dvs_running.update(m.get("dv", ()))
-        live_aux.update(dvs_running)
     live_aux = {os.path.realpath(p) for p in live_aux}
     for aux_name in ("_change_data", "_deletes"):
         adir = os.path.join(root, aux_name)
@@ -1577,64 +1615,31 @@ def merge_upsert(
     merge already computes (affected-file rows + the updates), so the
     extra cost is O(touched files + updates); CDF reads then never
     join at all."""
-    base = current_version(root)
-    if _live_dv_targets(root, base):
-        raise DeletionVectorsPending(
-            "copy-on-write MERGE on a table with live deletion "
-            "vectors; run optimize() first to materialize them"
-        )
-    base_files = _resolve_files(root, base)
-    snap = spark.read.parquet(*base_files)
+    base, base_files = _cow_base(root, "MERGE")
+    _check_unique_keys(updates, key_cols, "merge_upsert")
     keys = updates.select(*key_cols).distinct()
-    # SQL MERGE (and Delta) error when multiple source rows match one
-    # target key; appending duplicates verbatim would silently corrupt
-    # key uniqueness — enforce the same contract here
-    n_updates, n_keys = updates.count(), keys.count()
-    if n_updates != n_keys:
-        raise ValueError(
-            f"merge_upsert: updates contain {n_updates - n_keys} "
-            f"duplicate rows for {key_cols}; pre-deduplicate on the "
-            "merge key (one source row per target key, as SQL MERGE "
-            "requires)"
-        )
     # input_file_name() must bind while the plan has ONE source — stamp
     # it on the snapshot scan BEFORE joining the update keys
-    stamped = snap.withColumn("__f", F.input_file_name())
-    affected = _manifest_form(
-        (
-            r["__f"]
-            for r in stamped.join(keys, key_cols, "left_semi")
-            .select("__f")
-            .distinct()
-            .collect()
-        ),
-        base_files,
+    stamped = spark.read.parquet(*base_files).withColumn(
+        "__f", F.input_file_name()
+    )
+    affected = _source_files(
+        stamped.join(keys, key_cols, "left_semi").select("__f"), base_files
     )
     new_files: list[str] = []
+    matched = None
     if affected:
         old_rows = spark.read.parquet(*sorted(affected))
         survivors = old_rows.join(keys, key_cols, "left_anti")
         new_files += _write_data_files(survivors, root)
+        matched = old_rows.join(keys, key_cols, "left_semi")
     # matched updates replace their old rows; unmatched updates insert
     new_files += _write_data_files(updates, root)
-    change_files: list[str] = []
+    change_files = None
     if cdf:
-        if affected:
-            old_rows = spark.read.parquet(*sorted(affected))
-            old_keys = old_rows.select(*key_cols).distinct()
-            pre = old_rows.join(keys, key_cols, "left_semi").withColumn(
-                "_change_type", F.lit("update_preimage")
-            )
-            post = updates.join(
-                old_keys, key_cols, "left_semi"
-            ).withColumn("_change_type", F.lit("update_postimage"))
-            ins = updates.join(
-                old_keys, key_cols, "left_anti"
-            ).withColumn("_change_type", F.lit("insert"))
-            changes = pre.unionByName(post).unionByName(ins)
-        else:
-            changes = updates.withColumn("_change_type", F.lit("insert"))
-        change_files = _write_change_files(changes, root, base + 1)
+        change_files = _write_change_files(
+            _merge_changes(matched, updates, key_cols), root, base + 1
+        )
     # delta commit: O(touched files + updates) metadata, not O(table)
     _commit(
         root,
@@ -1642,7 +1647,7 @@ def merge_upsert(
         "merge",
         add=new_files,
         remove=sorted(affected),
-        cdc=change_files if cdf else None,
+        cdc=change_files,
     )
     return base + 1
 
@@ -1655,19 +1660,24 @@ def optimize(
     layout-only (the lakehouse maintenance command; Delta OPTIMIZE /
     Iceberg rewrite_data_files). Because it commits through the same
     manifest protocol, readers of older versions are untouched and a
-    concurrent writer conflict is detected, not silently lost. Returns
-    the committed version."""
+    concurrent writer conflict is detected, not silently lost. A table
+    with statistics columns is range-clustered on the first of them,
+    so the compacted files keep narrow min/max ranges and
+    snapshot_pruned keeps skipping them; otherwise rows spread round-
+    robin. Returns the committed version."""
     base = current_version(root)
-    old_files = _resolve_files(root, base)
+    old_files, _, dvs = _resolve(root, base)
     # DV-aware read: compaction MATERIALIZES merge-on-read deletes —
     # vector-hidden rows never enter the compacted files, after which
     # the old vectors target only removed files and are inert
-    snap = _apply_dvs(
-        spark,
-        spark.read.parquet(*old_files),
-        _resolve_dv_files(root, base),
+    snap = _apply_dvs(spark, spark.read.parquet(*old_files), dvs)
+    cluster = _table_stats_cols(root, base)[:1]
+    snap = (
+        snap.repartitionByRange(target_files, *cluster)
+        if cluster
+        else snap.repartition(target_files)
     )
-    files = _write_data_files(snap.repartition(target_files), root)
+    files = _write_data_files(snap, root)
     # layout-only: content-identical rewrites have no row-level delta,
     # so the commit records an EMPTY change set (cdc=[]) — a CDF feed
     # skips it instead of erroring (Delta: OPTIMIZE emits no events)
@@ -1681,7 +1691,7 @@ def optimize(
         # every old file is gone, so every vector is inert: empty the
         # set so readers skip the anti-join branch entirely (recorded
         # only when there was anything to empty)
-        dv_reset=[] if _resolve_dv_files(root, base) else None,
+        dv_reset=[] if dvs else None,
     )
     return base + 1
 
@@ -1736,14 +1746,10 @@ def optimize_zorder(
     partitions, and the rewrite commits as remove(old)+add(new).
     Returns the committed version."""
     base = current_version(root)
-    old_files = _resolve_files(root, base)
+    old_files, _, dvs = _resolve(root, base)
     # DV-aware, like optimize: clustering must not resurrect
     # vector-hidden rows
-    snap = _apply_dvs(
-        spark,
-        spark.read.parquet(*old_files),
-        _resolve_dv_files(root, base),
-    )
+    snap = _apply_dvs(spark, spark.read.parquet(*old_files), dvs)
     aggs = []
     for c in cols:
         aggs.append(F.min(c).cast("long").alias(f"_mn_{c}"))
@@ -1768,16 +1774,15 @@ def optimize_zorder(
         .drop("_z", *helper)
     )
     files = _write_data_files(clustered, root)
-    stats = _collect_file_stats(spark, files, tuple(cols))
     _commit(
         root,
         base + 1,
         "optimize-zorder",
         add=files,
         remove=old_files,
-        stats=stats,
+        stats_cols=tuple(cols),
         cdc=[],  # layout-only, like optimize: no row-level delta
-        dv_reset=[] if _resolve_dv_files(root, base) else None,
+        dv_reset=[] if dvs else None,
     )
     return base + 1
 
@@ -1819,20 +1824,21 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
             f"{cut}; its data files may have been physically removed"
         )
     head = current_version(root)
-    cur = set(_resolve_files(root, head))
-    tgt = set(_resolve_files(root, version))
+    cur, _, cur_dvs = _resolve(root, head)
+    tgt, tgt_stats, tgt_dvs = _resolve(root, version)
+    add = sorted(set(tgt) - set(cur))
     # the deletion-vector set rewinds WITH the file set: vectors
     # committed after the target would otherwise keep hiding rows the
     # restored snapshot must show. Recorded only when it actually
-    # changes, so DV-free restores stay file-diffable.
-    cur_dvs = _resolve_dv_files(root, head)
-    tgt_dvs = _resolve_dv_files(root, version)
+    # changes, so DV-free restores stay file-diffable. Re-added files
+    # bring back their stats (blooms included).
     _commit(
         root,
         head + 1,
         f"restore-v{version}",
-        add=sorted(tgt - cur),
-        remove=sorted(cur - tgt),
+        add=add,
+        remove=sorted(set(cur) - set(tgt)),
+        stats={f: tgt_stats[f] for f in add if f in tgt_stats},
         dv_reset=tgt_dvs if tgt_dvs != cur_dvs else None,
     )
     return head + 1
@@ -1844,12 +1850,9 @@ def snapshot_merged(
     """snapshot() with schema merging across the version's files —
     needed once add_columns has widened the table."""
     v = current_version(root) if version is None else version
+    files, _, dvs = _resolve(root, v)
     return _apply_dvs(
-        spark,
-        spark.read.option("mergeSchema", "true").parquet(
-            *_resolve_files(root, v)
-        ),
-        _resolve_dv_files(root, v),
+        spark, spark.read.option("mergeSchema", "true").parquet(*files), dvs
     )
 
 
@@ -1880,7 +1883,7 @@ def collect_file_blooms(
     k: int = BLOOM_K,
 ) -> dict:
     """Per-file BLOOM FILTER of `cols` over just-written files — the
-    point-lookup complement of _collect_file_stats' min/max: on an
+    point-lookup complement of the footer min/max stats: on an
     UNCLUSTERED layout every file's [min, max] spans the whole domain
     and range stats skip nothing, but a per-file bloom still answers
     'is key X definitely absent from this file'. ONE distributed
@@ -1917,7 +1920,9 @@ def collect_file_blooms(
         )
         by_real = {os.path.realpath(f): f for f in files}
         for r in words:
-            # same manifest-form keying as _collect_file_stats
+            # stats dict keys must be the manifest's OWN path strings
+            # (relative under a relative root), else the probe never
+            # matches
             path = by_real.get(
                 os.path.realpath(_strip_uri(r["_f"])), _strip_uri(r["_f"])
             )
@@ -1946,8 +1951,7 @@ def snapshot_bloom_lookup(
     never a Python re-implementation of the hash). Returns
     (DataFrame, n_files_read, n_files_total)."""
     v = current_version(root) if version is None else version
-    files = _resolve_files(root, v)
-    stats = _resolve_stats(root, v)
+    files, stats, dvs = _resolve(root, v)
     key = f"bloom:{col}"
     configs = {
         (e["b"], e["k"])
@@ -1981,12 +1985,4 @@ def snapshot_bloom_lookup(
         )
         if hit:
             kept.append(f)
-    dvs = _resolve_dv_files(root, v)
-    df = (
-        _apply_dvs(spark, spark.read.parquet(*kept), dvs).filter(
-            F.col(col) == value
-        )
-        if kept
-        else spark.read.parquet(*files).filter(F.lit(False))
-    )
-    return df, len(kept), len(files)
+    return _read_kept(spark, kept, files, dvs, F.col(col) == value)

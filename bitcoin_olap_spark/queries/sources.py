@@ -1910,9 +1910,9 @@ def snk_acid_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snk_acid_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DATA SKIPPING on the versioned ACID table: per-file column
-    min/max collected at WRITE time (one aggregate over the batch,
-    the Delta/Iceberg write-side stats pass) land in the manifest;
-    a range read then opens only files whose [min, max] can
+    min/max recorded at COMMIT time (read from the parquet footers
+    Spark just wrote, for the table's stats_cols) land in the
+    manifest; a range read then opens only files whose [min, max] can
     intersect the predicate (operators/acidtable.snapshot_pruned) —
     partition pruning's sibling that needs no partitioning, just
     range-clustered layout. The fixture is range-partitioned on

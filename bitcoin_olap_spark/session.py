@@ -59,6 +59,10 @@ RUNTIME_CONF = {
     # reader rejects; read as long and convert in catalog.table (DuckDB
     # likewise truncates ns -> us on CAST to TIMESTAMP)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Spark's default INT96 timestamps carry no parquet footer min/max,
+    # so ACID tables (operators/acidtable) could never skip a file on a
+    # TIMESTAMP column; INT64 micros keep the footer statistics
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # our streaming queries are one-shot availableNow runs: the
     # periodic state-store maintenance task (default 60s) only burns
     # CPU snapshotting already-finished stores — measured as periodic

@@ -1310,8 +1310,9 @@ def test_dfcap_is_relational_no_driver_hot_set(spark):
 def test_acid_data_skipping_prunes_files(spark, tmp_path):
     """snapshot_pruned must (a) return exactly the rows the full-scan
     filter returns, (b) actually SKIP files on range-clustered layout
-    (files_read < files_total), (c) never skip a file without stats
-    (append without stats_cols stays visible to every range read)."""
+    (files_read < files_total), (c) read an appended file whose range
+    meets the probe (the append names no stats_cols, yet its footer
+    stats are recorded because they are a table property)."""
     from pyspark.sql import functions as F
 
     from bitcoin_olap_spark.operators import acidtable as AT
@@ -1923,6 +1924,216 @@ def test_acid_stats_mixed_width_probes_never_falsely_prune(spark, tmp_path):
     )
     assert n_read == 1, (n_read, n_total)
     assert sorted(r["id"] for r in pruned.collect()) == [200, 201]
+
+
+def test_acid_footer_stats_match_spark_aggregate(spark, tmp_path):
+    """Per-file stats come from the parquet footers Spark wrote, and
+    must encode exactly as the Spark min/max aggregate of the same
+    file would: TIMESTAMP (INT64 micros), TIMESTAMP_NTZ, DATE, INT64
+    and FIXED_LEN_BYTE_ARRAY decimals, UTF-8 strings and binary. An
+    all-NULL file reports no stats and is never skipped; footer stats
+    merge across row groups, skipping all-NULL ones."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    cols = ("ts", "tn", "d", "dec", "big", "s", "b")
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows,
+        "id long, ts timestamp, tn timestamp_ntz, d date, "
+        "dec decimal(10,2), big decimal(38,6), s string, b binary",
+    ).coalesce(1)
+    D = decimal.Decimal
+    jan = mk([
+        (0, datetime.datetime(2024, 1, 10, 5, 6, 7, 123),
+         datetime.datetime(2024, 1, 3, 0, 0, 0, 1), datetime.date(2024, 1, 3),
+         D("-1.25"), D("-123.456789"), "abc", bytearray(b"\x00\xff")),
+        (1, datetime.datetime(2024, 1, 20), datetime.datetime(2024, 1, 9),
+         datetime.date(2024, 1, 9), D("9.50"), D("0.000001"), "h\u00e9llo",
+         bytearray(b"\x01")),
+    ])
+    mar = mk([
+        (2, datetime.datetime(2024, 3, 10), datetime.datetime(2024, 3, 1),
+         datetime.date(2024, 3, 1), D("100.00"),
+         D("99999999999999999999999999999999.123456"), "zebra",
+         bytearray(b"\xf0\x00")),
+        (3, datetime.datetime(2024, 3, 11, 23, 59, 59, 999999),
+         datetime.datetime(2024, 3, 2), datetime.date(2024, 3, 2),
+         D("12345678.99"), D("5.5"), "zz", bytearray(b"\xff")),
+    ])
+    nulls = mk([(4, None, None, None, None, None, None, None)])
+    root = str(tmp_path / "tbl")
+    AT.init_table(spark, root, jan, stats_cols=cols)
+    AT.append(spark, root, mar)
+    AT.append(spark, root, nulls)
+
+    files, stats, _ = AT._resolve(root, AT.current_version(root))
+    want = {}
+    for r in (
+        AT.snapshot(spark, root)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(*[g(c).alias(f"{g.__name__}_{c}") for c in cols
+               for g in (F.min, F.max)])
+        .collect()
+    ):
+        (f,) = AT._manifest_form([r["f"]], files)
+        want[f] = {
+            c: [AT._stat_encode(r[f"min_{c}"]), AT._stat_encode(r[f"max_{c}"])]
+            for c in cols
+            if r[f"min_{c}"] is not None
+        }
+    assert len(want) == 3
+    for f in files:
+        assert stats.get(f, {}) == want[f], f
+    assert sum(1 for f in files if not stats.get(f)) == 1  # the NULL file
+
+    # each column's January range reads January and the NULL file only
+    first = jan.agg(*[g(c).alias(f"{g.__name__}_{c}") for c in cols
+                      for g in (F.min, F.max)]).first()
+    for c in cols:
+        pruned, n_read, n_total = AT.snapshot_pruned(
+            spark, root, c, first[f"min_{c}"], first[f"max_{c}"]
+        )
+        assert (n_read, n_total) == (2, 3), c
+        assert sorted(r["id"] for r in pruned.collect()) == [0, 1], c
+
+    # row groups merge; an all-NULL row group contributes nothing
+    p = str(tmp_path / "groups.parquet")
+    pq.write_table(
+        pa.table({"x": pa.array([5, 3, None, None, 9, 7], pa.int64()),
+                  "s": ["m", "c", None, None, "z", "q"]}),
+        p, row_group_size=2,
+    )
+    assert pq.read_metadata(p).num_row_groups == 3
+    assert AT._footer_stats(p, ("x", "s")) == {"x": [3, 9], "s": ["c", "z"]}
+
+
+def test_acid_stats_survive_vacuum(spark, tmp_path):
+    """vacuum(keep_versions=1) unlinks the manifests that carried the
+    base files' stats; the cutoff checkpoint must carry the merged
+    stats, or snapshot_pruned reads every file of a vacuumed table.
+    A commit based on a vacuumed version is a lost race."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    root = str(tmp_path / "tbl")
+    df = spark.range(0, 8000).select(
+        F.col("id"), (F.col("id") % 5).alias("grp")
+    ).repartitionByRange(8, "id")
+    AT.init_table(spark, root, df, stats_cols=("id",))
+    for lo in (8000, 9000):
+        AT.append(spark, root, spark.range(lo, lo + 1000).select(
+            F.col("id"), F.lit(1).cast("long").alias("grp")).coalesce(1))
+    _, n_read, n_total = AT.snapshot_pruned(spark, root, "id", 2000, 2999)
+    assert n_read < n_total
+
+    AT.vacuum(root, keep_versions=1)
+    assert not os.path.exists(AT._manifest_path(root, 0))
+    pruned, n_read2, n_total2 = AT.snapshot_pruned(
+        spark, root, "id", 2000, 2999
+    )
+    assert (n_read2, n_total2) == (n_read, n_total)
+    assert pruned.count() == 1000
+    # a writer that read the head before the vacuum reads the table's
+    # stats_cols from a manifest vacuum dropped: that is a lost race,
+    # which append retries, not a FileNotFoundError
+    with pytest.raises(AT.ConcurrentCommitError):
+        AT._commit(root, 2, "late-writer")
+
+
+def test_acid_pruning_survives_merge_delete_optimize(spark, tmp_path):
+    """Every writer records footer stats for the table's stats_cols:
+    after merge_upsert, delete_where and optimize, every live file has
+    stats and snapshot_pruned still skips files, returning exactly the
+    rows of the full-scan filter."""
+    from pyspark.sql import functions as F
+
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    root = str(tmp_path / "tbl")
+    df = spark.range(0, 8000).select(
+        F.col("id"), (F.col("id") % 5).alias("grp")
+    ).repartitionByRange(8, "id")
+    AT.init_table(spark, root, df, stats_cols=("id",))
+
+    def check(lo, hi):
+        v = AT.current_version(root)
+        files, stats, _ = AT._resolve(root, v)
+        assert all("id" in stats.get(f, {}) for f in files)
+        pruned, n_read, n_total = AT.snapshot_pruned(spark, root, "id", lo, hi)
+        assert n_read < n_total, (AT._read_raw(root, v)["op"], n_read)
+        full = AT.snapshot(spark, root).filter(F.col("id").between(lo, hi))
+        assert sorted(pruned.collect()) == sorted(full.collect())
+
+    AT.merge_upsert(spark, root, spark.range(100, 200).select(
+        F.col("id"), F.lit(7).cast("long").alias("grp")), ["id"])
+    check(100, 199)
+    AT.delete_where(spark, root, F.col("id").between(3000, 3099))
+    check(2900, 3199)
+    AT.optimize(spark, root, target_files=4)
+    check(5000, 5999)
+
+
+def test_acid_append_stats_cols_is_a_table_property(spark, tmp_path):
+    """stats_cols belongs to the table: an append that names the
+    table's own columns (or a subset) records the same stats as one
+    that names none, and naming a column the table does not index
+    raises ValueError before anything is written. The footer stats
+    start no Spark job: an append to an indexed table starts no more
+    jobs than an append to a plain one (counted by job group)."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    def batch(lo):
+        return spark.range(lo, lo + 500).select(
+            F.col("id"), (F.col("id") * 2).alias("v")
+        ).coalesce(1)
+
+    indexed, plain = str(tmp_path / "indexed"), str(tmp_path / "plain")
+    AT.init_table(spark, indexed, batch(0), stats_cols=("id", "v"))
+    AT.init_table(spark, plain, batch(0))
+
+    sc = spark.sparkContext
+
+    def jobs(root, **kw):
+        group = f"append-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "append")
+        try:
+            AT.append(spark, root, batch(1000), **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_plain = jobs(plain)
+    assert n_plain >= 1
+    assert jobs(indexed, stats_cols=("id",)) <= n_plain
+    assert jobs(indexed) <= n_plain
+
+    v = AT.current_version(indexed)
+    a = AT._read_raw(indexed, v - 1)
+    b = AT._read_raw(indexed, v)
+    assert a["stats_cols"] == b["stats_cols"] == ["id", "v"]
+    assert a["stats"][a["add"][0]] == b["stats"][b["add"][0]] == {
+        "id": [1000, 1499], "v": [2000, 2998]
+    }
+    with pytest.raises(ValueError, match="grp"):
+        AT.append(spark, indexed, batch(0), stats_cols=("id", "grp"))
+    assert AT.current_version(indexed) == v
+    with pytest.raises(ValueError, match="grp"):
+        AT.init_table(
+            spark, str(tmp_path / "bad"), batch(0), stats_cols=("grp",)
+        )
 
 
 def test_acid_vacuum_via_symlinked_root_reclaims_dead_files(spark, tmp_path):
