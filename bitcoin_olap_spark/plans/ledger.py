@@ -12,10 +12,14 @@ boundary per stage):
    satoshi→BTC, pre/post split on the SAFE date — btcolap.sql:316-408
 6. `*_walletlocation` = ⋈ wallet_location dim   — btcolap.sql:412-451
 
-Here the six stages are plain DataFrame compositions over ONE
-SparkSession: Catalyst sees the full DAG (column pruning through every
-stage, predicate pushdown into the scans, broadcast for both dims) and
-nothing is materialized until the caller acts. The reference's
+Here the stages are plain DataFrame compositions over ONE SparkSession:
+Catalyst sees the full DAG (column pruning through every stage,
+predicate pushdown into the scans) and nothing is materialized until
+the caller acts. Stages 2-4 need no plan of their own: the address
+join of stage 6 keeps exactly the flow rows whose own address is
+tracked, so their txids are in `txid_sum` by construction (proof in
+`ledger_pipeline`), and the plan is one scan -> explode -> join chain.
+The DuckDB oracle keeps the full 6-stage chain. The reference's
 pre/post-SAFE *table split* becomes a `period` column — at scale the
 ledger write is `partitionBy(day)`, so period/date predicates prune
 partitions instead of needing two tables (SURVEY.md §4).
@@ -30,7 +34,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..catalog import table
 
@@ -117,133 +120,69 @@ def bitcoin_fixtures(
     return tx, addr_raw, wloc
 
 
-def _explode_side(tx: DataFrame, side: str) -> DataFrame:
-    """Two-level lateral unnest of one side (btcolap.sql:109-111 shape):
-    (hash, block_timestamp, sat_value, addr)."""
+def dedup_addresses(addr_raw: DataFrame) -> DataFrame:
+    """Stage 1 (btcolap.sql:1-15): one row per (wallet, address). The
+    reference keeps `row_number() = 1` over the full key; rows in a
+    dup group are identical, so a distinct is the same set, and it
+    plans as a partial (map-side) hash aggregate instead of a sort."""
+    return addr_raw.dropDuplicates(["wallet", "address"])
+
+
+def _signed_flows(tx: DataFrame, side: str) -> DataFrame:
+    """Two-level lateral unnest of one side (btcolap.sql:109-111 shape)
+    to flow rows (block_timestamp, txid, type, addr, sat); inputs are
+    negative (btcolap.sql:331), outputs positive (:346)."""
+    value = F.col("txo.value")
     return (
         tx.select(
-            "hash",
             "block_timestamp",
+            F.col("hash").alias("txid"),
             F.explode(side).alias("txo"),
         )
         .select(
-            "hash",
             "block_timestamp",
-            F.col("txo.value").alias("sat_value"),
+            "txid",
+            F.lit(side[:-1]).alias("type"),  # "input" / "output"
             F.explode("txo.addresses").alias("addr"),
+            (-value if side == "inputs" else value).alias("sat"),
         )
     )
 
 
 def ledger_pipeline(
-    tx: DataFrame,
-    addr_raw: DataFrame,
-    wloc: DataFrame,
-    broadcast_max_rows: int = 20_000_000,
+    tx: DataFrame, addr_raw: DataFrame, wloc: DataFrame
 ) -> DataFrame:
-    """Stages 1-6 as one (near-)lazy DAG. Returns the located ledger:
+    """Stages 1-6 as one lazy DAG; no Spark job runs until the caller
+    acts. Returns the located ledger:
     (block_timestamp, txid, type, addr, sat, wallet, location, period).
+
+    Stages 2-4 (txid discovery) are subsumed by the address join of
+    stage 6: a hash enters `txid_sum` iff one of its exploded rows has
+    `addr = address`, and the address join keeps a flow row only when
+    that row itself satisfies the same predicate — so every kept row's
+    txid is already in `txid_sum`, and the semi join of stage 5 never
+    removes a kept row nor changes multiplicity. Catalyst cannot infer
+    this, so the chain is written as scan -> explode -> join. The
+    DuckDB oracle (`queries.pipeline._E2E_ORACLE`) keeps the full
+    6-stage chain, so every parity run re-checks the equivalence.
 
     Scale shape: `wallet_location` (121 rows in the reference,
     wallet_location2.ndjson) is a genuinely bounded dimension and is
-    always broadcast. `addr` (exchange wallet→address mapping) and
-    `txid_sum` (every tx touching a known exchange address) are NOT
-    bounded — on real Bitcoin data the reference materializes txid_sum
-    as a fact table (btcolap.sql:271-313, hundreds of millions of
-    rows), and exchange address tables reach tens of millions. Forcing
-    a broadcast on either is an executor OOM at 100× scale, so:
-
-    - `addr` is cached (three joins read it) and counted ONCE — the
-      pagerank `broadcast_max_nodes` gate pattern; at or below
-      `broadcast_max_rows` it broadcasts, above it the hint is dropped
-      and the joins shuffle (AQE skew-handling applies).
-    - `txid_sum` carries NO hint at all: it is fact-derived, its
-      cardinality is unknowable before execution, and counting it
-      would eagerly run the whole discovery subplan. AQE picks the
-      strategy from the MEASURED shuffle size at runtime — broadcast
-      when it turns out small, plain shuffle semi join when not.
-
-    The only other shuffles are the UNION-DISTINCT / dedup hash
-    aggregates and the final rollup."""
-    # 1. dedup (btcolap.sql:1-15): row_number over the full key; ORDER BY
-    #    the key itself is the reference's (degenerate) choice — rows in
-    #    a dup group are identical so survivor choice is well-defined.
-    w = Window.partitionBy("wallet", "address").orderBy("wallet", "address")
-    addr = (
-        addr_raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    ).cache()
-    # one tiny action decides the join strategy (pagerank gate pattern);
-    # the count also populates the cache all three addr joins read
-    addr_side = (
-        F.broadcast(addr) if addr.count() <= broadcast_max_rows else addr
+    always broadcast. `addr` (exchange wallet->address mapping) is not
+    bounded — exchange address tables reach tens of millions of rows —
+    so it carries no hint: the static planner broadcasts it while its
+    estimate is under `spark.sql.autoBroadcastJoinThreshold`, and above
+    that AQE picks broadcast or shuffle from the measured size
+    (`spark.sql.adaptive.autoBroadcastJoinThreshold`)."""
+    addr = dedup_addresses(addr_raw)
+    # 5. signed flows (btcolap.sql:316-408)
+    flows = _signed_flows(tx, "inputs").unionByName(
+        _signed_flows(tx, "outputs")
     )
-
-    ins = _explode_side(tx, "inputs")
-    outs = _explode_side(tx, "outputs")
-
-    # 2+3. explode-then-join txid discovery (btcolap.sql:35-59, :62-85)
-    #    as PER-SIDE DISTINCTs + union DISTINCT (three hash-keyed
-    #    exchanges). r11 folded these into one distinct over the
-    #    unioned join outputs (one exchange, identical set semantics)
-    #    on an interleaved in-session A/B (6.99 -> 6.55 s) — but the
-    #    driver's own protocol said otherwise both rounds: BENCH_r11
-    #    regressed 4.35 -> 7.33 s, and the r12 fresh-process
-    #    alternating bench.py A/B (32 cores, 6 pairs) had this
-    #    per-side form faster in 5 of 6 pairs (min 4.53 vs 5.28 s),
-    #    so the fold is REVERTED. Scale note: the per-side form's
-    #    third exchange carries already-deduplicated hashes — strictly
-    #    fewer bytes than either side's join output — so the fold was
-    #    never a byte win, only an exchange-count one; the driver
-    #    evidence says the two smaller independent exchanges (which
-    #    AQE sizes separately and whose jobs overlap) are the faster
-    #    plan at every measured point.
-    txid_in = (
-        ins.join(addr_side, ins.addr == addr.address)
-        .select("hash")
-        .distinct()
-    )
-    txid_out = (
-        outs.join(addr_side, outs.addr == addr.address)
-        .select("hash")
-        .distinct()
-    )
-    # 4. UNION DISTINCT (btcolap.sql:301-313). txid_sum is FACT-derived
-    #    (the reference materializes it as a table for the same reason,
-    #    btcolap.sql:271-313) — never force-broadcast; AQE decides from
-    #    the measured size at runtime.
-    txid_sum = txid_in.unionByName(txid_out).distinct()
-    txid_keys = txid_sum.select(F.col("hash").alias("txid"))
-
-    # 5. signed flows restricted to tracked txids (btcolap.sql:316-408);
-    #    inputs negative (btcolap.sql:331), outputs positive (:346)
-    flows = (
-        ins.select(
-            "block_timestamp",
-            F.col("hash").alias("txid"),
-            F.lit("input").alias("type"),
-            "addr",
-            (-F.col("sat_value")).alias("sat"),
-        )
-        .unionByName(
-            outs.select(
-                "block_timestamp",
-                F.col("hash").alias("txid"),
-                F.lit("output").alias("type"),
-                "addr",
-                F.col("sat_value").alias("sat"),
-            )
-        )
-        .join(txid_keys, "txid", "left_semi")
-    )
-
     # 6. wallet + location enrichment (btcolap.sql:412-451); the
-    #    pre/post-SAFE table split becomes a period column (SURVEY.md §4).
-    #    wloc is the one true bounded dimension (121 rows) — always
-    #    broadcast.
+    #    pre/post-SAFE table split becomes a period column (SURVEY.md §4)
     return (
-        flows.join(addr_side, flows.addr == addr.address)
+        flows.join(addr, flows.addr == addr.address)
         .join(F.broadcast(wloc), "wallet")
         .select(
             "block_timestamp",

@@ -20,6 +20,51 @@ from ..plans import bitcoin_fixtures, ledger_daily_rollup, ledger_pipeline
 from ..registry import query
 from .llmdata import _LANG_CASE, _duck_markers
 
+#: Stages 1-6 of the reference chain, txid discovery (`txid_sum`) and
+#: the semi join included, over relations named `tx`, `addr_raw` and
+#: `wloc`. `ledger` has the columns of `plans.ledger_pipeline`.
+_LEDGER_ORACLE_CTES = """
+addr AS (
+    SELECT wallet, address FROM (
+        SELECT wallet, address,
+               row_number() OVER (PARTITION BY wallet, address
+                                  ORDER BY wallet, address) AS rn
+        FROM addr_raw
+    ) WHERE rn = 1
+), ins AS (
+    SELECT t.hash, t.block_timestamp, u.txo.value AS sat_value,
+           ia.addr
+    FROM tx t, UNNEST(t.inputs) AS u(txo),
+         UNNEST(u.txo.addresses) AS ia(addr)
+), outs AS (
+    SELECT t.hash, t.block_timestamp, u.txo.value AS sat_value,
+           ia.addr
+    FROM tx t, UNNEST(t.outputs) AS u(txo),
+         UNNEST(u.txo.addresses) AS ia(addr)
+), txid_sum AS (
+    SELECT i.hash FROM ins i JOIN addr a ON i.addr = a.address
+    UNION
+    SELECT o.hash FROM outs o JOIN addr a ON o.addr = a.address
+), flows AS (
+    SELECT * FROM (
+        SELECT block_timestamp, hash AS txid, 'input' AS type, addr,
+               -sat_value AS sat
+        FROM ins
+        UNION ALL
+        SELECT block_timestamp, hash, 'output', addr, sat_value
+        FROM outs
+    ) WHERE txid IN (SELECT hash FROM txid_sum)
+), ledger AS (
+    SELECT f.block_timestamp, f.txid, f.type, f.addr, f.sat, a.wallet,
+           w.location,
+           CASE WHEN f.block_timestamp >= TIMESTAMP '1995-06-17 00:00:00'
+                THEN 'post' ELSE 'pre' END AS period
+    FROM flows f
+    JOIN addr a ON f.addr = a.address
+    JOIN wloc w ON a.wallet = w.wallet
+)
+"""
+
 _E2E_ORACLE = """
 WITH base AS (
     SELECT o_orderkey AS k, o_orderdate,
@@ -52,13 +97,6 @@ WITH base AS (
     SELECT 'w' || CAST((c_custkey * 7) % 50 AS VARCHAR),
            'a' || CAST(c_custkey % 1999 AS VARCHAR)
     FROM customer WHERE c_custkey % 5 = 0
-), addr AS (
-    SELECT wallet, address FROM (
-        SELECT wallet, address,
-               row_number() OVER (PARTITION BY wallet, address
-                                  ORDER BY wallet, address) AS rn
-        FROM addr_raw
-    ) WHERE rn = 1
 ), wloc AS (
     SELECT 'w' || CAST(wid AS VARCHAR) AS wallet,
            CASE wid % 7 WHEN 0 THEN 'China' WHEN 1 THEN 'Russia'
@@ -66,37 +104,7 @@ WITH base AS (
                 WHEN 5 THEN 'Brazil,Zibralter,Mexico'
                 ELSE 'Germany' END AS location
     FROM (SELECT DISTINCT (c_custkey * 7) % 50 AS wid FROM customer)
-), ins AS (
-    SELECT t.hash, t.block_timestamp, u.txo.value AS sat_value,
-           ia.addr
-    FROM tx t, UNNEST(t.inputs) AS u(txo),
-         UNNEST(u.txo.addresses) AS ia(addr)
-), outs AS (
-    SELECT t.hash, t.block_timestamp, u.txo.value AS sat_value,
-           ia.addr
-    FROM tx t, UNNEST(t.outputs) AS u(txo),
-         UNNEST(u.txo.addresses) AS ia(addr)
-), txid_sum AS (
-    SELECT i.hash FROM ins i JOIN addr a ON i.addr = a.address
-    UNION
-    SELECT o.hash FROM outs o JOIN addr a ON o.addr = a.address
-), flows AS (
-    SELECT * FROM (
-        SELECT block_timestamp, hash AS txid, 'input' AS type, addr,
-               -sat_value AS sat
-        FROM ins
-        UNION ALL
-        SELECT block_timestamp, hash, 'output', addr, sat_value
-        FROM outs
-    ) WHERE txid IN (SELECT hash FROM txid_sum)
-), ledger AS (
-    SELECT f.block_timestamp, f.type, f.sat, w.location,
-           CASE WHEN f.block_timestamp >= TIMESTAMP '1995-06-17 00:00:00'
-                THEN 'post' ELSE 'pre' END AS period
-    FROM flows f
-    JOIN addr a ON f.addr = a.address
-    JOIN wloc w ON a.wallet = w.wallet
-)
+),""" + _LEDGER_ORACLE_CTES + """\
 SELECT CAST(date_trunc('day', block_timestamp) AS TIMESTAMP) AS day,
        location, period, type,
        CAST(SUM(sat) AS DOUBLE) / 100000000 AS flow_btc,
@@ -108,9 +116,11 @@ GROUP BY 1, 2, 3, 4
 
 @query("pipeline_ledger_e2e", oracle=_E2E_ORACLE)
 def pipeline_ledger_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's full 6-stage ledger pipeline (dedup -> txid
-    discovery via explode+join x2 -> union-distinct -> signed lateral
-    flows -> dim enrichment) as ONE lazy DAG, rolled up to daily grain.
+    """The reference's 6-stage ledger pipeline as ONE lazy DAG, rolled
+    up to daily grain. The Spark side folds txid discovery into the
+    address join (plans/ledger.py); the oracle runs every stage (dedup
+    -> txid discovery via explode+join x2 -> union-distinct -> signed
+    lateral flows -> dim enrichment), so parity checks the fold.
     Satoshi arithmetic stays BIGINT end-to-end so both engines sum
     exactly."""
     tx, addr_raw, wloc = bitcoin_fixtures(spark, sf_dir)

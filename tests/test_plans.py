@@ -65,20 +65,21 @@ def test_daily_agg_has_partial_aggregation(spark, q):
 
 
 def test_ledger_pipeline_join_shape(spark, q):
-    """The ledger DAG's join shape: dimension joins (addr under the
-    size gate, the 121-row wloc) are broadcast; the fact-derived txid
-    semi join carries NO hint (the r3 scale-killer) and is allowed to
-    be a plain shuffle join — on the fact side only the explode output
-    moves, which IS the 100 TB shape. No quadratic operator anywhere."""
+    """The ledger DAG's join shape: the 121-row wloc dimension carries
+    the only hint; the unbounded addr mapping carries none (the planner
+    and AQE pick its strategy from its size), and nothing is cached. On
+    the fact side only the explode output moves, which IS the 100 TB
+    shape. No quadratic operator anywhere."""
     df = q["pipeline_ledger_e2e"](spark, SF)
     p = plan_str(df)
     assert "BroadcastHashJoin" in p
     assert "NestedLoop" not in p
     assert "Generate" in p  # the lateral explodes survived into the plan
-    # the fact-derived txid set must not be broadcast by hint: the
-    # analyzed plan carries hints only for gated addr (3 joins) + wloc
     analyzed = df._jdf.queryExecution().analyzed().toString()
-    assert analyzed.count("ResolvedHint") == 4
+    assert analyzed.count("ResolvedHint") == 1
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in executed
+    assert "InMemoryTableScan" not in executed
 
 
 def test_cosine_scoring_is_arrow_batched(spark, q):
@@ -175,29 +176,53 @@ def test_pagerank_big_graph_path_never_broadcasts_ranks(spark):
     assert "ShuffledHashJoin" in p or "SortMergeJoin" in p
 
 
+@contextlib.contextmanager
+def no_auto_broadcast(spark):
+    """Both the static and the AQE broadcast thresholds off: the plan a
+    relation too big to broadcast takes."""
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    old = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _final_broadcasts(df) -> int:
+    """BroadcastExchange nodes in the final adaptive plan of an executed
+    DataFrame (its string also prints the initial plan)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0].count("BroadcastExchange")
+
+
 def test_ledger_big_data_path_never_broadcasts_fact_sets(spark):
-    """Above broadcast_max_rows the ledger DAG must NOT broadcast the
-    fact-derived txid set or the unbounded exchange-address mapping
-    (the reference materializes txid_sum as a fact table for exactly
-    this reason, btcolap.sql:271-313) — only the 121-row
-    wallet_location dim keeps its hint. Mirrors the pagerank gate
-    test: forcing the gate to 0 must leave exactly one broadcast."""
+    """When neither the planner's estimate nor AQE's measured size
+    allows it, the ledger DAG must NOT broadcast the unbounded
+    exchange-address mapping or anything fact-derived — only the
+    121-row wallet_location dim keeps its hint. Mirrors the pagerank
+    gate test: exactly one broadcast must be left."""
     from bitcoin_olap_spark.plans import bitcoin_fixtures, ledger_pipeline
 
     tx, addr_raw, wloc = bitcoin_fixtures(spark, SF)
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     # drop caches left by earlier ledger runs: an InMemoryRelation's
     # stored child plan (planned under the default threshold) would
     # otherwise embed stale BroadcastExchange nodes in this explain
     spark.catalog.clearCache()
-    try:
-        led = ledger_pipeline(tx, addr_raw, wloc, broadcast_max_rows=0)
+    with no_auto_broadcast(spark):
+        led = ledger_pipeline(tx, addr_raw, wloc)
         analyzed = led._jdf.queryExecution().analyzed().toString()
         p = plan_str(led)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-    # logical: the only broadcast hint left is the wloc dim join
+    # logical: the only broadcast hint is the wloc dim join
     assert analyzed.count("ResolvedHint") == 1
     # physical: exactly one broadcast node (wloc); fact-side joins fall
     # back to shuffle strategies (formatted explain prints each node
@@ -210,7 +235,7 @@ def test_ledger_big_data_path_never_broadcasts_fact_sets(spark):
 
 def test_ledger_shuffle_path_matches_broadcast_path(spark):
     """Both ledger join strategies must produce the identical rollup —
-    the gate changes the physical plan, never the answer."""
+    the thresholds change the physical plan, never the answer."""
     from bitcoin_olap_spark.plans import (
         bitcoin_fixtures,
         ledger_daily_rollup,
@@ -219,16 +244,16 @@ def test_ledger_shuffle_path_matches_broadcast_path(spark):
 
     sf = "/root/testdata/sf0.001"
     tx, addr_raw, wloc = bitcoin_fixtures(spark, sf)
-    small = ledger_daily_rollup(
-        ledger_pipeline(tx, addr_raw, wloc, broadcast_max_rows=10**9)
-    )
-    big = ledger_daily_rollup(
-        ledger_pipeline(tx, addr_raw, wloc, broadcast_max_rows=0)
-    )
+    small = ledger_daily_rollup(ledger_pipeline(tx, addr_raw, wloc))
+    small_rows = small.collect()
+    with no_auto_broadcast(spark):
+        big = ledger_daily_rollup(ledger_pipeline(tx, addr_raw, wloc))
+        big_rows = big.collect()
+    # addr + wloc broadcast vs wloc only
+    assert _final_broadcasts(small) == 2
+    assert _final_broadcasts(big) == 1
     # location is nullable -> sort by repr (None vs str won't compare)
-    assert sorted(map(repr, small.collect())) == sorted(
-        map(repr, big.collect())
-    )
+    assert sorted(map(repr, small_rows)) == sorted(map(repr, big_rows))
 
 
 def test_pagerank_shuffle_path_matches_broadcast_path(spark):
