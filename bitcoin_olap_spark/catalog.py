@@ -2,7 +2,7 @@
 
 The driver testdata (TESTDATA.md) is one parquet file per table under
 /root/testdata/sf{0.001,0.01,0.1}/. At 100 TB each "table" is a
-partitioned parquet/Delta dataset; `spark.read.parquet` takes globs and
+partitioned parquet/Delta dataset; `spark.read.parquet` takes files and
 directories identically, so these helpers are scale-transparent — the
 vectorized reader gives split-per-rowgroup parallelism, and filters /
 projections expressed on the returned DataFrame push down into the scan
@@ -14,6 +14,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .operators.cacheutil import file_token, memo
 
 TABLES = (
     "region",
@@ -37,23 +39,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: division (epoch-nanos exceed 2^53 so float math would lose precision).
 _NANO_TS_COLS = {"events": ("ts",)}
 
-#: Memoized base DataFrames keyed by (applicationId, sf_dir, name,
-#: spread). `spark.read.parquet` costs ~150 ms per call (file listing +
-#: footer schema read through py4j); a suite run calls table() hundreds
-#: of times on the same immutable testdata. This caches the LOGICAL
-#: plan only — every action still scans the parquet data itself, so
-#: nothing measured is skipped; it is the same reuse a metastore
-#: catalog gives a production session (resolve the table once, plan
-#: many queries).
-_DF_CACHE: dict[tuple[str, str, str, bool], DataFrame] = {}
-
 #: Row-count threshold above which a spread table is sharded on disk
 #: rather than repartitioned in-plan (below it the exchange is cheap).
 SHARD_MIN_ROWS = 20_000
-
-#: (abs sf_dir, table) -> directory of the sharded per-process copy
-#: ("" = table below the shard threshold, use the in-plan repartition).
-_SHARD_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _convert_nano_ts(df: DataFrame, name: str) -> DataFrame:
@@ -68,10 +56,10 @@ def _convert_nano_ts(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-def _sharded_copy(sf_dir: str, name: str, n_shards: int) -> str | None:
-    """One-time per-process rewrite of a single-file table into
-    `n_shards` parquet files on tmpfs; returns the directory, or None
-    for tables too small to bother.
+def _sharded_copy(src: str, n_shards: int) -> str | None:
+    """Rewrite of the single-file table `src` into `n_shards` parquet
+    files on tmpfs, memoized per file version; returns the directory,
+    or None for tables too small to bother.
 
     The driver testdata packs each table into ONE parquet row group,
     which is indivisible — a physical artifact of the generator, not a
@@ -82,27 +70,31 @@ def _sharded_copy(sf_dir: str, name: str, n_shards: int) -> str | None:
     timestamp coercion) so scans and everything fused into the scan
     stage (partial aggregation, Expand, regex/explode maps) parallelize
     the way they would on real storage. Cost: one read+write of the
-    (small) table per process, paid once, off the per-query clock — the
-    same role a lakehouse compaction/ingest job plays."""
-    import pyarrow.parquet as pq
+    (small) table per file version, paid once, off the per-query clock
+    — the same role a lakehouse compaction/ingest job plays. Each
+    version goes to a fresh directory, so a DataFrame still scanning
+    an older copy never sees its files overwritten."""
+    return memo(
+        ("catalog.shards", src),
+        file_token(src),
+        lambda: _write_shards(src, n_shards),
+    )
 
-    key = (os.path.abspath(sf_dir), name)
-    got = _SHARD_CACHE.get(key)
-    if got is not None:
-        return got or None
-    src = os.path.join(sf_dir, f"{name}.parquet")
-    if pq.ParquetFile(src).metadata.num_rows < SHARD_MIN_ROWS:
-        _SHARD_CACHE[key] = ""
-        return None
+
+def _write_shards(src: str, n_shards: int) -> str | None:
+    import tempfile
+
+    import pyarrow.parquet as pq
 
     from .session import scratch_root
 
+    if pq.ParquetFile(src).metadata.num_rows < SHARD_MIN_ROWS:
+        return None
     tbl = pq.read_table(src)
-    out_dir = os.path.join(
-        scratch_root("shards"),
-        f"{os.path.basename(os.path.abspath(sf_dir))}-{name}",
+    out_dir = tempfile.mkdtemp(
+        prefix="-".join(src.split(os.sep)[-2:]) + "-",
+        dir=scratch_root("shards"),
     )
-    os.makedirs(out_dir, exist_ok=True)
     n = tbl.num_rows
     per = -(-n // n_shards)
     for i in range(n_shards):
@@ -117,51 +109,53 @@ def _sharded_copy(sf_dir: str, name: str, n_shards: int) -> str | None:
             coerce_timestamps=None,
             version="2.6",
         )
-    _SHARD_CACHE[key] = out_dir
     return out_dir
 
 
 def table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
-    """Load one testdata table. Accepts a file, directory, or glob.
+    """Load one testdata table, `<sf_dir>/<name>.parquet`: a file or a
+    directory of parquet files.
 
-    spread=True parallelizes the scan stage. For tables above
-    SHARD_MIN_ROWS this reads the per-process sharded copy
-    (`_sharded_copy`) — many files => many splits => the scan AND
-    everything Spark fuses into it run wide, with no exchange at all.
-    Small tables fall back to an in-plan round-robin repartition (one
+    The DataFrame is memoized per (path, spread) and reused while the
+    application and the files under the path are unchanged: a
+    `spark.read.parquet` costs ~150 ms (file listing + footer schema
+    read through py4j), and a suite run calls table() hundreds of
+    times. Only the LOGICAL plan is kept — every action still scans
+    the parquet data — the reuse a metastore catalog gives a
+    production session. A rewrite of the files, or a new application,
+    builds a fresh DataFrame.
+
+    spread=True parallelizes the scan stage. For a single-file table
+    above SHARD_MIN_ROWS this reads the sharded copy (`_sharded_copy`)
+    — many files => many splits => the scan AND everything Spark fuses
+    into it run wide, with no exchange at all. Smaller files and
+    directories fall back to an in-plan round-robin repartition (one
     cheap exchange). Queries with real per-row compute opt in; a
     production many-row-group table needs neither — split planning
     already saturates the cluster — which is why it is opt-in rather
     than the default, and why trivial scan-project queries (whose
     output IS the table) never set it."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        spread,
+    sf_dir = os.path.abspath(sf_dir)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return memo(
+        ("catalog.table", sf_dir, name, spread),
+        (spark.sparkContext.applicationId, file_token(path)),
+        lambda: _load(spark, sf_dir, name, path, spread),
     )
-    df = _DF_CACHE.get(key)
-    if df is not None:
-        return df
-    if spread:
-        shard_dir = _sharded_copy(
-            sf_dir, name, spark.sparkContext.defaultParallelism
-        )
-        if shard_dir is not None:
-            df = _convert_nano_ts(spark.read.parquet(shard_dir), name)
-        else:
-            df = table(spark, sf_dir, name).repartition(
-                spark.sparkContext.defaultParallelism
-            )
-    else:
-        df = _convert_nano_ts(
-            spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")),
-            name,
-        )
-    _DF_CACHE[key] = df
-    return df
+
+
+def _load(
+    spark: SparkSession, sf_dir: str, name: str, path: str, spread: bool
+) -> DataFrame:
+    if not spread:
+        return _convert_nano_ts(spark.read.parquet(path), name)
+    n = spark.sparkContext.defaultParallelism
+    shard_dir = None if os.path.isdir(path) else _sharded_copy(path, n)
+    if shard_dir is None:
+        return table(spark, sf_dir, name).repartition(n)
+    return _convert_nano_ts(spark.read.parquet(shard_dir), name)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -1,14 +1,25 @@
-"""Bounded session-scoped cache registry.
+"""The package's two cache mechanisms: a memo tied to file identity,
+and a bounded registry of cached Spark relations.
 
-Several operators cache an intermediate relation that both sides of a
-downstream self-join consume (hot-shingle vocabularies in
-operators/dedup.py, weighted postings in operators/vectors.py). The
-cache must outlive the builder function — the returned DataFrame is
-LAZY and the cached relation is only materialized when the caller
-finally runs an action — so a try/finally unpersist inside the builder
-would defeat it. But a long-lived session that builds many such queries
-would otherwise accumulate cached relations in executor storage
-forever.
+memo(key, token, build) is the one memo for values derived from files
+that can change under a fixed path (catalog DataFrames and shard
+copies, trained quantizers, feed DDL). The key names WHAT is cached and
+always carries the path; the token (usually `file_token(path)`) says
+WHICH version of the files the value came from. A key holds exactly one
+entry: an equal token is a hit, any other token rebuilds under a
+per-key lock and replaces the entry, so a rewritten file is never
+served stale and threads that miss the same key at once build it
+once.
+
+scoped_cache(df) bounds executor storage. Several operators cache an
+intermediate relation that both sides of a downstream self-join
+consume (hot-shingle vocabularies in operators/dedup.py, weighted
+postings in operators/vectors.py). The cache must outlive the builder
+function — the returned DataFrame is LAZY and the cached relation is
+only materialized when the caller finally runs an action — so a
+try/finally unpersist inside the builder would defeat it. But a
+long-lived session that builds many such queries would otherwise
+accumulate cached relations in executor storage forever.
 
 scoped_cache() is the middle ground: it caches the relation AND
 registers it in a bounded FIFO keyed by SEMANTIC PLAN; once more than
@@ -29,15 +40,57 @@ handle registered by the previous query aged out while the current
 query was consuming the shared entry). Re-registering a plan
 therefore REFRESHES its position instead of appending a duplicate —
 eviction only ever reaches plans no recent query has touched.
-release_caches() drops everything eagerly for tests/benchmarks that
-want a clean slate.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
 from collections import OrderedDict
+from typing import Any, Callable, Hashable
 
 from pyspark.sql import DataFrame
+
+#: key -> (token, value); one entry per key
+_MEMO: dict[Hashable, tuple[Hashable, Any]] = {}
+#: key -> the lock its builds run under
+_MEMO_LOCKS: dict[Hashable, threading.Lock] = {}
+_LOCKS_GUARD = threading.Lock()
+
+
+def file_token(path: str) -> tuple:
+    """Identity of the bytes under `path`: (size, mtime_ns) of a file,
+    or the sorted (relative path, size, mtime_ns) of every file under a
+    directory. Raises FileNotFoundError for a missing path."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns)
+    out = []
+    for dirpath, _, names in os.walk(path):
+        for n in names:
+            full = os.path.join(dirpath, n)
+            s = os.stat(full)
+            out.append((os.path.relpath(full, path), s.st_size, s.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def memo(key: Hashable, token: Hashable, build: Callable[[], Any]) -> Any:
+    """The value stored under `key` if it was built for an equal
+    `token`; otherwise `build()`, run once per key at a time, replaces
+    the entry. A build that raises leaves the old entry in place."""
+    got = _MEMO.get(key)
+    if got is not None and got[0] == token:
+        return got[1]
+    with _LOCKS_GUARD:
+        lock = _MEMO_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        got = _MEMO.get(key)
+        if got is not None and got[0] == token:
+            return got[1]
+        value = build()
+        _MEMO[key] = (token, value)
+        return value
 
 #: most DISTINCT cached plans live at once; beyond this the least
 #: recently registered unpersists. Sized well past the widest composed
@@ -72,12 +125,3 @@ def scoped_cache(df: DataFrame) -> DataFrame:
             pass  # session already stopped — nothing to release
     return df
 
-
-def release_caches() -> None:
-    """Eagerly unpersist every scoped cache registered so far."""
-    while _LIVE:
-        _, old = _LIVE.popitem(last=False)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass

@@ -560,9 +560,33 @@ def _oracle_ivf_sql(
     return "".join(parts)
 
 
-#: per-(process, corpus) trained-quantizer memo — the offline-index
-#: semantics of a production IVF (see sim_topk_ivf docstring)
-_IVF_LLOYD_CACHE: dict[tuple[str, str], list] = {}
+def _trained(sf_dir: str, emb: DataFrame, kind: str, train) -> list:
+    """An index artifact (plain lists of integer centroids) that
+    `train` fits on the fixed-point corpus at `sf_dir`, memoized per
+    corpus file version: an index is built once, queried many times —
+    the offline-index semantics of a production IVF/PQ — and retrained
+    when embeddings.parquet is rewritten."""
+    import os
+
+    from ..ml.clustering import quantize_fixed
+    from ..operators.cacheutil import file_token, memo
+
+    sf_dir = os.path.abspath(sf_dir)
+    return memo(
+        ("llmdata." + kind, sf_dir),
+        file_token(os.path.join(sf_dir, "embeddings.parquet")),
+        lambda: train(quantize_fixed(emb, "vec_id", "embedding")),
+    )
+
+
+def _ivf_centroids(sf_dir: str, emb: DataFrame) -> list:
+    """The 16 fixed-point Lloyd centroids (2 rounds) sim_topk_ivf and
+    sim_semdedup share."""
+    from ..ml.clustering import lloyd_fixed
+
+    return _trained(
+        sf_dir, emb, "ivf", lambda b: lloyd_fixed(b, "vec_id", 16, 2, dim=64)
+    )
 
 
 @query("sim_topk_ivf", oracle=_oracle_ivf_sql())
@@ -583,22 +607,8 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_topk variant keeps its own operator-level recall test; its
     seeded k-means|| init is the one thing no external engine can
     replay)."""
-    import os
-
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    # quantizer memo: an IVF index is built once, queried many times —
-    # the trained integer centroids (16 x 64 longs of control-plane
-    # data) persist per (process, corpus), so repeat executions skip
-    # the Lloyd iterations, exactly like a production index
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cents = _IVF_LLOYD_CACHE.get(key)
-    if cents is None:
-        from ..ml.clustering import lloyd_fixed, quantize_fixed
-
-        base = quantize_fixed(emb, "vec_id", "embedding")
-        cents = lloyd_fixed(base, "vec_id", 16, 2, dim=64)
-        _IVF_LLOYD_CACHE[key] = cents
     return V.ivf_topk_exact(
         emb,
         queries,
@@ -608,7 +618,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=16,
         nprobe=4,
         iters=2,
-        centroids=cents,
+        centroids=_ivf_centroids(sf_dir, emb),
     )
 
 
@@ -708,9 +718,7 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     set joined to the assignment. ENGINE-EXACT end to end — the
     oracle replays training, assignment, pairing, scoring, and the
     survivor rule bit-for-bit in SQL."""
-    import os
-
-    from ..ml.clustering import lloyd_fixed, quantize_fixed
+    from ..ml.clustering import quantize_fixed
 
     emb = table(spark, sf_dir, "embeddings")
     # SemDeDup's quadratic is bounded BY the cluster size: the paper
@@ -730,14 +738,13 @@ def sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "assign_fixed_arrow accept any k; SemDeDup uses k ~ "
             "corpus/1000) instead of raising this gate."
         )
-    base = quantize_fixed(emb, "vec_id", "embedding")
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cents = _IVF_LLOYD_CACHE.get(key)
-    if cents is None:
-        cents = lloyd_fixed(base, "vec_id", 16, 2, dim=64)
-        _IVF_LLOYD_CACHE[key] = cents
     assigned = V.assign_fixed_arrow(
-        base, "vec_id", cents, 16, keep_cols=("embedding",), with_dist=True
+        quantize_fixed(emb, "vec_id", "embedding"),
+        "vec_id",
+        _ivf_centroids(sf_dir, emb),
+        16,
+        keep_cols=("embedding",),
+        with_dist=True,
     ).localCheckpoint()
     a = assigned.select(
         "cid",
@@ -1034,9 +1041,17 @@ def sim_containment_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-(process, corpus) trained-PQ-codebook memo — same offline-index
-#: semantics as _IVF_LLOYD_CACHE (see sim_topk_ivf docstring)
-_PQ_CODEBOOK_CACHE: dict[tuple[str, str], list] = {}
+def _pq_codebook(sf_dir: str, emb: DataFrame) -> list:
+    """The 8 x 16 fixed-point PQ codebook (2 Lloyd rounds)
+    sim_topk_pq and sim_topk_rerank share."""
+    from ..ml.clustering import pq_lloyd_fixed
+
+    return _trained(
+        sf_dir,
+        emb,
+        "pq",
+        lambda b: pq_lloyd_fixed(b, "vec_id", 16, 8, 2, dim=64),
+    )
 
 
 @query("sim_topk_pq", oracle=_oracle_pq_sql())
@@ -1052,23 +1067,13 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (codes are ~60x smaller than the float corpus). Per-partition
     Arrow top-k pruning bounds the final rank exchange at partitions
     x queries x k rows. Like an IVF quantizer, the codebook is an
-    OFFLINE index artifact — memoized per (process, corpus), so
+    OFFLINE index artifact — memoized per corpus file version, so
     repeat executions skip training. The oracle replays grid, seed
     codebook, both Lloyd rounds, encoding, LUT, ADC, and rank
     bit-for-bit; tests additionally measure recall against
     sim_topk_bruteforce."""
-    import os
-
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cents = _PQ_CODEBOOK_CACHE.get(key)
-    if cents is None:
-        from ..ml.clustering import pq_lloyd_fixed, quantize_fixed
-
-        base = quantize_fixed(emb, "vec_id", "embedding")
-        cents = pq_lloyd_fixed(base, "vec_id", 16, 8, 2, dim=64)
-        _PQ_CODEBOOK_CACHE[key] = cents
     return V.pq_topk_adc(
         emb,
         queries,
@@ -1077,7 +1082,7 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10,
         m=8,
         n_codewords=16,
-        codebook=cents,
+        codebook=_pq_codebook(sf_dir, emb),
     )
 
 
@@ -2958,18 +2963,8 @@ def sim_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring runs through the shared Arrow fixed-point kernel. The
     oracle replays BOTH stages — the entire PQ pipeline at k=50 as a
     subquery, then the exact kernel on those pairs."""
-    import os
-
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cents = _PQ_CODEBOOK_CACHE.get(key)
-    if cents is None:
-        from ..ml.clustering import pq_lloyd_fixed, quantize_fixed
-
-        base = quantize_fixed(emb, "vec_id", "embedding")
-        cents = pq_lloyd_fixed(base, "vec_id", 16, 8, 2, dim=64)
-        _PQ_CODEBOOK_CACHE[key] = cents
     cand = V.pq_topk_adc(
         emb,
         queries,
@@ -2978,7 +2973,7 @@ def sim_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=50,
         m=8,
         n_codewords=16,
-        codebook=cents,
+        codebook=_pq_codebook(sf_dir, emb),
     ).select("query_id", "vec_id")
     qv = queries.select(
         F.col("vec_id").alias("query_id"),

@@ -58,40 +58,38 @@ DDL_BY_ARROW = {
 }
 
 
-#: (realpath(root), table_id, head_version) -> merged DDL. Manifests
-#: and data files are immutable, so the union of a given version's
-#: footers never changes — repeated feed opens (every readStream
-#: start, every batch load) skip the O(files) footer sweep. table_id
-#: pins the entry to ONE table incarnation (mirroring acidtable's
-#: _OPS_CACHE guard): a table dropped and recreated at the same root
-#: that happens to reach the same head version with a different
-#: schema must NOT be served the stale DDL.
-_DDL_CACHE: dict[tuple[str, str, int], str] = {}
-
-
 def _table_ddl(root: str) -> str:
     """Table-column DDL derived from the UNION of the head snapshot's
     data-file footers (driver-side, metadata-only — O(files) footer
-    reads, the same cost Spark's mergeSchema pays, memoized per
-    (root, table incarnation, head version) since the file set of a
-    committed version is immutable). A single-footer derivation would be wrong after
-    add-column evolution: path order can put a pre-evolution narrow
-    file first, silently dropping the evolved columns from the whole
-    feed, contradicting _read_change_file's null-fill widening. Field
-    order: first file's order, later-seen columns appended —
-    mirroring snapshot reads' mergeSchema semantics."""
+    reads, the same cost Spark's mergeSchema pays). Memoized per root
+    with one entry, valid while the head is the same version of the
+    same table incarnation: manifests and data files are immutable, so
+    repeated feed opens (every readStream start, every batch load) skip
+    the footer sweep, and table_id stops a table dropped and recreated
+    at the same root, at the same head version, with a different schema
+    from being served the stale DDL. A single-footer derivation would
+    be wrong after add-column evolution: path order can put a
+    pre-evolution narrow file first, silently dropping the evolved
+    columns from the whole feed, contradicting _read_change_file's
+    null-fill widening. Field order: first file's order, later-seen
+    columns appended — mirroring snapshot reads' mergeSchema
+    semantics."""
     import os
 
-    import pyarrow.parquet as pq
-
     from ..operators import acidtable as AT
+    from ..operators.cacheutil import memo
 
     head = AT.current_version(root)
-    key = (os.path.realpath(root), AT.table_id(root), head)
-    cached = _DDL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    files = AT._resolve_files(root, head)
+    return memo(
+        ("cdcfeed.ddl", os.path.realpath(root)),
+        (AT.table_id(root), head),
+        lambda: _footer_ddl(AT._resolve_files(root, head), root),
+    )
+
+
+def _footer_ddl(files: list, root: str) -> str:
+    import pyarrow.parquet as pq
+
     if not files:
         raise ValueError(f"acid_cdf: table at {root} has no data files")
     merged: list = []
@@ -117,9 +115,7 @@ def _table_ddl(root: str) -> str:
                 f"acid_cdf: unsupported column type {t} for {f.name}"
             )
         cols.append(f"{f.name} {ddl}")
-    ddl_str = ", ".join(cols)
-    _DDL_CACHE[key] = ddl_str
-    return ddl_str
+    return ", ".join(cols)
 
 
 class _ChangeFilePartition(InputPartition):
