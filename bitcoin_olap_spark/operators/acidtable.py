@@ -23,13 +23,13 @@ manifests) from first principles:
   checkpoint at-or-below + delta replay forward). Reading an old
   version IS time travel.
 - Writers follow copy-on-write at FILE granularity: a DELETE
-  identifies the files that contain matching rows (input_file_name()
-  — one filtered scan), rewrites ONLY those files without the deleted
-  rows, and commits a new manifest = untouched files + rewritten
-  files. On a 100 TB table where a predicate touches 0.1% of files,
-  the delete rewrites 0.1% of the data and the commit is a metadata
-  operation for the rest — the property that makes ACID maintenance
-  feasible at scale.
+  identifies the files that contain matching rows (the scan's hidden
+  `_metadata.file_path` column — one filtered scan), rewrites ONLY
+  those files without the deleted rows, and commits a new manifest =
+  untouched files + rewritten files. On a 100 TB table where a
+  predicate touches 0.1% of files, the delete rewrites 0.1% of the
+  data and the commit is a metadata operation for the rest — the
+  property that makes ACID maintenance feasible at scale.
 - Commits are atomic + optimistic: the manifest is written to a temp
   name and `os.link`-ed (fails if the target exists) into place, so
   two concurrent writers racing to version N+1 cannot both win;
@@ -49,6 +49,15 @@ it adds, read on the driver from the parquet footers Spark has just
 written — no extra Spark job, and no writer can leave them out.
 Checkpoints carry the merged statistics, so snapshot_pruned resolves
 them from the same bounded checkpoint-plus-deltas walk as the files.
+
+The Spark schema is a table property too (Delta's
+`metaData.schemaString`): each commit reads it from the same footers
+(the key Spark's own schema inference reads) and widens the previous
+version's with the added files' new top-level columns, in order. Every
+scan of the table passes it (`_scan`), so planning a read, merge,
+delete or optimize starts no schema-inference job. A table without the
+property (written before it existed, or whose files disagree on a
+column's type) falls back to inference.
 """
 
 from __future__ import annotations
@@ -64,6 +73,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _log_dir(root: str) -> str:
@@ -311,6 +321,7 @@ def _commit(
     remove: list[str] = (),
     stats: dict | None = None,
     stats_cols: tuple = (),
+    props: dict | None = None,
     cdc: list[str] | None = None,
     dv: list[str] | None = None,
     dv_reset: list[str] | None = None,
@@ -324,37 +335,61 @@ def _commit(
     sidecar AFTER the commit point (crash between the two is safe:
     resolution just walks back to the previous checkpoint).
 
-    Statistics are recorded HERE, for every writer: each added file
-    gets footer min/max of the table's statistics columns — at version
-    0 `stats_cols` (the property: init_table, clone), later version-1's
-    plus `stats_cols` for this commit only (optimize_zorder). `stats`
-    holds entries already known for added files (blooms; a restore's
-    or clone's resolved ones); footers fill the columns they lack."""
+    Statistics and the schema are recorded HERE, for every writer,
+    from the added files' footers. Each added file gets footer min/max
+    of the table's statistics columns — at version 0 `stats_cols` (the
+    property: init_table), later version-1's plus `stats_cols` for
+    this commit only (optimize_zorder). `stats` holds entries already
+    known for added files (blooms; a restore's resolved ones); footers
+    fill the columns they lack. The schema property is version-1's
+    (empty at version 0) widened by each added file's footer schema
+    (_widen_schema); a version without one records none. `props`, when
+    given, is this version's table properties verbatim (clone,
+    restore: a known snapshot's), and no footer schema is read."""
+    import pyarrow.parquet as pq
+
     os.makedirs(_log_dir(root), exist_ok=True)
     if version == 0:
         table_id(root)  # stamp this incarnation's identity at birth
-        table_cols = list(stats_cols)
+    if props is None:
+        if version == 0:
+            props = {"stats_cols": list(stats_cols), "schema": _NO_FIELDS}
+        else:
+            try:
+                props = _table_props(root, version - 1)
+            except FileNotFoundError:  # vacuumed, so a newer head exists
+                raise ConcurrentCommitError(f"version {version} is stale")
+        widen = "schema" in props
     else:
-        try:
-            table_cols = _table_stats_cols(root, version - 1)
-        except FileNotFoundError:  # vacuumed, so a newer head exists
-            raise ConcurrentCommitError(f"version {version} is stale")
+        props, widen = dict(props), False
+    table_cols = props.get("stats_cols", [])
     cols = list(dict.fromkeys([*table_cols, *stats_cols]))
     stats = dict(stats or {})
     for f in add:
         have = stats.get(f, {})
-        if not all(c in have for c in cols):
-            stats[f] = {**_footer_stats(f, cols), **have}
+        need = not all(c in have for c in cols)
+        if not (need or widen):
+            continue
+        md = pq.read_metadata(f)
+        if need:
+            stats[f] = {**_footer_stats(md, cols), **have}
+        if widen:
+            props["schema"] = _widen_schema(props["schema"], md)
+            widen = props["schema"] is not None
     manifest = {
         "version": version,
         "op": op,
         "add": sorted(add),
         "remove": sorted(remove),
     }
+    # the properties repeat in every manifest, so a writer or reader
+    # takes them from one small read of its version, and vacuum can
+    # never drop them
     if table_cols:
-        # the property repeats in every manifest, so a writer reads it
-        # from the head in one small read, and vacuum can never drop it
         manifest["stats_cols"] = table_cols
+    schema = props.get("schema")
+    if schema and schema["fields"]:
+        manifest["schema"] = schema
     if stats:
         # OPTIONAL per-file column min/max for data skipping —
         # readers that ignore this key stay correct (a file without
@@ -398,11 +433,11 @@ class ConcurrentCommitError(RuntimeError):
 
 
 def _strip_uri(p: str) -> str:
-    """Reduce an executor-reported file URI (input_file_name() /
-    _metadata.file_path, "file:/x" or "file:///x", possibly with a
-    query suffix) to a plain absolute path. URIs are percent-encoded
-    (a table root containing a space arrives as %20), so the path is
-    unquoted AFTER the scheme/query handling."""
+    """Reduce an executor-reported file URI (_metadata.file_path,
+    "file:/x" or "file:///x", possibly with a query suffix) to a
+    plain absolute path. URIs are percent-encoded (a table root
+    containing a space arrives as %20), so the path is unquoted AFTER
+    the scheme/query handling."""
     if p.startswith("file:"):
         p = p[5:]
         while p.startswith("//"):
@@ -414,9 +449,9 @@ def _manifest_form(
     uris, manifest_files: list[str], strict: bool = True
 ) -> set[str]:
     """Map executor-reported file URIs back to the EXACT path strings
-    the manifest stores. input_file_name()/_metadata.file_path are
-    always absolute, but manifests keep paths as the table root was
-    given, so every comparison goes through realpath on both sides.
+    the manifest stores. _metadata.file_path values are always
+    absolute, but manifests keep paths as the table root was given,
+    so every comparison goes through realpath on both sides.
     In strict mode (scan-derived URIs) a miss is a protocol violation
     — the scan read a file the snapshot does not own — and raises
     instead of silently committing an empty 'affected' set.
@@ -520,10 +555,73 @@ def _probe_coerce(lo, hi):
     return lo, hi, lambda s: s
 
 
-def _table_stats_cols(root: str, version: int) -> list[str]:
-    """The table's statistics columns (its property, set at version 0
-    and repeated in every manifest) as of `version`."""
-    return _read_raw(root, version).get("stats_cols", [])
+def _table_props(root: str, version: int) -> dict:
+    """The table's properties as of `version`, each repeated in every
+    manifest: "stats_cols" (its statistics columns, set at version 0)
+    and, when recorded, "schema" (its Spark schema as JSON)."""
+    m = _read_raw(root, version)
+    return {k: m[k] for k in ("stats_cols", "schema") if k in m}
+
+
+#: the schema property a table starts from before its first file
+_NO_FIELDS = {"type": "struct", "fields": []}
+
+#: the footer key where Spark writes a data file's Spark schema (JSON);
+#: Spark's own parquet schema inference reads the same key
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+_NULL_FLAGS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _nullable(t):
+    """Spark type JSON `t` with every nullability flag set: a file
+    source reads every field as nullable, so the property is what a
+    read infers, and files differing only in nullability agree."""
+    if isinstance(t, list):
+        return [_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    out = {}
+    for k, v in t.items():
+        if k in _NULL_FLAGS:
+            v = True
+        elif k != "metadata":  # field metadata is opaque user data
+            v = _nullable(v)
+        out[k] = v
+    return out
+
+
+def _widen_schema(schema: dict, md) -> dict | None:
+    """Schema property `schema` widened by the Spark schema in a data
+    file's footer `md` (pyarrow FileMetaData): the file's top-level
+    fields that are new append in the file's order. None when the
+    footer carries no Spark schema or a field changes type — the table
+    then has no schema property and reads infer it."""
+    raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    fields = list(schema["fields"])
+    known = {f["name"]: f["type"] for f in fields}
+    for f in _nullable(json.loads(raw))["fields"]:
+        if f["name"] not in known:
+            fields.append(f)
+            known[f["name"]] = f["type"]
+        elif known[f["name"]] != f["type"]:
+            return None
+    return {"type": "struct", "fields": fields}
+
+
+def _scan(
+    spark: SparkSession, root: str, version: int, files: list[str]
+) -> DataFrame:
+    """Parquet scan of data files `files` of snapshot `version`. With
+    the table's schema property the scan is given that schema, so
+    planning it starts no inference job (files missing a column read
+    it as NULL); without one, Spark infers the schema as before."""
+    schema = _table_props(root, version).get("schema")
+    if schema is None:
+        return spark.read.parquet(*files)
+    return spark.read.schema(StructType.fromJson(schema)).parquet(*files)
 
 
 def _footer_decoder(col):
@@ -574,9 +672,10 @@ def _footer_decoder(col):
     return None
 
 
-def _footer_stats(path: str, cols) -> dict:
-    """{col: [lo, hi]} for a data file, from its parquet footer alone
-    (no data read, no Spark job): each column's row-group min/max
+def _footer_stats(footer, cols) -> dict:
+    """{col: [lo, hi]} for a data file (its path, or its footer as
+    pyarrow FileMetaData), from the parquet footer alone (no data
+    read, no Spark job): each column's row-group min/max
     decoded and merged, then encoded as _stat_encode encodes the
     Spark aggregate. Row groups that are entirely NULL are skipped.
     A column left out — all NULL, not in the file, or a row group
@@ -584,7 +683,7 @@ def _footer_stats(path: str, cols) -> dict:
     stats', so its file is never skipped for it."""
     import pyarrow.parquet as pq
 
-    md = pq.read_metadata(path)
+    md = pq.read_metadata(footer) if isinstance(footer, str) else footer
     out: dict = {}
     for j in range(md.num_columns):
         col = md.schema.column(j)
@@ -670,18 +769,17 @@ def snapshot_pruned(
             kept.append(f)
         elif decode(s[0]) <= hi_c and decode(s[1]) >= lo_c:
             kept.append(f)
-    return _read_kept(
-        spark, kept, files, dvs, (F.col(col) >= lo) & (F.col(col) <= hi)
-    )
+    pred = (F.col(col) >= lo) & (F.col(col) <= hi)
+    return _read_kept(spark, root, v, kept, files, dvs, pred)
 
 
-def _read_kept(spark, kept, files, dvs, pred):
-    """(rows of the `kept` files that satisfy `pred`, n kept, n
-    files): the exact filter after file skipping."""
+def _read_kept(spark, root, version, kept, files, dvs, pred):
+    """(rows of the `kept` files of snapshot `version` that satisfy
+    `pred`, n kept, n files): the exact filter after file skipping."""
     df = (
-        _apply_dvs(spark, spark.read.parquet(*kept), dvs).filter(pred)
+        _apply_dvs(spark, _scan(spark, root, version, kept), dvs).filter(pred)
         if kept
-        else spark.read.parquet(*files).filter(F.lit(False))
+        else _scan(spark, root, version, files).filter(F.lit(False))
     )
     return df, len(kept), len(files)
 
@@ -706,7 +804,11 @@ def append(
     ValueError."""
     if stats_cols:
         head = current_version(root)
-        own = _table_stats_cols(root, head) if head >= 0 else []
+        own = (
+            _table_props(root, head).get("stats_cols", [])
+            if head >= 0
+            else []
+        )
         extra = [c for c in stats_cols if c not in own]
         if extra:
             raise ValueError(
@@ -752,14 +854,14 @@ def clone(root: str, dest: str, version: int | None = None) -> int:
     os.makedirs(_data_dir(dest), exist_ok=True)
     # deletion vectors are part of the snapshot's logical content —
     # a clone that dropped them would resurrect MoR-deleted rows. The
-    # statistics property and the files' resolved stats carry over.
+    # table properties and the files' resolved stats carry over.
     _commit(
         dest,
         0,
         f"clone:{root}@{v}",
         add=files,
         stats=stats,
-        stats_cols=tuple(_table_stats_cols(root, v)),
+        props=_table_props(root, v),
         dv=dvs or None,
     )
     return 0
@@ -865,7 +967,7 @@ def snapshot(
     branch when the table has none)."""
     v = current_version(root) if version is None else version
     files, _, dvs = _resolve(root, v)
-    return _apply_dvs(spark, spark.read.parquet(*files), dvs)
+    return _apply_dvs(spark, _scan(spark, root, v, files), dvs)
 
 
 def table_changes(
@@ -895,8 +997,9 @@ def table_changes(
     diff reads 0.2% of the data and the join is keyed on the same
     columns the table is clustered by. Requires both snapshots to
     share the key schema; non-key columns are taken from the newer
-    snapshot (add_columns evolution widens old rows with NULLs, which
-    null-safe compare treats as a change — the CDF convention)."""
+    snapshot, whose schema property both sides are read with
+    (add_columns evolution widens old rows with NULLs, which null-safe
+    compare treats as a change — the CDF convention)."""
     v_to = current_version(root) if v_to is None else v_to
     for v in range(v_from + 1, v_to + 1):
         m = _read_raw(root, v)
@@ -918,24 +1021,23 @@ def table_changes(
     f_to = set(_resolve_files(root, v_to))
     removed = sorted(f_from - f_to)
     added = sorted(f_to - f_from)
-    ref = spark.read.parquet(
-        *(added or removed or _resolve_files(root, v_to))
-    )
-    cols = list(ref.columns)
-    val_cols = [c for c in cols if c not in key_cols]
 
-    def _scan(files: list[str]) -> DataFrame:
+    def side(files: list[str]) -> DataFrame:
+        # an empty side is no rows of the newer snapshot's schema
         if files:
-            return spark.read.parquet(*files).select(*cols)
-        return spark.createDataFrame([], ref.schema).select(*cols)
+            return _scan(spark, root, v_to, files)
+        return _scan(spark, root, v_to, sorted(f_to)).filter(F.lit(False))
 
+    new_rows = side(added)
+    cols = list(new_rows.columns)
+    val_cols = [c for c in cols if c not in key_cols]
     # presence markers, not key-null checks: a legitimately-NULL key
     # value must not misclassify its row (eqNullSafe matches NULLs)
-    old = _scan(removed).select(
+    old = side(removed).select(
         *[F.col(c).alias(f"__o_{c}") for c in cols],
         F.lit(1).alias("__in_old"),
     )
-    new = _scan(added).select(
+    new = new_rows.select(
         *[F.col(c).alias(f"__n_{c}") for c in cols],
         F.lit(1).alias("__in_new"),
     )
@@ -1159,7 +1261,7 @@ def delete_where_mor(
     ones. Returns the committed version."""
     base = current_version(root)
     files, _, prior = _resolve(root, base)
-    live = _live_positions(spark, spark.read.parquet(*files), prior)
+    live = _live_positions(spark, _scan(spark, root, base, files), prior)
     hits = live.filter(F.coalesce(cond, F.lit(False)))
     dv_files = _write_dv_files(
         hits.select("_dv_file", "_dv_pos"), root, base + 1
@@ -1246,7 +1348,7 @@ def merge_upsert_mor(
     files, _, prior = _resolve(root, base)
     _check_unique_keys(updates, key_cols, "merge_upsert_mor")
     keys = updates.select(*key_cols).distinct()
-    live = _live_positions(spark, spark.read.parquet(*files), prior)
+    live = _live_positions(spark, _scan(spark, root, base, files), prior)
     # matched old rows: still-live rows whose key is in the update set
     matched = live.join(F.broadcast(keys), key_cols, "left_semi")
     dv_files = _write_dv_files(
@@ -1322,7 +1424,9 @@ def _cow_base(root: str, what: str) -> tuple[int, list[str]]:
 
 def _source_files(uris: DataFrame, files: list[str]) -> set[str]:
     """Manifest paths of the files named by the one-column relation
-    `uris` of input_file_name() values."""
+    `uris` of `_metadata.file_path` values. The hidden column names
+    the real file even where Spark answers the scan from a cached
+    snapshot of the table."""
     return _manifest_form((r[0] for r in uris.distinct().collect()), files)
 
 
@@ -1343,7 +1447,9 @@ def delete_where(spark: SparkSession, root: str, cond, cdf: bool = False) -> int
     # into the parquet scan, so unaffected files are mostly skipped by
     # row-group stats before they are even read
     affected = _source_files(
-        spark.read.parquet(*files).filter(cond).select(F.input_file_name()),
+        _scan(spark, root, base, files)
+        .filter(cond)
+        .select(F.col("_metadata.file_path")),
         files,
     )
     new_files: list[str] = []
@@ -1353,14 +1459,14 @@ def delete_where(spark: SparkSession, root: str, cond, cdf: bool = False) -> int
         # silently drop NULL-predicate rows from rewritten files while
         # identical rows in untouched files survive — data loss that
         # depends on file co-location. coalesce pins NULL -> keep.
-        rewritten = spark.read.parquet(*sorted(affected)).filter(
+        rewritten = _scan(spark, root, base, sorted(affected)).filter(
             ~F.coalesce(cond, F.lit(False))
         )
         new_files = _write_data_files(rewritten, root)
     change_files: list[str] = []
     if cdf and affected:
         deleted = (
-            spark.read.parquet(*sorted(affected))
+            _scan(spark, root, base, sorted(affected))
             .filter(F.coalesce(cond, F.lit(False)))
             .withColumn("_change_type", F.lit("delete"))
         )
@@ -1618,10 +1724,10 @@ def merge_upsert(
     base, base_files = _cow_base(root, "MERGE")
     _check_unique_keys(updates, key_cols, "merge_upsert")
     keys = updates.select(*key_cols).distinct()
-    # input_file_name() must bind while the plan has ONE source — stamp
-    # it on the snapshot scan BEFORE joining the update keys
-    stamped = spark.read.parquet(*base_files).withColumn(
-        "__f", F.input_file_name()
+    # stamp the file path BEFORE joining the update keys: the join's
+    # output no longer carries the scan's hidden _metadata column
+    stamped = _scan(spark, root, base, base_files).withColumn(
+        "__f", F.col("_metadata.file_path")
     )
     affected = _source_files(
         stamped.join(keys, key_cols, "left_semi").select("__f"), base_files
@@ -1629,7 +1735,7 @@ def merge_upsert(
     new_files: list[str] = []
     matched = None
     if affected:
-        old_rows = spark.read.parquet(*sorted(affected))
+        old_rows = _scan(spark, root, base, sorted(affected))
         survivors = old_rows.join(keys, key_cols, "left_anti")
         new_files += _write_data_files(survivors, root)
         matched = old_rows.join(keys, key_cols, "left_semi")
@@ -1670,8 +1776,8 @@ def optimize(
     # DV-aware read: compaction MATERIALIZES merge-on-read deletes —
     # vector-hidden rows never enter the compacted files, after which
     # the old vectors target only removed files and are inert
-    snap = _apply_dvs(spark, spark.read.parquet(*old_files), dvs)
-    cluster = _table_stats_cols(root, base)[:1]
+    snap = _apply_dvs(spark, _scan(spark, root, base, old_files), dvs)
+    cluster = _table_props(root, base).get("stats_cols", [])[:1]
     snap = (
         snap.repartitionByRange(target_files, *cluster)
         if cluster
@@ -1749,7 +1855,7 @@ def optimize_zorder(
     old_files, _, dvs = _resolve(root, base)
     # DV-aware, like optimize: clustering must not resurrect
     # vector-hidden rows
-    snap = _apply_dvs(spark, spark.read.parquet(*old_files), dvs)
+    snap = _apply_dvs(spark, _scan(spark, root, base, old_files), dvs)
     aggs = []
     for c in cols:
         aggs.append(F.min(c).cast("long").alias(f"_mn_{c}"))
@@ -1791,10 +1897,11 @@ def add_columns(
     spark: SparkSession, root: str, new_df: DataFrame
 ) -> int:
     """Schema evolution by appending a batch with EXTRA columns: old
-    data files keep their narrow schema on disk (never rewritten);
-    snapshots read with mergeSchema so pre-evolution rows surface the
-    new columns as NULL — Delta/Iceberg's add-column semantics, which
-    at 100 TB is the difference between a metadata change and a
+    data files keep their narrow schema on disk (never rewritten); the
+    commit appends the new columns to the table's schema property, and
+    snapshot() reads every file with it, so pre-evolution rows surface
+    the new columns as NULL — Delta/Iceberg's add-column semantics,
+    which at 100 TB is the difference between a metadata change and a
     full-table rewrite. Returns the committed version."""
     base = current_version(root)
     files = _write_data_files(new_df, root)
@@ -1831,7 +1938,8 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
     # committed after the target would otherwise keep hiding rows the
     # restored snapshot must show. Recorded only when it actually
     # changes, so DV-free restores stay file-diffable. Re-added files
-    # bring back their stats (blooms included).
+    # bring back their stats (blooms included), and the table its
+    # properties (the target's schema).
     _commit(
         root,
         head + 1,
@@ -1839,6 +1947,7 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
         add=add,
         remove=sorted(set(cur) - set(tgt)),
         stats={f: tgt_stats[f] for f in add if f in tgt_stats},
+        props=_table_props(root, version),
         dv_reset=tgt_dvs if tgt_dvs != cur_dvs else None,
     )
     return head + 1
@@ -1847,9 +1956,13 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
 def snapshot_merged(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
-    """snapshot() with schema merging across the version's files —
-    needed once add_columns has widened the table."""
+    """snapshot() for a table that add_columns widened. A table with a
+    schema property is read with it (it already holds every column), so
+    this is snapshot(); without one, the files' schemas are merged by
+    a mergeSchema read."""
     v = current_version(root) if version is None else version
+    if "schema" in _table_props(root, v):
+        return snapshot(spark, root, v)
     files, _, dvs = _resolve(root, v)
     return _apply_dvs(
         spark, spark.read.option("mergeSchema", "true").parquet(*files), dvs
@@ -1902,7 +2015,7 @@ def collect_file_blooms(
         pos = (
             spark.read.parquet(*files)
             .select(
-                F.input_file_name().alias("_f"),
+                F.col("_metadata.file_path").alias("_f"),
                 F.explode(_bloom_positions(F.col(c), bits, k)).alias(
                     "_p"
                 ),
@@ -1963,7 +2076,7 @@ def snapshot_bloom_lookup(
     # the probe literal must carry the stored column's exact type
     probe_lit = F.lit(value)
     if files:
-        dtype = spark.read.parquet(files[0]).schema[col].dataType
+        dtype = _scan(spark, root, v, files[:1]).schema[col].dataType
         probe_lit = probe_lit.cast(dtype)
     pos_by_cfg = {}
     for bits, k in configs:
@@ -1985,4 +2098,4 @@ def snapshot_bloom_lookup(
         )
         if hit:
             kept.append(f)
-    return _read_kept(spark, kept, files, dvs, F.col(col) == value)
+    return _read_kept(spark, root, v, kept, files, dvs, F.col(col) == value)

@@ -1041,7 +1041,7 @@ def snk_acid_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/acidtable — Delta/Iceberg's public design re-derived:
     immutable data files, JSON manifest per version, atomic
     link-based commit with optimistic concurrency). The DELETE finds
-    affected files with one input_file_name() scan and rewrites only
+    affected files with one `_metadata.file_path` scan and rewrites only
     those; the new manifest lists rewritten + untouched files. Unlike
     snk_delete_where's whole-table rewrite, the cost is proportional
     to the files the predicate TOUCHES — on a 100 TB table with a

@@ -16,6 +16,7 @@ swallow the trailing windows.
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
@@ -396,6 +397,7 @@ def stream_watermark_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         import time as _time
 
         deadline = _time.time() + 60
+        wmk = ""
         while _time.time() < deadline:
             p = q.lastProgress
             wmk = (p or {}).get("eventTime", {}).get("watermark", "")
@@ -403,6 +405,14 @@ def stream_watermark_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             _time.sleep(0.3)
             q.processAllAvailable()
+        else:
+            # the final windows may not have been evicted: say so
+            # rather than return a possibly short result silently
+            logging.getLogger(__name__).warning(
+                "stream_watermark_disorder: gave up after 60 s waiting "
+                "for the flush watermark; last watermark seen %r",
+                wmk,
+            )
         q.processAllAvailable()
         q.stop()
     finally:
