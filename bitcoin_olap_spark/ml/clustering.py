@@ -178,45 +178,39 @@ def lloyd_fixed(
     internally). Empty clusters keep their previous centroid. The
     recurrence is deliberately SQL-expressible: floor division is the
     sign-safe pmod form, so an unrolled-CTE oracle replays it
-    exactly. `base` must carry (id_col, xq).
-
-    The driver-loop jobs run under session.bounded_reduce: every
-    reduce here is <= k*dim groups however large the corpus, so one
-    reduce partition with no adaptive re-planning is the right shape
-    at any scale (the map side stays wide)."""
+    exactly. `base` must carry (id_col, xq). Every reduce here is
+    <= k*dim groups however large the corpus, and AQE coalesces its
+    shuffle to one partition."""
     from ..operators.vectors import lloyd_partials_arrow
-    from ..session import bounded_reduce
 
-    spark = base.sparkSession
-    with bounded_reduce(spark):
-        seeds = base.orderBy(id_col).limit(k).collect()
-        if len(seeds) < k:
-            raise ValueError(
-                f"lloyd_fixed: corpus has only {len(seeds)} vectors but "
-                f"k={k}; reduce k to at most the corpus size"
-            )
-        cents = [list(r["xq"]) for r in seeds]
-        for _ in range(iters):
-            # one job per iteration: the Arrow combine emits <= k*dim
-            # partial rows per chunk, the reduce SUMs them — integer
-            # addition is associative, so the totals equal the
-            # oracle's direct per-(cid, j) SUM bit for bit
-            sums = (
-                lloyd_partials_arrow(base, cents, k)
-                .groupBy("cid", "j")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-            got = {(int(r["cid"]), int(r["j"])): r for r in sums}
-            cents = [
-                [
-                    int(got[(c, j)]["s"]) // int(got[(c, j)]["n"])
-                    if (c, j) in got
-                    else cents[c][j]
-                    for j in range(dim)
-                ]
-                for c in range(k)
+    seeds = base.orderBy(id_col).limit(k).collect()
+    if len(seeds) < k:
+        raise ValueError(
+            f"lloyd_fixed: corpus has only {len(seeds)} vectors but "
+            f"k={k}; reduce k to at most the corpus size"
+        )
+    cents = [list(r["xq"]) for r in seeds]
+    for _ in range(iters):
+        # one job per iteration: the Arrow combine emits <= k*dim
+        # partial rows per chunk, the reduce SUMs them — integer
+        # addition is associative, so the totals equal the
+        # oracle's direct per-(cid, j) SUM bit for bit
+        sums = (
+            lloyd_partials_arrow(base, cents, k)
+            .groupBy("cid", "j")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .collect()
+        )
+        got = {(int(r["cid"]), int(r["j"])): r for r in sums}
+        cents = [
+            [
+                int(got[(c, j)]["s"]) // int(got[(c, j)]["n"])
+                if (c, j) in got
+                else cents[c][j]
+                for j in range(dim)
             ]
+            for c in range(k)
+        ]
     return cents
 
 
@@ -234,37 +228,34 @@ def pq_lloyd_fixed(
     every subspace exactly. Returns (k, dim) integer codewords; row
     c's subspace-s slice is codeword c of subspace s."""
     from ..operators.vectors import pq_lloyd_partials_arrow
-    from ..session import bounded_reduce
 
     sub = dim // m
-    spark = base.sparkSession
-    with bounded_reduce(spark):
-        seeds = base.orderBy(id_col).limit(k).collect()
-        if len(seeds) < k:
-            raise ValueError(
-                f"pq_lloyd_fixed: corpus has only {len(seeds)} vectors "
-                f"but k={k}; reduce k to at most the corpus size"
-            )
-        cents = [list(r["xq"]) for r in seeds]
-        for _ in range(iters):
-            sums = (
-                pq_lloyd_partials_arrow(base, cents, k, m)
-                .groupBy("sub", "cid", "jj")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-            got = {
-                (int(r["sub"]), int(r["cid"]), int(r["jj"])): r
-                for r in sums
-            }
-            cents = [
-                [
-                    int(got[(j // sub, c, j % sub)]["s"])
-                    // int(got[(j // sub, c, j % sub)]["n"])
-                    if (j // sub, c, j % sub) in got
-                    else cents[c][j]
-                    for j in range(dim)
-                ]
-                for c in range(k)
+    seeds = base.orderBy(id_col).limit(k).collect()
+    if len(seeds) < k:
+        raise ValueError(
+            f"pq_lloyd_fixed: corpus has only {len(seeds)} vectors "
+            f"but k={k}; reduce k to at most the corpus size"
+        )
+    cents = [list(r["xq"]) for r in seeds]
+    for _ in range(iters):
+        sums = (
+            pq_lloyd_partials_arrow(base, cents, k, m)
+            .groupBy("sub", "cid", "jj")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .collect()
+        )
+        got = {
+            (int(r["sub"]), int(r["cid"]), int(r["jj"])): r
+            for r in sums
+        }
+        cents = [
+            [
+                int(got[(j // sub, c, j % sub)]["s"])
+                // int(got[(j // sub, c, j % sub)]["n"])
+                if (j // sub, c, j % sub) in got
+                else cents[c][j]
+                for j in range(dim)
             ]
+            for c in range(k)
+        ]
     return cents

@@ -18,7 +18,6 @@ from ..functions import ORACLE_DAY, day, exact_sum, oracle_exact_sum
 from ..ml import loglog_ols_exact, loglog_ols_ml
 from ..ml.regression import ORACLE_OLS
 from ..registry import query
-from ..session import bounded_reduce
 
 
 def _fdiv_sql(a: str, b: str) -> str:
@@ -1142,36 +1141,34 @@ def ml_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     vname = "__ml_logreg_base"
     base.createOrReplaceTempView(vname)
     w = [0] * _LR_DIM
-    # the per-iteration reduce is 65 groups however large the corpus:
-    # bounded_reduce sizes the loop's jobs for that (1 reduce
-    # partition, no adaptive re-planning) — the map side stays as wide
-    # as the data; confs restore before the returned plan runs
-    with bounded_reduce(spark):
-        for _ in range(_LR_ITERS):
-            # ONE job per iteration: posexplode the feature array and
-            # reduce to (j, sum(xv*eh), count) — a narrow n*dim
-            # exchange with map-side partials and a 65-row result.
-            # count(*) per j IS the corpus size, so no separate count
-            # job runs. (The 65-separate-SUM-columns formulation
-            # computes the same thing with zero shuffle but pays
-            # ~0.5 s of Catalyst/codegen per iteration on a 65-wide
-            # aggregate — measured slower below ~10M rows; at larger
-            # scale flip back to the wide-agg form.)
-            grad = spark.sql(
-                f"""
-                SELECT j, SUM(xv * eh) AS g, COUNT(*) AS n FROM (
-                  SELECT eh, posexplode(xq) AS (j, xv) FROM (
-                    SELECT xq, CAST({eh_expr} AS BIGINT) AS eh FROM (
-                      SELECT xq, y, {margin_sql(w)} AS z
-                      FROM {vname})))
-                GROUP BY j"""
-            ).collect()
-            n = int(grad[0]["n"])
-            gd = {int(r["j"]): int(r["g"]) for r in grad}
-            # Python // floors like the SQL fdiv; 65 longs of control
-            # plane per iteration, the same bounded-collect pattern as
-            # pagerank's convergence scalar
-            w = [w[j] - (gd[j] // (n * S)) for j in range(_LR_DIM)]
+    # the per-iteration reduce is 65 groups however large the corpus;
+    # AQE coalesces it to one partition while the map side stays as
+    # wide as the data
+    for _ in range(_LR_ITERS):
+        # ONE job per iteration: posexplode the feature array and
+        # reduce to (j, sum(xv*eh), count) — a narrow n*dim
+        # exchange with map-side partials and a 65-row result.
+        # count(*) per j IS the corpus size, so no separate count
+        # job runs. (The 65-separate-SUM-columns formulation
+        # computes the same thing with zero shuffle but pays
+        # ~0.5 s of Catalyst/codegen per iteration on a 65-wide
+        # aggregate — measured slower below ~10M rows; at larger
+        # scale flip back to the wide-agg form.)
+        grad = spark.sql(
+            f"""
+            SELECT j, SUM(xv * eh) AS g, COUNT(*) AS n FROM (
+              SELECT eh, posexplode(xq) AS (j, xv) FROM (
+                SELECT xq, CAST({eh_expr} AS BIGINT) AS eh FROM (
+                  SELECT xq, y, {margin_sql(w)} AS z
+                  FROM {vname})))
+            GROUP BY j"""
+        ).collect()
+        n = int(grad[0]["n"])
+        gd = {int(r["j"]): int(r["g"]) for r in grad}
+        # Python // floors like the SQL fdiv; 65 longs of control
+        # plane per iteration, the same bounded-collect pattern as
+        # pagerank's convergence scalar
+        w = [w[j] - (gd[j] // (n * S)) for j in range(_LR_DIM)]
     out = spark.sql(
         f"""
         SELECT label, prediction, COUNT(*) AS n FROM (
@@ -1536,26 +1533,25 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vname = "__ml_pca_base"
     base.createOrReplaceTempView(vname)
-    with bounded_reduce(spark):
-        for _ in range(_PCA_ITERS - 1):
-            w = spark.sql(
-                f"""
-                SELECT j, SUM(xv * u) AS w FROM (
-                  SELECT CAST({fd_u} AS BIGINT) AS u,
-                         posexplode(xq) AS (j, xv) FROM (
-                    SELECT xq, {u_expr(v)} AS u_raw FROM {vname}))
-                GROUP BY j"""
-            ).collect()
-            wd = {int(r["j"]): int(r["w"]) for r in w}
-            wmax = max(abs(x) for x in wd.values())
-            if wmax == 0:
-                raise ValueError(
-                    "ml_pca_power: X^T X v is the zero vector — the "
-                    "corpus has no variance along any direction "
-                    "(all-zero embeddings?); power iteration is "
-                    "undefined on a zero matrix"
-                )
-            v = [(wd[j] * _PCA_VS) // wmax for j in range(64)]
+    for _ in range(_PCA_ITERS - 1):
+        w = spark.sql(
+            f"""
+            SELECT j, SUM(xv * u) AS w FROM (
+              SELECT CAST({fd_u} AS BIGINT) AS u,
+                     posexplode(xq) AS (j, xv) FROM (
+                SELECT xq, {u_expr(v)} AS u_raw FROM {vname}))
+            GROUP BY j"""
+        ).collect()
+        wd = {int(r["j"]): int(r["w"]) for r in w}
+        wmax = max(abs(x) for x in wd.values())
+        if wmax == 0:
+            raise ValueError(
+                "ml_pca_power: X^T X v is the zero vector — the "
+                "corpus has no variance along any direction "
+                "(all-zero embeddings?); power iteration is "
+                "undefined on a zero matrix"
+            )
+        v = [(wd[j] * _PCA_VS) // wmax for j in range(64)]
     wfin = spark.sql(
         f"""
         SELECT j, SUM(xv * u) AS w FROM (

@@ -131,35 +131,12 @@ def stream_stateful_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states — but the streaming form keeps numbering correctly
     as new micro-batches arrive, which no batch window can.
 
-    State partitioning scales with INPUT VOLUME (r11): the r10 fixed
-    16 was A/B-picked at sf0.1 (8 -> 2.07 s, 16 -> 1.60 s, 32 ->
-    1.91 s, 64 -> 2.74 s — per-partition Arrow round-trip overhead
-    dominates small inputs), but the same A/B at sf3 inverts (16 ->
-    18.7 s, 32 -> 12.7 s, 64 -> 12.1 s — Python-worker throughput
-    dominates once partitions carry ~MMs of rows). The rule below
-    steps 16 -> 32 -> 64 on the events table's on-disk bytes, i.e.
-    fuller partitions until the stateful worker saturates, then
-    parallelism — at cluster scale this is 'state partitions ~ total
-    input / per-worker Arrow sweet spot, capped by cores', the same
-    sizing rule Spark's own state store docs give."""
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    try:
-        sz = (
-            os.path.getsize(ev_path)
-            if os.path.isfile(ev_path)
-            else sum(
-                os.path.getsize(os.path.join(ev_path, f))
-                for f in os.listdir(ev_path)
-                if f.endswith(".parquet")
-            )
-        )
-    except OSError:
-        sz = 0
-    n = 16 if sz < 32 << 20 else (32 if sz < 128 << 20 else 64)
+    State partitions follow spark.sql.shuffle.partitions: the core
+    count locally, sized by the deployment on a cluster, as Spark's
+    state-store docs prescribe."""
     return run_to_batch(
         running_user_sequence(stream_events(spark, sf_dir)),
         spark,
-        n_partitions=n,
         sink="parquet",
     )
 
@@ -263,7 +240,7 @@ def stream_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk's offset — a pull-based simple reader advances its offset one
     `read` at a time), stopping once the feed stops advancing."""
     from ..sources.blockfeed import register_blockfeed
-    from ..streaming.pipeline import _MEMSINK_SEQ, _few_state_partitions
+    from ..streaming.pipeline import _MEMSINK_SEQ, _drain_memory_sink
 
     register_blockfeed(spark)
     feed = (
@@ -273,20 +250,16 @@ def stream_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     name = f"stream_sink_{next(_MEMSINK_SEQ)}"
-    with _few_state_partitions(spark):
-        q = (
-            feed.filter(F.col("n_tx") >= 50)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    # compact + drop the memory sink (see streaming/pipeline.run_to_batch)
-    out = spark.table(name).localCheckpoint()
-    spark.catalog.dropTempView(name)
-    return out
+    q = (
+        feed.filter(F.col("n_tx") >= 50)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return _drain_memory_sink(spark, name)
 
 
 @query(
@@ -354,7 +327,7 @@ def stream_watermark_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard watermarked shuffle — the fixture's 601 slots exercise
     the semantics; volume rides the same plan as stream_daily_agg."""
     from ..sources.blockfeed import register_blockfeed
-    from ..streaming.pipeline import _MEMSINK_SEQ, _few_state_partitions
+    from ..streaming.pipeline import _MEMSINK_SEQ, _drain_memory_sink
 
     register_blockfeed(spark)
     feed = (
@@ -374,52 +347,38 @@ def stream_watermark_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("window.start").alias("w_start"), "n", "fees")
     )
     name = f"stream_sink_{next(_MEMSINK_SEQ)}"
-    # NOT _few_state_partitions: that helper disables noDataMicroBatches
-    # (its own docstring carves out append-mode aggregation), and this
-    # query's LAST real windows are evicted precisely by the no-data
-    # batch that follows the flush row — with it disabled, batch 4 runs
-    # but emits nothing and the final window is silently lost (observed
-    # before this comment was written). Only the state-partition tuning
-    # is replicated here.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        # the no-data eviction batch races processAllAvailable's
-        # return — wait until a progress entry reports the
-        # flush-driven watermark before stopping
-        import time as _time
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .start()
+    )
+    q.processAllAvailable()
+    # the no-data eviction batch races processAllAvailable's
+    # return — wait until a progress entry reports the
+    # flush-driven watermark before stopping
+    import time as _time
 
-        deadline = _time.time() + 60
-        wmk = ""
-        while _time.time() < deadline:
-            p = q.lastProgress
-            wmk = (p or {}).get("eventTime", {}).get("watermark", "")
-            if wmk >= "2021-01-02":
-                break
-            _time.sleep(0.3)
-            q.processAllAvailable()
-        else:
-            # the final windows may not have been evicted: say so
-            # rather than return a possibly short result silently
-            logging.getLogger(__name__).warning(
-                "stream_watermark_disorder: gave up after 60 s waiting "
-                "for the flush watermark; last watermark seen %r",
-                wmk,
-            )
+    deadline = _time.time() + 60
+    wmk = ""
+    while _time.time() < deadline:
+        p = q.lastProgress
+        wmk = (p or {}).get("eventTime", {}).get("watermark", "")
+        if wmk >= "2021-01-02":
+            break
+        _time.sleep(0.3)
         q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    out = spark.table(name).localCheckpoint()
-    spark.catalog.dropTempView(name)
-    return out
+    else:
+        # the final windows may not have been evicted: say so
+        # rather than return a possibly short result silently
+        logging.getLogger(__name__).warning(
+            "stream_watermark_disorder: gave up after 60 s waiting "
+            "for the flush watermark; last watermark seen %r",
+            wmk,
+        )
+    q.processAllAvailable()
+    q.stop()
+    return _drain_memory_sink(spark, name)
 
 
 @query(

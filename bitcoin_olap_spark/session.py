@@ -11,7 +11,12 @@ Scale posture (100 TB / 1000-executor design, tested on local[32]):
   timezone-naive DuckDB oracle regardless of host TZ.
 - shuffle.partitions defaults to the local core count; on a real
   cluster this is overridden (and AQE coalescing makes the initial
-  number less critical).
+  number less critical). Streaming state partitions follow it too.
+
+`tune_session` is the only place the package writes SQL conf. A
+session is shared by every thread that plans on it, so no query,
+loop or stream changes a conf mid-flight: iterative ML and streams
+run under the same tuned conf as the SQL around them.
 """
 
 from __future__ import annotations
@@ -22,8 +27,7 @@ import shutil
 
 from pyspark.sql import SparkSession
 
-#: Runtime-settable confs applied even to an externally owned session
-#: (the verify driver owns the session passed into `queries()`).
+
 def scratch_root(kind: str) -> str:
     """Process-scoped scratch directory, on tmpfs when the host has one.
 
@@ -49,6 +53,8 @@ def scratch_root(kind: str) -> str:
 _SCRATCH_DIRS: set[str] = set()
 
 
+#: Runtime-settable confs applied even to an externally owned session
+#: (the verify driver owns the session passed into `queries()`).
 RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -108,7 +114,6 @@ def default_parallelism() -> int:
 def get_spark(
     app_name: str = "bitcoin-olap-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine."""
     cpus = default_parallelism()
@@ -116,7 +121,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
@@ -141,32 +145,6 @@ def get_spark(
     spark = builder.getOrCreate()
     tune_session(spark)
     return spark
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def bounded_reduce(spark: SparkSession, partitions: int = 1):
-    """Scope for an iterative op's driver-loop jobs whose reduce side
-    has BOUNDED cardinality (a gradient of 65 longs, k*dim centroid
-    sums): one reduce partition is the correct shape at ANY corpus
-    size — the map side stays as wide as the data, only the final
-    merge of a few dozen groups is single-task — and adaptive
-    re-planning has nothing to adapt on a fixed two-stage aggregate,
-    it only adds per-stage scheduling (measured: ml_logreg's 4-job
-    loop 1.19 s -> 0.73 s with AQE off + 1 reduce partition at
-    sf0.1). Restores both confs on exit, so the surrounding query
-    plans (joins, wide shuffles) keep AQE."""
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

@@ -12,7 +12,6 @@ from __future__ import annotations
 import itertools
 import os
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,41 +26,17 @@ SESSION_GAP = "30 minutes"
 _MEMSINK_SEQ = itertools.count()
 
 
-@contextmanager
-def _few_state_partitions(spark: SparkSession, n: int = 8):
-    """Tune the session for the one-shot availableNow runs here.
-
-    - shuffle.partitions=8: streaming state partition count is pinned
-      by shuffle.partitions at FIRST query start (then baked into the
-      checkpoint); every state partition costs a state-store instance +
-      task per micro-batch. For one-shot runs 8 is plenty; a long-lived
-      production stream sizes this to key cardinality x executor count
-      up front (it cannot be changed without a new checkpoint).
-    - noDataMicroBatches=false: by default a stateful query runs one
-      extra EMPTY micro-batch after the data is drained so
-      watermark-gated state can emit/evict — measured at ~1.3 s of pure
-      overhead on the stream-stream join. Every operator in this module
-      emits without needing it: windowed/session aggregates run in
-      COMPLETE mode (emit every batch), inner stream-stream joins emit
-      eagerly on match, dedup emits on first arrival, and
-      applyInPandasWithState emits per input batch. A query using
-      append-mode aggregation or state timeouts would need it back on.
-    """
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", old_nodata
-        )
+def _drain_memory_sink(spark: SparkSession, name: str) -> DataFrame:
+    """Compact memory sink `name` into checkpoint blocks, drop its
+    table and return the blocks. MemorySink holds its rows as
+    driver-heap Row arrays for the session's lifetime, and a suite
+    that runs many streaming queries accumulates hundreds of MB of
+    them — measured as multi-second GC spikes hitting whichever query
+    runs next. Checkpoint blocks are GC'd once the returned DataFrame
+    goes out of scope."""
+    out = spark.table(name).localCheckpoint()
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,17 +260,13 @@ def run_to_batch(
     sdf: DataFrame,
     spark: SparkSession,
     mode: str = "append",
-    n_partitions: int = 8,
     sink: str = "memory",
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow);
     return the batch result. Aggregations pass mode='complete' so
     windows still open at end-of-stream (watermark never passes the
-    final window on a finite input) are emitted. `n_partitions` sizes
-    the state/shuffle partitioning: 8 suits the JVM-side operators
-    (state-store instances are the cost); Python stateful operators
-    (applyInPandasWithState) pass more — their bottleneck is
-    Python-worker throughput, which scales with partitions.
+    final window on a finite input) are emitted. State partitions
+    follow spark.sql.shuffle.partitions at the query's first start.
 
     sink='parquet' (append mode only) lands micro-batches
     EXECUTOR-SIDE and returns a distributed read-back — the right
@@ -315,18 +286,15 @@ def run_to_batch(
             prefix="stream_land_", dir=scratch_root("sink")
         )
         data = os.path.join(root, "data")
-        with _few_state_partitions(spark, n_partitions):
-            q = (
-                sdf.writeStream.format("parquet")
-                .option("path", data)
-                .option(
-                    "checkpointLocation", os.path.join(root, "_ckpt")
-                )
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = (
+            sdf.writeStream.format("parquet")
+            .option("path", data)
+            .option("checkpointLocation", os.path.join(root, "_ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         # an all-filtered / empty stream writes no data files — detect
         # that case explicitly rather than catching read errors, which
         # would silently turn a corrupt/evicted landing into an empty
@@ -337,25 +305,15 @@ def run_to_batch(
             return spark.createDataFrame([], sdf.schema)
         return spark.read.parquet(data)
     name = f"stream_sink_{next(_MEMSINK_SEQ)}"
-    with _few_state_partitions(spark, n_partitions):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # compact the sink into serialized checkpoint blocks and DROP the
-    # memory-sink table: MemorySink holds its rows as driver-heap Row
-    # arrays for the session's lifetime, and a suite that runs many
-    # streaming queries accumulates hundreds of MB of them — measured
-    # as multi-second GC spikes hitting whichever query runs next.
-    # Checkpoint blocks are GC'd once the returned DataFrame goes out
-    # of scope.
-    out = spark.table(name).localCheckpoint()
-    spark.catalog.dropTempView(name)
-    return out
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return _drain_memory_sink(spark, name)
 
 
 def ingest_to_parquet(
@@ -366,17 +324,16 @@ def ingest_to_parquet(
     free; replaces the reference's manual pre/post-SAFE split). Runs to
     completion with availableNow and returns the read-back dataset."""
     with_day = events.withColumn("day", F.to_date("ts"))
-    with _few_state_partitions(spark):
-        q = (
-            with_day.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-            .partitionBy("day")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        with_day.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
+        .partitionBy("day")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return spark.read.parquet(out_dir)
 
 
@@ -435,16 +392,13 @@ def upsert_foreachbatch(
         else:
             agg.write.mode("overwrite").parquet(state_path)
 
-    with _few_state_partitions(spark):
-        q = (
-            events.writeStream.foreachBatch(upsert)
-            .option(
-                "checkpointLocation", os.path.join(target_dir, "_ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        events.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", os.path.join(target_dir, "_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     got = spark.read.parquet(state_path)
     return got.select(
         "user_id",

@@ -15,7 +15,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from bitcoin_olap_spark.session import get_spark
 
-    spark = get_spark(app_name="bitcoin-olap-spark-tests", shuffle_partitions=8)
+    spark = get_spark(app_name="bitcoin-olap-spark-tests")
     yield spark
     spark.stop()
 
