@@ -4367,7 +4367,7 @@ def ml_als(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer grid so the cross-engine compare stays exact — the
     ml_kmeans_lloyd/ml_logreg posture applied to factorization.
 
-    Measured r7 (tools/scale_bench_sf1.py): 7.76x at sf0.1 -> 5.30x
+    Measured r7 (warm pass + min of 3): 7.76x at sf0.1 -> 5.30x
     at sf1 (duck 0.784 / spark 4.156 s); the first r8 pass added the
     asked-for third point (5.12x at sf3, duck 2.386 / spark 12.217 s
     — flat, the exchange-tax class). Late r8 then FUSED the first

@@ -3727,8 +3727,8 @@ def sim_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executor-distributed, so pinning each tier to exactly one
     # execution is the right trade at every scale. NOTE the eager
     # checkpoint runs both tiers at CONSTRUCTION time — a plan-only
-    # caller (capture_plan / explain tests) pays the full tier
-    # computation. Measured interleaved at sf0.1 (min of 5):
+    # caller (explain tests) pays the full tier computation.
+    # Measured interleaved at sf0.1 (min of 5):
     # 9.19 -> 3.78 s.
     truth = dedup_ngram_jaccard(spark, sf_dir).select(
         "doc_a", "doc_b"

@@ -29,6 +29,11 @@ def test_oracle_parity(qid, spark, duck):
         return
     ddf = duck.execute(spec.oracle).df()
     compare(sdf, ddf, qid)
+    # compare's toPandas ran sdf's own QueryExecution, so this is the
+    # final adaptive plan (AQE re-plans joins at runtime); reading it
+    # starts no job.
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan, f"{qid}: {plan}"
 
 
 def test_entry_smoke(spark):

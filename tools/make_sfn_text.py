@@ -1,14 +1,13 @@
 """Synthesize a VOCABULARY-REALISTIC documents corpus for the text-
 family scale evidence (text_pmi, text_bpe_*, text_tfidf, ...).
 
-Why this exists (r10 verdict, missing #1): every sfN decade built by
-make_sfn.py is key-shifted COPIES of sf0.1. That is the right fan-out
-model for relational operators (joins fan out at unchanged
-selectivity), but for vocabulary-grain text statistics it distorts
-the measurement — the 100-copy corpus grows the vocabulary by copy
-prefixes instead of by Heaps' law, so the vocab-grain exchanges that
-dominate text_pmi / BPE scale on an artifact of the fixture, not on
-how a real corpus grows.
+Why this exists (r10 verdict, missing #1): a corpus scaled up as
+key-shifted COPIES of sf0.1 is the right fan-out model for relational
+operators (joins fan out at unchanged selectivity), but for
+vocabulary-grain text statistics it distorts the measurement — the
+100-copy corpus grows the vocabulary by copy prefixes instead of by
+Heaps' law, so the vocab-grain exchanges that dominate text_pmi / BPE
+scale on an artifact of the fixture, not on how a real corpus grows.
 
 This generator samples tokens i.i.d. from a bounded TWO-REGIME Zipf
 distribution (rank-frequency P(r) ~ 1/r^s1 for the ~30k-rank core
@@ -28,23 +27,15 @@ gives text_pmi a real signal: collocation frequency itself follows
 Zipf, so the PMI top-k is non-degenerate.
 
 Output: <out_dir>/documents.parquet with the driver schema
-(doc_id, text, lang, source, n_chars), 50k-row row groups
+(doc_id, text, lang, source, n_chars), 5k-row row groups
 (splittable scans — the spread-layout posture of r10's re-baseline),
 streamed chunk-at-a-time so sf100-equivalents never hold the corpus
 in memory. Deterministic for a given (sf, seed): both engines read
 the same file, so oracle parity is preserved by construction.
-
-Scale contract matches make_sf1/make_sfn: sf1 = 50_000 docs (10x
-sf0.1's 5_000), so text-sfN directories slot into the same decade
-ladder (sf1/sf3/sf10/...) of BASELINE.md's scaling tables.
+sf1 = 50_000 docs (10x sf0.1's 5_000).
 
 Usage: python tools/make_sfn_text.py <sf> <out_dir>
-  e.g.  python tools/make_sfn_text.py 10 text_sf10_data
-
-Measure with: SCALE_BENCH_DIR=<out_dir> python \
-  tools/scale_bench_sf1.py 3 text_pmi text_bpe_train ...
-(text-family queries read only the documents table; the harness
-registers whatever tables exist in the dir.)
+  e.g.  python tools/make_sfn_text.py 10 /tmp/text_sf10
 """
 
 from __future__ import annotations
