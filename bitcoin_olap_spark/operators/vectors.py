@@ -700,15 +700,17 @@ def ivf_topk_exact(
     from ..ml.clustering import lloyd_fixed, quantize_fixed
 
     K = n_centroids
-    base = quantize_fixed(corpus, id_col, vec_col).persist()
-    try:
-        if centroids is None:
-            # `centroids` is the quantizer seam: an IVF quantizer is an
-            # OFFLINE artifact in production — trained once when the
-            # index is built, reused by every query against it — so
-            # callers memoize the trained integer centroids (k*dim longs
-            # of control-plane data) and only the first execution pays
-            # the Lloyd iterations
+    base = quantize_fixed(corpus, id_col, vec_col)
+    if centroids is None:
+        # `centroids` is the quantizer seam: an IVF quantizer is an
+        # OFFLINE artifact in production — trained once when the
+        # index is built, reused by every query against it — so
+        # callers memoize the trained integer centroids (k*dim longs
+        # of control-plane data) and only the first execution pays
+        # the Lloyd iterations. Only training reads `base` more than
+        # once, so only training caches it.
+        base.persist()
+        try:
             probe = base.first()
             if probe is None:
                 raise ValueError(
@@ -718,9 +720,8 @@ def ivf_topk_exact(
                 )
             dim = len(probe["xq"])
             centroids = lloyd_fixed(base, id_col, K, iters, dim)
-    except Exception:
-        base.unpersist()
-        raise
+        finally:
+            base.unpersist()
     cents = centroids
     lists = assign_fixed_arrow(
         base, id_col, cents, K, keep_cols=(vec_col,)
@@ -760,9 +761,7 @@ def ivf_topk_exact(
             .cast("long"),
         )
     )
-    out = scored.filter(F.col("rank") <= k)
-    base.unpersist()
-    return out
+    return scored.filter(F.col("rank") <= k)
 
 
 def pq_codes_arrow(

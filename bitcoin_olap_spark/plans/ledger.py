@@ -44,78 +44,76 @@ SPLIT_TS = "1995-06-17 00:00:00"
 _STRUCT_T = "array<struct<value:bigint,addresses:array<string>>>"
 
 
+#: FIXTURES.md §A1 as SQL projections over `orders`: the oracle's
+#: `base` and `tx` CTEs (`queries.pipeline._E2E_ORACLE`)
+_BASE = (
+    "o_orderkey AS k",
+    "o_orderdate",
+    "CAST(floor(o_totalprice * 100) AS BIGINT) AS sat",
+    "concat('a', CAST((o_orderkey * 2 + 1) % 2000 AS STRING)) AS a1",
+    "concat('a', CAST((o_orderkey * 3 + 2) % 2000 AS STRING)) AS a2",
+)
+_TX = (
+    "CAST(k AS STRING) AS hash",
+    "o_orderdate AS block_timestamp",
+    f"""CASE WHEN k % 97 = 0 THEN CAST(array() AS {_STRUCT_T})
+        WHEN k % 2 = 0
+        THEN array(named_struct('value', sat + 1, 'addresses', array(a1)))
+        ELSE array(named_struct('value', sat + 1, 'addresses', array(a1)),
+                   named_struct('value', sat + 2, 'addresses', array(a1, a2)))
+        END AS inputs""",
+    f"""CASE WHEN k % 89 = 0 THEN CAST(array() AS {_STRUCT_T})
+        WHEN k % 3 = 0
+        THEN array(named_struct('value', sat + 3, 'addresses', array(a2)))
+        ELSE array(named_struct('value', sat + 3, 'addresses', array(a2)),
+                   named_struct('value', sat + 4, 'addresses', array(a2, a1)))
+        END AS outputs""",
+)
+#: §A3/§A4 over `customer`: the oracle's `addr_raw` and `wloc` CTEs
+_PAIR = (
+    "concat('w', CAST((c_custkey * 7) % 50 AS STRING)) AS wallet",
+    "concat('a', CAST(c_custkey % 1999 AS STRING)) AS address",
+)
+_WLOC = (
+    "concat('w', CAST(wid AS STRING)) AS wallet",
+    "CASE wid % 7 WHEN 0 THEN 'China' WHEN 1 THEN 'Russia' WHEN 2 THEN 'US' "
+    "WHEN 3 THEN '?' WHEN 4 THEN CAST(NULL AS STRING) "
+    "WHEN 5 THEN 'Brazil,Zibralter,Mexico' ELSE 'Germany' END AS location",
+)
+
+
 def bitcoin_fixtures(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(transactions, address_table_with_dupes, wallet_location) —
-    FIXTURES.md §A1/§A3/§A4 derived deterministically from
+    FIXTURES.md §A1/§A3/§A4 (the spec) derived deterministically from
     orders/customer. Array lengths vary 0..2 (empty arrays pin
     explode-vs-explode_outer semantics, SURVEY.md §4 last para);
     address_table carries exact duplicate pairs (every 5th customer
-    re-added) to exercise the dedup stage."""
-    o = table(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    sat = F.floor(F.col("o_totalprice") * 100).cast("long")
-    a1 = F.concat(F.lit("a"), ((k * 2 + 1) % 2000).cast("string"))
-    a2 = F.concat(F.lit("a"), ((k * 3 + 2) % 2000).cast("string"))
-    in1 = F.struct((sat + 1).alias("value"), F.array(a1).alias("addresses"))
-    in2 = F.struct(
-        (sat + 2).alias("value"), F.array(a1, a2).alias("addresses")
-    )
-    out1 = F.struct((sat + 3).alias("value"), F.array(a2).alias("addresses"))
-    out2 = F.struct(
-        (sat + 4).alias("value"), F.array(a2, a1).alias("addresses")
-    )
-    empty = F.array().cast(_STRUCT_T)
-    inputs = (
-        F.when(k % 97 == 0, empty)
-        .when(k % 2 == 0, F.array(in1))
-        .otherwise(F.array(in1, in2))
-    )
-    outputs = (
-        F.when(k % 89 == 0, empty)
-        .when(k % 3 == 0, F.array(out1))
-        .otherwise(F.array(out1, out2))
-    )
-    tx = o.select(
-        k.cast("string").alias("hash"),
-        F.col("o_orderdate").alias("block_timestamp"),
-        inputs.alias("inputs"),
-        outputs.alias("outputs"),
-        F.size(inputs).cast("long").alias("input_count"),
-        F.size(outputs).cast("long").alias("output_count"),
-    )
+    re-added) to exercise the dedup stage.
 
+    Each fixture is a few `selectExpr` projections that mirror the
+    DuckDB oracle's `base`/`tx`/`addr_raw`/`wloc` CTEs. Each
+    projection is one py4j call; the same expressions built as about
+    a hundred Column objects took at least one call each."""
+    tx = (
+        table(spark, sf_dir, "orders")
+        .selectExpr(*_BASE)
+        .selectExpr(*_TX)
+        .selectExpr(
+            "*",
+            "CAST(size(inputs) AS BIGINT) AS input_count",
+            "CAST(size(outputs) AS BIGINT) AS output_count",
+        )
+    )
     c = table(spark, sf_dir, "customer")
-    ck = F.col("c_custkey")
-    pair = c.select(
-        F.concat(F.lit("w"), ((ck * 7) % 50).cast("string")).alias("wallet"),
-        F.concat(F.lit("a"), (ck % 1999).cast("string")).alias("address"),
+    addr_raw = c.selectExpr(*_PAIR).unionByName(
+        c.where("c_custkey % 5 = 0").selectExpr(*_PAIR)
     )
-    addr_raw = pair.unionByName(
-        c.filter(ck % 5 == 0).select(
-            F.concat(F.lit("w"), ((ck * 7) % 50).cast("string")).alias(
-                "wallet"
-            ),
-            F.concat(F.lit("a"), (ck % 1999).cast("string")).alias("address"),
-        )
-    )
-
-    wid = F.col("wid")
     wloc = (
-        c.select(((ck * 7) % 50).alias("wid"))
+        c.selectExpr("(c_custkey * 7) % 50 AS wid")
         .distinct()
-        .select(
-            F.concat(F.lit("w"), wid.cast("string")).alias("wallet"),
-            F.when(wid % 7 == 0, "China")
-            .when(wid % 7 == 1, "Russia")
-            .when(wid % 7 == 2, "US")
-            .when(wid % 7 == 3, "?")
-            .when(wid % 7 == 4, F.lit(None).cast("string"))
-            .when(wid % 7 == 5, "Brazil,Zibralter,Mexico")
-            .otherwise("Germany")
-            .alias("location"),
-        )
+        .selectExpr(*_WLOC)
     )
     return tx, addr_raw, wloc
 

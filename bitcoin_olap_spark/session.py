@@ -17,11 +17,25 @@ Scale posture (100 TB / 1000-executor design, tested on local[32]):
 session is shared by every thread that plans on it, so no query,
 loop or stream changes a conf mid-flight: iterative ML and streams
 run under the same tuned conf as the SQL around them.
+
+Sessions built by `get_spark` turn off PySpark's DataFrame call-site
+capture (`spark.python.sql.dataFrameDebugging.enabled=false`). With it
+on, every `pyspark.sql.functions` call and every `Column` method walks
+the Python stack and makes about ten extra py4j round trips (to read
+the active session and a conf, and to set and clear the origin): two
+thirds of the round trips that built the ledger pipeline. What a user
+loses: an error raised by a DataFrame expression no longer names the
+Python file and line that built it; its error class and message are
+unchanged. The key is a static conf, so it is set on the builder and
+not in `RUNTIME_CONF`. PySpark reads it once per process, from the
+session active at the first wrapped call, so a session the caller
+built itself (one passed into `queries()`, say) keeps its own setting.
 """
 
 from __future__ import annotations
 
 import atexit
+import logging
 import os
 import shutil
 
@@ -124,6 +138,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
+        # static: no call-site capture per Column call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # shuffle/spill files on tmpfs — local[] has no NVMe-backed
         # spark.local.dir, and /tmp here is spinning-disk-backed
         .config("spark.local.dir", scratch_root("local"))
@@ -151,11 +167,23 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to any session, best-effort.
 
     Called at the top of every registered query so behavior is stable
-    even when the driver constructed the session.
+    even when the driver constructed the session. A key the session
+    refuses is skipped with one logged warning per process.
     """
     for k, v in _runtime_conf().items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on this build — builder path already set it
+        except Exception as exc:
+            # a static key (settable only on the builder) or a build that
+            # lacks the key: say so once, not on every query
+            if k not in _WARNED_KEYS:
+                _WARNED_KEYS.add(k)
+                logging.getLogger(__name__).warning(
+                    "tune_session: cannot set %s=%s on this session: %s",
+                    k, v, exc,
+                )
     return spark
+
+
+#: RUNTIME_CONF keys whose `tune_session` failure was already logged
+_WARNED_KEYS: set[str] = set()
