@@ -144,11 +144,9 @@ class BlockFeedDataSource(DataSource):
 
 
 def register_blockfeed(spark) -> None:
-    """Idempotently register the source with a session."""
-    try:
-        spark.dataSource.register(BlockFeedDataSource)
-    except Exception:
-        pass  # already registered on this session
+    """Register the source with a session. Spark replaces an earlier
+    registration of the same name, so a repeat call is harmless."""
+    spark.dataSource.register(BlockFeedDataSource)
 
 
 try:  # SimpleDataSourceStreamReader: pyspark >= 4.0

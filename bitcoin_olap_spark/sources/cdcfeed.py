@@ -240,8 +240,6 @@ class CdcFeedDataSource(DataSource):
 
 
 def register_cdcfeed(spark) -> None:
-    """Idempotently register the source with a session."""
-    try:
-        spark.dataSource.register(CdcFeedDataSource)
-    except Exception:
-        pass  # already registered on this session
+    """Register the source with a session. Spark replaces an earlier
+    registration of the same name, so a repeat call is harmless."""
+    spark.dataSource.register(CdcFeedDataSource)

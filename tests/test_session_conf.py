@@ -8,12 +8,17 @@ another thread ran meanwhile.
 `get_spark` sessions also turn off PySpark's per-call call-site
 capture, which cost about ten py4j round trips per Column call while
 a query built its DataFrame; and a conf the session refuses is logged
-once, not swallowed."""
+once, not swallowed. Their Python workers import the installed PySpark
+rather than Spark's zip archives (`bitcoin_olap_spark.pyworker`), and
+a data source whose registration fails says so."""
 
 from __future__ import annotations
 
 import logging
+import os
+import sys
 import threading
+import zipfile
 
 import pyspark.errors.utils as pyspark_errors_utils
 import pytest
@@ -21,7 +26,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.conf import RuntimeConfig
 
-from bitcoin_olap_spark import session
+from bitcoin_olap_spark import pyworker, session
 from bitcoin_olap_spark.registry import REGISTRY, all_queries
 from bitcoin_olap_spark.session import _runtime_conf, default_parallelism
 
@@ -161,3 +166,132 @@ def test_tune_session_logs_a_refused_key_once(spark, monkeypatch, caplog):
     assert len(warned) == 1 and refused in warned[0].getMessage()
     others = sorted(k for k in _runtime_conf() if k != refused)
     assert sorted(writes) == sorted(others * 2)
+
+
+def _worker_imports(batches):
+    """mapInPandas body: where the worker imported PySpark from, the
+    archive files on its `sys.path`, and its live zip importers."""
+    import os
+    import sys
+    import zipimport
+
+    import pandas as pd
+    import pyspark
+
+    for _ in batches:
+        pass
+    archives = [
+        p for p in sys.path
+        if p.endswith((".zip", ".jar")) and os.path.isfile(p)
+    ]
+    zips = sum(
+        isinstance(v, zipimport.zipimporter)
+        for v in sys.path_importer_cache.values()
+    )
+    yield pd.DataFrame(
+        {"file": [pyspark.__file__], "archives": [archives], "zips": [zips]}
+    )
+
+
+def test_python_workers_import_the_installed_pyspark(spark):
+    """`get_spark` workers run under `bitcoin_olap_spark.pyworker`: no
+    archive on their path, so a task's `importlib.invalidate_caches()`
+    has no zip to re-read."""
+    (row,) = (
+        spark.range(1, numPartitions=1)
+        .mapInPandas(
+            _worker_imports, "file string, archives array<string>, zips long"
+        )
+        .collect()
+    )
+    assert not any(
+        f"{suffix}{os.sep}" in row["file"] for suffix in (".zip", ".jar")
+    ), row["file"]
+    assert row["archives"] == []
+    assert row["zips"] == 0
+    assert (
+        spark.conf.get("spark.python.daemon.module")
+        == "bitcoin_olap_spark.pyworker"
+    )
+
+
+@pytest.mark.parametrize("matches", [True, False])
+def test_pyworker_drops_spark_archives_only_for_the_same_version(
+    tmp_path, matches
+):
+    """The daemon's guard, with no JVM: Spark's archives (under the
+    distribution that holds the archived pyspark) leave the path only
+    when the rest of it imports that PySpark's version; an archive
+    outside that distribution always stays."""
+    import pyspark
+
+    home = tmp_path / "spark"
+    (home / "python" / "lib").mkdir(parents=True)
+    (home / "jars").mkdir()
+    archive = str(home / "python" / "lib" / "pyspark.zip")
+    version = pyspark.__version__ if matches else "0.0.0"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("pyspark/__init__.py", "")
+        zf.writestr("pyspark/version.py", f"__version__: str = '{version}'\n")
+    jar = str(home / "jars" / "spark-core.jar")
+    zipfile.ZipFile(jar, "w").close()
+    other = str(tmp_path / "user.zip")
+    zipfile.ZipFile(other, "w").close()
+    # this interpreter's other entries import the installed pyspark and py4j
+    site = [p for p in sys.path if not p.endswith((".zip", ".jar"))]
+    path = [archive, jar, *site, other]
+    cache = {
+        archive: object(),
+        f"{archive}{os.sep}pyspark{os.sep}sql": object(),
+        jar: object(),
+        other: object(),
+        site[0]: object(),
+    }
+    before_path, before_cache = list(path), dict(cache)
+    pruned = pyworker.prune_archives(path, cache)
+    assert pruned is matches
+    if matches:
+        assert path == [*site, other]
+        assert sorted(cache) == sorted([other, site[0]])
+    else:
+        assert path == before_path and cache == before_cache
+
+
+@pytest.mark.parametrize("name", ["blockfeed", "cdcfeed"])
+def test_register_source_twice_then_batch_read(spark, tmp_path, name):
+    """Spark replaces an earlier registration of the same name, so a
+    second register call is harmless and the source still reads."""
+    from bitcoin_olap_spark.operators import acidtable as AT
+    from bitcoin_olap_spark.sources import register_blockfeed, register_cdcfeed
+
+    if name == "blockfeed":
+        register_blockfeed(spark)
+        register_blockfeed(spark)
+        df = (
+            spark.read.format("blockfeed")
+            .option("n_blocks", 40)
+            .option("n_partitions", 2)
+            .load()
+        )
+        assert df.count() == 40
+    else:
+        root = str(tmp_path / "tbl")
+        AT.init_table(spark, root, spark.range(0, 30).withColumnRenamed("id", "k"))
+        register_cdcfeed(spark)
+        register_cdcfeed(spark)
+        assert spark.read.format("acid_cdf").option("path", root).load().count() == 30
+
+
+@pytest.mark.parametrize("name", ["blockfeed", "cdcfeed"])
+def test_register_source_failure_propagates(spark, monkeypatch, name):
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from bitcoin_olap_spark.sources import register_blockfeed, register_cdcfeed
+
+    def failing_register(self, source):
+        raise RuntimeError("registration failed")
+
+    monkeypatch.setattr(DataSourceRegistration, "register", failing_register)
+    register = register_blockfeed if name == "blockfeed" else register_cdcfeed
+    with pytest.raises(RuntimeError, match="registration failed"):
+        register(spark)
