@@ -156,9 +156,3 @@ def _load(
     if shard_dir is None:
         return table(spark, sf_dir, name).repartition(n)
     return _convert_nano_ts(spark.read.parquet(shard_dir), name)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

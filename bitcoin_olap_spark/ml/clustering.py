@@ -125,47 +125,6 @@ def quantize_fixed(df, id_col: str, vec_col: str, scale: int = KM_SCALE):
     )
 
 
-def key_array_fixed(cents: list[list[int]], k: int):
-    """Per-centroid integer keys for a row's `xq` column: key[cid] =
-    squared-L2 distance * k + cid — the composite breaks distance
-    ties toward the lower cid, and both the distances and the keys
-    fit int64 (see KM_SCALE note). array_min of it is the argmin
-    assignment; array_sort + slice is a map-side top-nprobe (how the
-    IVF probe stage ranks lists without any shuffle). ONE expr-parsed
-    nested-array literal + a runtime loop keeps the generated code
-    small and constant-shaped in k (per-centroid unrolling costs
-    ~0.5 s of Catalyst/codegen per plan; individual F.lit Columns
-    cost ~1 s of py4j round trips)."""
-    clit = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{int(v)}L" for v in c) + ")"
-            for c in cents
-        )
-        + ")"
-    )
-    return F.transform(
-        F.sequence(F.lit(0).cast("long"), F.lit(k - 1)),
-        lambda i: F.aggregate(
-            F.zip_with(
-                "xq",
-                F.element_at(clit, (i + 1).cast("int")),
-                lambda x, cv: (x - cv) * (x - cv),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        * k
-        + i,
-    )
-
-
-def assign_key_fixed(cents: list[list[int]], k: int):
-    """argmin assignment key: min over key_array_fixed — cluster =
-    key % k, scaled squared distance = key // k."""
-    return F.array_min(key_array_fixed(cents, k))
-
-
 def lloyd_fixed(
     base, id_col: str, k: int, iters: int, dim: int
 ) -> list[list[int]]:

@@ -1143,13 +1143,6 @@ def change_inventory(
     return out
 
 
-def changes_since(root: str, v_from: int) -> tuple[int, int]:
-    """(head version, number of change files after v_from) — the
-    metadata poll a CDF subscriber runs per micro-batch."""
-    head = current_version(root)
-    return head, len(change_inventory(root, v_from, head))
-
-
 # ------------------------------------------- deletion vectors (MoR)
 #
 # Merge-on-read DELETE: instead of rewriting every touched file

@@ -11,17 +11,23 @@ per-key lock and replaces the entry, so a rewritten file is never
 served stale and threads that miss the same key at once build it
 once.
 
-scoped_cache(df) bounds executor storage. Several operators cache an
-intermediate relation that both sides of a downstream self-join
-consume (hot-shingle vocabularies in operators/dedup.py, weighted
-postings in operators/vectors.py). The cache must outlive the builder
-function — the returned DataFrame is LAZY and the cached relation is
-only materialized when the caller finally runs an action — so a
-try/finally unpersist inside the builder would defeat it. But a
-long-lived session that builds many such queries would otherwise
-accumulate cached relations in executor storage forever.
+Every Spark relation the package caches has an owner, and there are
+exactly two lifetimes:
 
-scoped_cache() is the middle ground: it caches the relation AND
+- A relation read only by the building function's own eager actions
+  or driver loops is cache()d/persist()ed and unpersisted in a
+  `finally` of that function, once the loop's result exists.
+- A relation that the returned LAZY DataFrame still reads goes
+  through scoped_cache(df): it is only materialized when the caller
+  finally runs an action, so an unpersist inside the builder would
+  defeat it (hot-shingle vocabularies in operators/dedup.py, weighted
+  postings in operators/vectors.py, the strong co-purchase edge list
+  of the graph_* queries, PageRank's per-round ranks).
+
+tests/test_cache_owner.py checks statically that no other cache()
+or persist() call exists in the package.
+
+scoped_cache() bounds executor storage: it caches the relation AND
 registers it in a bounded FIFO keyed by SEMANTIC PLAN; once more than
 MAX_LIVE distinct plans are live, the oldest is unpersisted
 (non-blocking). Unpersisting an already-consumed relation is free;
@@ -44,6 +50,7 @@ eviction only ever reaches plans no recent query has touched.
 
 from __future__ import annotations
 
+import logging
 import os
 import stat
 import threading
@@ -100,13 +107,6 @@ MAX_LIVE = 24
 _LIVE: "OrderedDict[int, DataFrame]" = OrderedDict()
 
 
-def _plan_key(df: DataFrame) -> int:
-    try:
-        return df.semanticHash()
-    except Exception:  # pragma: no cover — session torn down
-        return id(df)
-
-
 def scoped_cache(df: DataFrame) -> DataFrame:
     """cache() with a bounded lifetime: the relation registers in an
     LRU of at most MAX_LIVE distinct cached PLANS; re-registering a
@@ -114,14 +114,19 @@ def scoped_cache(df: DataFrame) -> DataFrame:
     current query just asked for), and only plans beyond the bound
     unpersist."""
     df = df.cache()
-    key = _plan_key(df)
+    key = df.semanticHash()
     _LIVE.pop(key, None)
     _LIVE[key] = df
     while len(_LIVE) > MAX_LIVE:
         _, old = _LIVE.popitem(last=False)
         try:
             old.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped — nothing to release
+        except Exception as exc:
+            # the new relation stays registered either way; say why
+            # the old one may still hold executor storage
+            logging.getLogger(__name__).warning(
+                "scoped_cache: could not unpersist an evicted relation: %s",
+                exc,
+            )
     return df
 

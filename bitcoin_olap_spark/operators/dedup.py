@@ -712,50 +712,54 @@ def connected_components(
     # Round 1 needs no join: with lbl(x)=x initially, the neighbor-min
     # IS min(e_dst) per e_src (und is symmetric, so e_src covers every
     # edge-touched node) — one aggregate replaces join+union+aggregate.
-    # Labels persist() lazily each round; the convergence-sum action
-    # materializes them, so the NEXT round's join is planned against an
+    # Round-1 labels persist() lazily; the convergence-sum action
+    # materializes them, so round 2's join is planned against an
     # InMemoryRelation with known (materialized) stats — the adaptive
-    # size-based join choice, with one job per round instead of the
-    # former eager-checkpoint + collect pair.
-    labels = (
+    # size-based join choice, with one job per round. Later rounds
+    # checkpoint, so once the loop ends the round-1 cache is dead
+    # weight (with max_iter == 1 the returned plan recomputes it).
+    labels = first = (
         und.groupBy(F.col("e_src").alias("node"))
         .agg(F.min("e_dst").alias("m"))
         .select("node", F.least("node", "m").alias("lbl"))
         .persist()
     )
-    prev_sum = _converge_sum(labels)
-    for _ in range(max_iter - 1):
-        nbr = und.join(
-            labels, und.e_dst == F.col("node")
-        ).select(F.col("e_src").alias("node"), "lbl")
-        # lazy localCheckpoint, not persist: the round references
-        # `labels` TWICE (union + join), so with plain persist the
-        # LOGICAL plan doubles every round — fine on shallow near-dup
-        # graphs, but a 2^rounds plan-string blowup on large-diameter
-        # graphs (ml_dbscan_grid's core graph hit the 2 GiB plan cap
-        # at ~20 rounds). The convergence-sum action materializes the
-        # checkpoint, truncating lineage at the same one-job-per-round
-        # cost persist had.
-        new = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-        )
-        if shortcut:
-            # pointer doubling: one node-scale self-join; see docstring
-            l2 = new.select(
-                F.col("node").alias("_n2"), F.col("lbl").alias("_l2")
+    try:
+        prev_sum = _converge_sum(labels)
+        for _ in range(max_iter - 1):
+            nbr = und.join(
+                labels, und.e_dst == F.col("node")
+            ).select(F.col("e_src").alias("node"), "lbl")
+            # lazy localCheckpoint, not persist: the round references
+            # `labels` TWICE (union + join), so with plain persist the
+            # LOGICAL plan doubles every round — fine on shallow near-dup
+            # graphs, but a 2^rounds plan-string blowup on large-diameter
+            # graphs (ml_dbscan_grid's core graph hit the 2 GiB plan cap
+            # at ~20 rounds). The convergence-sum action materializes the
+            # checkpoint, truncating lineage at the same one-job-per-round
+            # cost persist had.
+            new = (
+                labels.unionByName(nbr)
+                .groupBy("node")
+                .agg(F.min("lbl").alias("lbl"))
             )
-            new = new.join(l2, new.lbl == l2._n2, "left").select(
-                "node",
-                F.least("lbl", F.coalesce("_l2", "lbl")).alias("lbl"),
-            )
-        new = new.localCheckpoint(eager=False)
-        cur_sum = _converge_sum(new)
-        labels = new
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+            if shortcut:
+                # pointer doubling: one node-scale self-join; see docstring
+                l2 = new.select(
+                    F.col("node").alias("_n2"), F.col("lbl").alias("_l2")
+                )
+                new = new.join(l2, new.lbl == l2._n2, "left").select(
+                    "node",
+                    F.least("lbl", F.coalesce("_l2", "lbl")).alias("lbl"),
+                )
+            new = new.localCheckpoint(eager=False)
+            cur_sum = _converge_sum(new)
+            labels = new
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
+    finally:
+        first.unpersist()
     singles = (
         nodes.select(F.col(id_col).alias("node"))
         .join(

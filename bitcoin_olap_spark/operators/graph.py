@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cacheutil import scoped_cache
+
 #: rank scale: ranks are probabilities ~1/N; 1e12 keeps 6+ significant
 #: digits for graphs up to ~1e6 nodes
 SCALE = 1_000_000_000_000
@@ -151,9 +153,9 @@ def pagerank_int(
     # the node-sized `g`, re-attached at node grain inside each round
     # (see _pagerank_iteration), so setup pays one edge materialization
     # instead of two and the per-round edge scan is a third narrower.
-    e0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).cache()
+    e0 = scoped_cache(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    )
     g = e0.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("outdeg")
     )
@@ -172,37 +174,43 @@ def pagerank_int(
         # reuses the edge partitioning and only the node-sized rank
         # relation moves per round
         e = e0.repartition("src").cache()
-    # the degree relation is node-sized and read by every round's
-    # contribution pre-join: broadcast it on the small-graph path
-    # (one broadcast, reused by every round), materialize it once on
-    # the big-graph path (its node-keyed exchange is likewise reused).
-    g = g.cache() if use_broadcast else g.localCheckpoint()
-    g_side = F.broadcast(g) if use_broadcast else g
+    try:
+        # the degree relation is node-sized and read by every round's
+        # contribution pre-join: broadcast it on the small-graph path
+        # (one broadcast, reused by every round), materialize it once
+        # on the big-graph path (its node-keyed exchange is likewise
+        # reused).
+        g = scoped_cache(g) if use_broadcast else g.localCheckpoint()
+        g_side = F.broadcast(g) if use_broadcast else g
 
-    # Per-round materialization: each round's ranks are cache()d —
-    # lazily, with no forcing action, so the driver never blocks
-    # between rounds. The single final action materializes the whole
-    # chain; each round's broadcast/exchange job populates that round's
-    # cache on the way up, so rounds execute exactly ONCE (without the
-    # cache, round k's exchange subtree would re-execute rounds
-    # 1..k-1 — O(k^2)). The shuffle path additionally localCheckpoints
-    # to truncate lineage: a k-deep shuffle-join chain otherwise
-    # re-optimizes from scratch each round at plan time.
-    ranks = g.select("node", F.lit(init_rank).alias("rank"))
-    for _ in range(iters):
-        ranks = _pagerank_iteration(
-            e, ranks, g_side, teleport, damping_pct, use_broadcast
-        )
-        ranks = ranks.localCheckpoint() if not use_broadcast else ranks.cache()
-    if not use_broadcast:
-        # shuffle path: final ranks are checkpointed (lineage
-        # truncated), so the edge caches are dead weight — release
-        # them. Broadcast path: the returned LAZY plan still references
-        # the cached edges, so the caches must outlive this call
-        # (released by the session's usual cache hygiene — bench/tests
-        # clearCache between queries).
-        e.unpersist()
-        e0.unpersist()
+        # Per-round materialization: on the broadcast path each
+        # round's ranks go through scoped_cache — lazily, with no
+        # forcing action, so the driver never blocks between rounds.
+        # The single final action materializes the whole chain; each
+        # round's broadcast job populates that round's cache on the
+        # way up, so rounds execute exactly ONCE (without the cache,
+        # round k's subtree would re-execute rounds 1..k-1 — O(k^2)).
+        # The shuffle path localCheckpoints instead, to truncate
+        # lineage: a k-deep shuffle-join chain otherwise re-optimizes
+        # from scratch each round at plan time.
+        ranks = g.select("node", F.lit(init_rank).alias("rank"))
+        for _ in range(iters):
+            ranks = _pagerank_iteration(
+                e, ranks, g_side, teleport, damping_pct, use_broadcast
+            )
+            ranks = (
+                scoped_cache(ranks) if use_broadcast
+                else ranks.localCheckpoint()
+            )
+    finally:
+        # shuffle path: the final ranks are checkpointed (lineage
+        # truncated), so the edge caches are dead weight once the loop
+        # ends or fails. Broadcast path: the returned LAZY plan still
+        # reads the cached edges, degrees and ranks — iters + 2 plans,
+        # all owned by scoped_cache's bounded registry.
+        if not use_broadcast:
+            e.unpersist()
+            e0.unpersist()
     return ranks.select("node", F.col("rank").alias("rank_scaled"))
 
 

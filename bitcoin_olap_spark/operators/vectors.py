@@ -200,13 +200,13 @@ def assign_fixed_arrow(
     with_dist: bool = False,
 ) -> DataFrame:
     """MAP-ONLY fixed-point IVF/kmeans assignment, Arrow-batched numpy:
-    the same int64 key d*k+cid as ml/clustering.key_array_fixed
-    (squared-L2 distance composite, ties toward the lower cid), but
-    vectorized — Spark higher-order-function lambdas evaluate
-    interpreted per element, and the k*dim fold per row costs ~0.4 s
-    of interpreted eval (plus per-plan Catalyst/codegen work on the
-    k*dim-element literal) that a (rows, k, dim) int64 numpy kernel
-    does in milliseconds with BIT-IDENTICAL integer results.
+    the int64 key d*k+cid (squared-L2 distance composite, ties toward
+    the lower cid), vectorized — as a Spark higher-order-function fold
+    the lambdas evaluate interpreted per element, and the k*dim fold
+    per row costs ~0.4 s of interpreted eval (plus per-plan
+    Catalyst/codegen work on the k*dim-element literal) that a (rows,
+    k, dim) int64 numpy kernel does in milliseconds with BIT-IDENTICAL
+    integer results.
 
     nprobe=None: one row per input, cid = argmin key (with_dist adds
     dist_sq = key // k). nprobe=n: the n nearest lists per input in
@@ -692,8 +692,9 @@ def ivf_topk_exact(
     iteration (Arrow map-side combine, ml/clustering.lloyd_fixed);
     list assignment and probe ranking are MAP-ONLY through
     assign_fixed_arrow (vectorized int64 argmin / top-nprobe — no
-    window, no shuffle; same keys as the key_array_fixed fold, which
-    costs ~0.4 s of interpreted HOF eval per plan at this k*dim); the
+    window, no shuffle; computing the same keys as a higher-order-
+    function fold costs ~0.4 s of interpreted eval per plan at this
+    k*dim); the
     candidate join shuffles on centroid id, which is exactly how a
     distributed IVF shards its lists; scoring is Arrow-batched and
     partition-local."""

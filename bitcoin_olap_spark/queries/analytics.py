@@ -17,6 +17,7 @@ from ..catalog import table
 from ..functions import ORACLE_DAY, day, exact_sum, oracle_exact_sum
 from ..ml import loglog_ols_exact, loglog_ols_ml
 from ..ml.regression import ORACLE_OLS
+from ..operators.cacheutil import scoped_cache
 from ..registry import query
 
 
@@ -443,15 +444,16 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = quantize_fixed(
         table(spark, sf_dir, "embeddings"), "vec_id", "embedding", _KM_S
     ).drop("embedding").persist()
-    cents = lloyd_fixed(base, "vec_id", K, _KM_ITERS, dim=64)
+    try:
+        cents = lloyd_fixed(base, "vec_id", K, _KM_ITERS, dim=64)
+    finally:
+        base.unpersist()
     # final assignment through the same vectorized int64 kernel as the
     # iterations (bit-identical keys; cluster = key % k, dist_sq =
     # key // k)
-    out = assign_fixed_arrow(
+    return assign_fixed_arrow(
         base, "vec_id", cents, K, with_dist=True
     ).select("vec_id", F.col("cid").alias("cluster"), "dist_sq")
-    base.unpersist()
-    return out
 
 
 @query(
@@ -701,6 +703,36 @@ def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bfs_reach(edges, seeds, max_hops=3)
 
 
+def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Strong part co-purchase edge list (u < v, co-ordered >= 2), the
+    shared base of every graph_* query over that graph. Per-order
+    pairs explode map-side from the sorted part-set array (posexplode
+    picks u, slice explodes each later part as v, so sortedness makes
+    u < v); ONE (u, v) exchange then counts multiplicity. The relation
+    is lazy: each caller picks its own materialization."""
+    li = table(spark, sf_dir, "lineitem", spread=True).select(
+        "l_orderkey", "l_partkey"
+    )
+    parts = li.groupBy("l_orderkey").agg(
+        F.collect_set("l_partkey").alias("ps")
+    )
+    p1 = parts.select(F.sort_array("ps").alias("ps")).select(
+        "ps", F.posexplode("ps").alias("i", "u")
+    )
+    return (
+        p1.select(
+            "u",
+            F.explode(
+                F.slice("ps", F.col("i") + 2, F.size("ps"))
+            ).alias("v"),
+        )
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= 2)
+        .select("u", "v")
+    )
+
+
 @query(
     "graph_triangles",
     oracle="""
@@ -748,32 +780,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge side broadcasts or shuffle-joins at AQE's discretion from
     its measured cached size (no guessed threshold), the 100 TB-correct
     shape. AQE skew splitting covers residual hot apexes."""
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
-        "l_orderkey", "l_partkey"
-    )
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    # per-order pairs u < v explode map-side from the sorted part-set
-    # array via two stacked explodes (posexplode picks u, slice
-    # explodes each later part as v — sortedness makes u < v); ONE
-    # (u,v) exchange then counts multiplicity
-    p1 = parts.select(
-        F.sort_array("ps").alias("ps")
-    ).select("ps", F.posexplode("ps").alias("i", "u"))
-    und = (
-        p1.select(
-            "u",
-            F.explode(
-                F.slice("ps", F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .cache()
-    )
+    und = _strong_edges(spark, sf_dir).transform(scoped_cache)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -1144,32 +1151,35 @@ def ml_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-iteration reduce is 65 groups however large the corpus;
     # AQE coalesces it to one partition while the map side stays as
     # wide as the data
-    for _ in range(_LR_ITERS):
-        # ONE job per iteration: posexplode the feature array and
-        # reduce to (j, sum(xv*eh), count) — a narrow n*dim
-        # exchange with map-side partials and a 65-row result.
-        # count(*) per j IS the corpus size, so no separate count
-        # job runs. (The 65-separate-SUM-columns formulation
-        # computes the same thing with zero shuffle but pays
-        # ~0.5 s of Catalyst/codegen per iteration on a 65-wide
-        # aggregate — measured slower below ~10M rows; at larger
-        # scale flip back to the wide-agg form.)
-        grad = spark.sql(
-            f"""
-            SELECT j, SUM(xv * eh) AS g, COUNT(*) AS n FROM (
-              SELECT eh, posexplode(xq) AS (j, xv) FROM (
-                SELECT xq, CAST({eh_expr} AS BIGINT) AS eh FROM (
-                  SELECT xq, y, {margin_sql(w)} AS z
-                  FROM {vname})))
-            GROUP BY j"""
-        ).collect()
-        n = int(grad[0]["n"])
-        gd = {int(r["j"]): int(r["g"]) for r in grad}
-        # Python // floors like the SQL fdiv; 65 longs of control
-        # plane per iteration, the same bounded-collect pattern as
-        # pagerank's convergence scalar
-        w = [w[j] - (gd[j] // (n * S)) for j in range(_LR_DIM)]
-    out = spark.sql(
+    try:
+        for _ in range(_LR_ITERS):
+            # ONE job per iteration: posexplode the feature array and
+            # reduce to (j, sum(xv*eh), count) — a narrow n*dim
+            # exchange with map-side partials and a 65-row result.
+            # count(*) per j IS the corpus size, so no separate count
+            # job runs. (The 65-separate-SUM-columns formulation
+            # computes the same thing with zero shuffle but pays
+            # ~0.5 s of Catalyst/codegen per iteration on a 65-wide
+            # aggregate — measured slower below ~10M rows; at larger
+            # scale flip back to the wide-agg form.)
+            grad = spark.sql(
+                f"""
+                SELECT j, SUM(xv * eh) AS g, COUNT(*) AS n FROM (
+                  SELECT eh, posexplode(xq) AS (j, xv) FROM (
+                    SELECT xq, CAST({eh_expr} AS BIGINT) AS eh FROM (
+                      SELECT xq, y, {margin_sql(w)} AS z
+                      FROM {vname})))
+                GROUP BY j"""
+            ).collect()
+            n = int(grad[0]["n"])
+            gd = {int(r["j"]): int(r["g"]) for r in grad}
+            # Python // floors like the SQL fdiv; 65 longs of control
+            # plane per iteration, the same bounded-collect pattern as
+            # pagerank's convergence scalar
+            w = [w[j] - (gd[j] // (n * S)) for j in range(_LR_DIM)]
+    finally:
+        base.unpersist()
+    return spark.sql(
         f"""
         SELECT label, prediction, COUNT(*) AS n FROM (
           SELECT CAST(y AS BIGINT) AS label,
@@ -1178,8 +1188,6 @@ def ml_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM {vname})
         GROUP BY label, prediction"""
     )
-    base.unpersist()
-    return out
 
 
 @query(
@@ -2022,29 +2030,8 @@ def graph_jaccard_nbrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg(u) + deg(v) - common (no second pass). The strong-edge filter
     (co-ordered >= 2) bounds hub degree the same way it does for
     graph_triangles; AQE skew-splitting covers residual hot middles.
-    Built on the graph_triangles edge derivation: map-side per-order
-    pair explode from sorted part-set arrays, one (u, v) exchange."""
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
-        "l_orderkey", "l_partkey"
-    )
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    p1 = parts.select(F.sort_array("ps").alias("ps")).select(
-        "ps", F.posexplode("ps").alias("i", "u")
-    )
-    und = (
-        p1.select(
-            "u",
-            F.explode(
-                F.slice("ps", F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-    )
+    The edge list is `_strong_edges`."""
+    und = _strong_edges(spark, sf_dir)
     adj = und.unionByName(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).select(F.col("u").alias("node"), F.col("v").alias("nbr"))
@@ -2979,33 +2966,6 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _core_degrees(edges)
 
 
-def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strong part co-purchase edge list (co-ordered >= 2), the shared
-    base of graph_k_core / graph_k_core_converged: map-side pair
-    explode from sorted per-order part arrays, one (u, v) exchange."""
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
-        "l_orderkey", "l_partkey"
-    )
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    p1 = parts.select(F.sort_array("ps").alias("ps")).select(
-        "ps", F.posexplode("ps").alias("i", "u")
-    )
-    return (
-        p1.select(
-            "u",
-            F.explode(
-                F.slice("ps", F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-    )
-
-
 def _peel_round(edges: DataFrame, k: int) -> DataFrame:
     """One k-core peel round: degree aggregate + two left-semi edge
     restrictions, lazily checkpointed (the materialization rides the
@@ -3106,12 +3066,10 @@ def graph_connected_components(
     canonical transitive-closure operator, first-class rather than
     embedded in a pipeline (dedup_doc_clusters and ml_dbscan_grid run
     the same fixpoint on their own derived graphs): every edge-touched
-    part labeled with the MINIMUM part id reachable from it. Same
-    strong-edge derivation (co-ordered >= 2) as graph_triangles /
-    graph_k_core — map-side pair explode from sorted per-order part
-    arrays, one (u, v) exchange — feeding operators/dedup.
-    connected_components' min-label propagation (one node-keyed
-    join + aggregate per round, label-sum convergence, lazy
+    part labeled with the MINIMUM part id reachable from it. The
+    strong edge list (`_strong_edges`, co-ordered >= 2) feeds
+    operators/dedup.connected_components' min-label propagation (one
+    node-keyed join + aggregate per round, label-sum convergence, lazy
     checkpoints; converges in diameter rounds).
 
     The oracle states the same fixpoint as a recursive reach-set CTE
@@ -3138,28 +3096,7 @@ def graph_connected_components(
     corpus actually follows, the k_core-sf100 result's analogue."""
     from ..operators.dedup import connected_components
 
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
-        "l_orderkey", "l_partkey"
-    )
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    p1 = parts.select(F.sort_array("ps").alias("ps")).select(
-        "ps", F.posexplode("ps").alias("i", "u")
-    )
-    edges = (
-        p1.select(
-            "u",
-            F.explode(
-                F.slice("ps", F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    edges = _strong_edges(spark, sf_dir).localCheckpoint(eager=False)
     nodes = (
         edges.select(F.col("u").alias("id"))
         .unionByName(edges.select(F.col("v").alias("id")))
@@ -3513,28 +3450,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter; at 100 TB the production guard is the same hub-degree cap
     the shingle df-cap applies, recall-lossless for AA because capped
     hubs contribute the least score."""
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
-        "l_orderkey", "l_partkey"
-    )
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    p1 = parts.select(F.sort_array("ps").alias("ps")).select(
-        "ps", F.posexplode("ps").alias("i", "u")
-    )
-    und = (
-        p1.select(
-            "u",
-            F.explode(
-                F.slice("ps", F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .cache()
-    )
+    und = _strong_edges(spark, sf_dir).transform(scoped_cache)
     adj = und.unionByName(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).select(F.col("u").alias("node"), F.col("v").alias("nbr"))
@@ -3638,28 +3554,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the node grain. Nodes with d >= 2 rank top-100 by rounded
     coefficient with an id tiebreak; integers everywhere until the
     one division."""
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
-        "l_orderkey", "l_partkey"
-    )
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    p1 = parts.select(F.sort_array("ps").alias("ps")).select(
-        "ps", F.posexplode("ps").alias("i", "u")
-    )
-    und = (
-        p1.select(
-            "u",
-            F.explode(
-                F.slice("ps", F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .cache()
-    )
+    und = _strong_edges(spark, sf_dir).transform(scoped_cache)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -4226,28 +4121,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     node/edge-grain exchanges, nothing quadratic."""
     from ..operators.dedup import connected_components
 
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
-        "l_orderkey", "l_partkey"
-    )
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    p1 = parts.select(F.sort_array("ps").alias("ps")).select(
-        "ps", F.posexplode("ps").alias("i", "u")
-    )
-    und = (
-        p1.select(
-            "u",
-            F.explode(
-                F.slice("ps", F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint()
-    )
+    und = _strong_edges(spark, sf_dir).localCheckpoint()
     nodes = (
         und.select(F.col("u").alias("id"))
         .unionByName(und.select(F.col("v").alias("id")))
@@ -5065,28 +4939,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one moment reduce — every exchange node- or edge-sized. All
     moments exact int64 -> decimal(38,0)/HUGEINT (degree products
     summed over edges pass int64 around sf3); one division, 6dp."""
-    li = table(spark, sf_dir, "lineitem", spread=True).select(
-        "l_orderkey", "l_partkey"
-    )
-    parts = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    p1 = parts.select(F.sort_array("ps").alias("ps")).select(
-        "ps", F.posexplode("ps").alias("i", "u")
-    )
-    und = (
-        p1.select(
-            "u",
-            F.explode(
-                F.slice("ps", F.col("i") + 2, F.size("ps"))
-            ).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint()
-    )
+    und = _strong_edges(spark, sf_dir).localCheckpoint()
     sym = und.unionByName(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

@@ -34,6 +34,7 @@ from ..operators import chunking as C
 from ..operators import dedup as D
 from ..operators import text as TX
 from ..operators import vectors as V
+from ..operators.cacheutil import scoped_cache
 from ..registry import query
 
 # ---------------------------------------------------------------- dedup
@@ -1609,8 +1610,6 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured r9 at sf3: 21.5 s exploding the inline expression vs
     0.26 s exploding the cached array; the build itself is 8.5 s,
     paid once here)."""
-    from ..operators.cacheutil import scoped_cache
-
     docs = table(spark, sf_dir, "documents", spread=True)
     base = scoped_cache(
         docs.filter(F.col("doc_id") % 10 != 0).select(
@@ -2094,13 +2093,8 @@ def text_dedup_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("idx", "chunk"),
     ).select("doc_id", F.col("idx").cast("long").alias("idx"), "chunk")
     # cache: boiler and kept both consume the chunk relation — without
-    # it the split+slice explode (and its spread exchange) runs twice.
-    # Lifetime contract: the cache cannot be unpersisted here (the
-    # returned plan is lazy and still references it), so harnesses own
-    # release — bench.py clearCache()s before every timed pass and
-    # after every query, keeping timings full-computation and executor
-    # storage flat across the suite
-    chunks = chunks.cache()
+    # it the split+slice explode (and its spread exchange) runs twice
+    chunks = scoped_cache(chunks)
     # "appears in >1 document" as min(doc)!=max(doc): same predicate as
     # COUNT(DISTINCT doc_id)>1 but a plain 2-long aggregate state — no
     # distinct Expand, half the shuffle volume of count_distinct
@@ -2218,9 +2212,9 @@ def text_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
-    # boiler and kept both consume the chunk relation (same cache
-    # lifetime contract as text_dedup_chunks: harnesses release it)
-    chunks = C.cdc_chunks(docs, "doc_id", "text", modulus=16).cache()
+    # boiler, kept and totals all consume the chunk relation; the
+    # returned plan is lazy, so the cache is scoped
+    chunks = scoped_cache(C.cdc_chunks(docs, "doc_id", "text", modulus=16))
     boiler = (
         chunks.groupBy("chunk")
         .agg(F.min("doc_id").alias("d0"), F.max("doc_id").alias("d1"))
@@ -3425,7 +3419,7 @@ def sim_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         hb.groupBy("doc_id", "ck", "bucket")
         .agg(F.sum("sgn").cast("long").alias("val"))
         .filter(F.col("val") != 0)
-        .cache()
+        .transform(scoped_cache)
     )
     nrm = vec.groupBy("doc_id", "ck").agg(
         F.sum(F.col("val") * F.col("val")).cast("long").alias("nn")
@@ -3818,14 +3812,13 @@ def sim_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         dst_col="doc_b",
     ).select(F.col("node").alias("doc_id"), "component")
     # keeper and the output join both consume scored (3 longs per doc)
-    # — cached so the component/length join subtree runs once (same
-    # harness-owned lifetime contract as the chunk caches)
-    scored = comp.join(
+    # — cached so the component/length join subtree runs once
+    scored = scoped_cache(comp.join(
         docs.select(
             "doc_id", F.length("text").cast("long").alias("n_chars")
         ),
         "doc_id",
-    ).cache()
+    ))
     keeper = (
         scored.groupBy("component")
         .agg(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators import text as TX
+from ..operators.cacheutil import scoped_cache
 from ..plans import bitcoin_fixtures, ledger_daily_rollup, ledger_pipeline
 from ..registry import query
 from .llmdata import _LANG_CASE, _duck_markers
@@ -291,10 +292,10 @@ def pipeline_mm_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the digest relation is consumed twice (dedup survivors and the
     # per-format raw counts): cache it so the payload-md5 map pass
     # runs once — 24 bytes/row cached, never the blobs
-    fmt = keep.select(
+    fmt = scoped_cache(keep.select(
         "doc_id", F.md5("blob").alias("digest"),
         F.col("media_meta.format").alias("format"),
-    ).cache()
+    ))
     survivors = (
         fmt.groupBy("digest").agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
@@ -620,7 +621,7 @@ def pipeline_rag_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("tf").cast("double") * idf).alias("wt"),
             idf.alias("idf"),
         )
-        .cache()
+        .transform(scoped_cache)
     )
     cnorm = cw.groupBy("cid").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nc")
