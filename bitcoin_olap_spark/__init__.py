@@ -8,7 +8,7 @@ choose the physical strategy.
 
 Layout:
 - session.py    SparkSession factory (AQE, Arrow, UTC) + runtime tuning
-- catalog.py    testdata table loaders / temp-view registration
+- catalog.py    testdata table loaders (schema read from a parquet footer)
 - registry.py   query registry: every operator from SURVEY.md §2 is a
                 (PySpark callable, DuckDB oracle SQL) pair
 - operators/    reusable composable operators (dedup, multimodal, skew,

@@ -7,13 +7,21 @@ directories identically, so these helpers are scale-transparent — the
 vectorized reader gives split-per-rowgroup parallelism, and filters /
 projections expressed on the returned DataFrame push down into the scan
 (verify with .explain: PushedFilters / ReadSchema).
+
+A table opens without a Spark job: `parquet_schema` reads the schema
+from one parquet footer on the driver, through Spark's own converter,
+and the reader is given it instead of inferring it.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .operators.cacheutil import file_token, memo
 
@@ -54,6 +62,134 @@ def _convert_nano_ts(df: DataFrame, name: str) -> DataFrame:
                 c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000"))
             )
     return df
+
+
+#: parquet summary files, which carry a footer and no rows
+_SUMMARIES = ("_common_metadata", "_metadata")
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps a file or directory named
+    `name` (InMemoryFileIndex.shouldFilterOutPathName): hidden `_x`
+    and `.x` names and `._COPYING_` files are skipped, except the
+    parquet summary files and `_k=v` directories."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(_SUMMARIES)
+
+
+def _inference_file(path: str) -> tuple[str, set[str]] | None:
+    """The file whose footer Spark's schema inference reads for `path`
+    (ParquetUtils.inferSchema without mergeSchema), with the partition
+    column names of a `k=v` directory layout. A file is its own.
+    Of a directory's leaf files sorted by path: the first
+    `_common_metadata`, else the first `_metadata`, else the first
+    data file. None for an empty directory, and for one with a
+    subdirectory that is not a `k=v` partition."""
+    if not os.path.isdir(path):
+        return path, set()
+    leaves, parts = [], set()
+    for dirpath, dirs, files in os.walk(path, followlinks=True):
+        if dirpath != path:
+            key, eq, _ = os.path.basename(dirpath).partition("=")
+            if not eq:
+                return None
+            parts.add(key.lower())
+        dirs[:] = [d for d in dirs if _listed(d)]
+        leaves += [os.path.join(dirpath, f) for f in files if _listed(f)]
+    leaves.sort()
+    names = [os.path.basename(f) for f in leaves]
+    for summary in _SUMMARIES:
+        if summary in names:
+            return leaves[names.index(summary)], parts
+    data = [f for f, n in zip(leaves, names) if n not in _SUMMARIES]
+    return (data[0], parts) if data else None
+
+
+#: py4j handles of the JVM classes the footer read calls, resolved
+#: once per gateway (each segment of a `spark._jvm.org.apache...`
+#: chain, and each static-member lookup, is one py4j round trip)
+_HANDLES: tuple | None = None
+
+
+def _footer_handles(spark: SparkSession) -> tuple:
+    global _HANDLES
+    jvm = spark._jvm
+    got = _HANDLES
+    if got is None or got[0] is not jvm:
+        from py4j.java_gateway import JavaClass
+
+        def cls(fqn):
+            return JavaClass(fqn, jvm._gateway_client)
+
+        pq = "org.apache.spark.sql.execution.datasources.parquet."
+        got = _HANDLES = (
+            jvm,
+            cls("org.apache.hadoop.fs.Path"),
+            cls("org.apache.parquet.hadoop.Footer"),
+            cls(pq + "ParquetToSparkSchemaConverter"),
+            cls("org.apache.parquet.hadoop.ParquetFileReader").readFooter,
+            cls(
+                "org.apache.parquet.format.converter.ParquetMetadataConverter"
+            ).NO_FILTER,
+            getattr(cls(pq + "ParquetFileFormat$"), "MODULE$"),
+        )
+    return got[1:]
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema `spark.read.parquet(path)` infers, read on the driver
+    from the footer inference would read (`_inference_file`) by
+    Spark's own converter under the session's SQL conf: nanosAsLong,
+    timestamp NTZ inference and the footer's Spark row schema apply
+    as they do in inference, but no job runs. None where the result
+    could differ from inference: mergeSchema on for a directory, a
+    partition column that is also a file column, a layout
+    `_inference_file` does not follow, or a footer the driver cannot
+    read or convert (inference then raises its own error)."""
+    found = _inference_file(path)
+    if found is None:
+        return None
+    src, parts = found
+    path_cls, footer_cls, converter_cls, read_footer, no_filter, fmt = (
+        _footer_handles(spark)
+    )
+    state = spark._jsparkSession.sessionState()
+    conf = state.conf()
+    if src != path and conf.isParquetSchemaMergingEnabled():
+        return None
+    jpath = path_cls(src)
+    try:
+        meta = read_footer(state.newHadoopConf(), jpath, no_filter)
+        jschema = fmt.readSchemaFromFooter(
+            footer_cls(jpath, meta), converter_cls(conf)
+        )
+    except (Py4JJavaError, CapturedException):
+        return None
+    # a file relation's data schema is all-nullable, as inferred
+    schema = StructType.fromJson(json.loads(jschema.asNullable().json()))
+    if any(n.lower() in parts for n in schema.names):
+        return None
+    return schema
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema `spark.read.parquet(path)` has, read from a parquet
+    footer when `_footer_schema` can (about 10 py4j calls and a few
+    ms, no job), else inferred by Spark (one job)."""
+    schema = _footer_schema(spark, path)
+    return spark.read.parquet(path).schema if schema is None else schema
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, given the footer schema when
+    `_footer_schema` has one, so planning it starts no job."""
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def _sharded_copy(src: str, n_shards: int) -> str | None:
@@ -119,13 +255,16 @@ def table(
     directory of parquet files.
 
     The DataFrame is memoized per (path, spread) and reused while the
-    application and the files under the path are unchanged: a
-    `spark.read.parquet` costs ~150 ms (file listing + footer schema
-    read through py4j), and a suite run calls table() hundreds of
-    times. Only the LOGICAL plan is kept — every action still scans
-    the parquet data — the reuse a metastore catalog gives a
-    production session. A rewrite of the files, or a new application,
-    builds a fresh DataFrame.
+    application and the files under the path are unchanged, and a
+    suite run calls table() hundreds of times. Building one is cheap:
+    the reader is given the schema `parquet_schema` reads from a
+    footer on the driver (about 4 ms), so the load starts no Spark
+    job. Left to infer the schema, `spark.read.parquet` started one
+    job per load (SchemaMergeUtils.mergeSchemasInParallel, about
+    50 ms on 4 vCPUs, even for one file). Only the LOGICAL plan is
+    kept — every action still scans the parquet data — the reuse a
+    metastore catalog gives a production session. A rewrite of the
+    files, or a new application, builds a fresh DataFrame.
 
     spread=True parallelizes the scan stage. For a single-file table
     above SHARD_MIN_ROWS this reads the sharded copy (`_sharded_copy`)
@@ -150,9 +289,9 @@ def _load(
     spark: SparkSession, sf_dir: str, name: str, path: str, spread: bool
 ) -> DataFrame:
     if not spread:
-        return _convert_nano_ts(spark.read.parquet(path), name)
+        return _convert_nano_ts(_read_parquet(spark, path), name)
     n = spark.sparkContext.defaultParallelism
     shard_dir = None if os.path.isdir(path) else _sharded_copy(path, n)
     if shard_dir is None:
         return table(spark, sf_dir, name).repartition(n)
-    return _convert_nano_ts(spark.read.parquet(shard_dir), name)
+    return _convert_nano_ts(_read_parquet(spark, shard_dir), name)

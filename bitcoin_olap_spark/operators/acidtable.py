@@ -73,7 +73,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
 def _log_dir(root: str) -> str:
@@ -1179,6 +1179,13 @@ def _dv_row_count(dvs: list[str]) -> int:
     return sum(pq.read_metadata(f).num_rows for f in dvs)
 
 
+#: Schema of the deletion-vector files `_write_dv_files` writes: each
+#: deleted row's data file and row index. Scans are given it, so
+#: planning a merge-on-read snapshot starts no inference job.
+_DV_SCHEMA = StructType(
+    [StructField("_dv_file", StringType()), StructField("_dv_pos", LongType())]
+)
+
 #: above this many positions the anti-join side is left un-hinted so
 #: AQE can pick a shuffle join instead of an oversized broadcast
 DV_BROADCAST_MAX_ROWS = 5_000_000
@@ -1202,7 +1209,7 @@ def _live_positions(
     )
     if not dvs:
         return stamped
-    dv = spark.read.parquet(*dvs).select("_dv_file", "_dv_pos")
+    dv = spark.read.schema(_DV_SCHEMA).parquet(*dvs)
     if _dv_row_count(dvs) <= DV_BROADCAST_MAX_ROWS:
         dv = F.broadcast(dv)
     return stamped.join(dv, ["_dv_file", "_dv_pos"], "left_anti")

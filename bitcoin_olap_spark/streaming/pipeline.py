@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import parquet_schema
 from ..functions import exact_sum
 
 #: gap that closes a session (native session_window semantics: an event
@@ -41,12 +42,13 @@ def _drain_memory_sink(spark: SparkSession, name: str) -> DataFrame:
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source streaming read of the events table: the stand-in for
-    the BitcoinETL feed (README.md:3). Schema is taken from a batch
-    peek (streaming file sources require an explicit schema — inference
-    would race with new files); nanosecond parquet timestamps surface
-    as long and convert with integer DIV exactly like catalog.table."""
+    the BitcoinETL feed (README.md:3). The schema is read from the
+    file's footer (catalog.parquet_schema: streaming file sources
+    require an explicit schema — inference would race with new files);
+    nanosecond parquet timestamps surface as long and convert with
+    integer DIV exactly like catalog.table."""
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")

@@ -11,14 +11,14 @@ import datetime
 import json
 import os
 import shutil
-import time
-import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bitcoin_olap_spark.operators import acidtable as AT
+
+from .conftest import jobs_started
 
 
 def _batch(spark, lo, n, parts=1):
@@ -49,39 +49,18 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _jobs_started(spark, fn) -> int:
-    """Spark jobs `fn` starts, counted by job group. A sentinel job
-    runs last in the same group: the status store fills
-    asynchronously, and once it lists the sentinel it lists every
-    earlier job of the group."""
-    sc = spark.sparkContext
-    group = f"acid-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "acid read planning")
-    try:
-        fn()
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not st.getJobIdsForGroup(group) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    ids = st.getJobIdsForGroup(group)
-    assert ids, "the sentinel job must be counted"
-    return len(ids) - 1
-
-
 def test_acid_snapshot_reads_plan_without_a_job(spark, tmp_path):
     """snapshot() and snapshot_pruned() on a table with the schema
-    property start no Spark job before execution: the scan is given
-    the schema instead of inferring it."""
+    property start no Spark job before execution, with and without
+    deletion vectors: the scans are given the schema instead of
+    inferring it."""
     root = str(tmp_path / "t")
     AT.init_table(spark, root, _batch(spark, 0, 600, parts=3), stats_cols=("k",))
     AT.append(spark, root, _batch(spark, 600, 200))
 
-    assert _jobs_started(spark, lambda: AT.snapshot(spark, root)) == 0
+    assert jobs_started(spark, lambda: AT.snapshot(spark, root)) == 0
     assert (
-        _jobs_started(
+        jobs_started(
             spark, lambda: AT.snapshot_pruned(spark, root, "k", 650, 700)
         )
         == 0
@@ -89,6 +68,22 @@ def test_acid_snapshot_reads_plan_without_a_job(spark, tmp_path):
     df, n_read, n_total = AT.snapshot_pruned(spark, root, "k", 650, 700)
     assert (n_read, n_total) == (1, 4)
     assert df.count() == 51
+
+    # merge-on-read: the deletion-vector scans are given their fixed
+    # schema too
+    AT.delete_where_mor(spark, root, F.col("k") % 10 == 0)
+    dvs = AT._resolve(root, AT.current_version(root))[2]
+    assert dvs and spark.read.parquet(*dvs).schema == AT._DV_SCHEMA
+    assert jobs_started(spark, lambda: AT.snapshot(spark, root)) == 0
+    assert (
+        jobs_started(
+            spark, lambda: AT.snapshot_pruned(spark, root, "k", 650, 700)
+        )
+        == 0
+    )
+    assert AT.snapshot(spark, root).count() == 720
+    df, _, _ = AT.snapshot_pruned(spark, root, "k", 650, 700)
+    assert df.count() == 45
 
 
 def test_acid_cow_writers_under_a_cached_snapshot(spark, tmp_path):

@@ -1,10 +1,14 @@
 """The file-identity memo (operators/cacheutil.memo) and its users:
 catalog tables and shard copies, the trained IVF quantizer and the CDF
 feed DDL. Files are rewritten in place at a fixed path, as a re-export
-does, and every read after the rewrite must see the new bytes."""
+does, and every read after the rewrite must see the new bytes. Also:
+catalog.table opens a table with no Spark job, given the schema read
+from a parquet footer, which equals the schema Spark infers."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
@@ -14,10 +18,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from bitcoin_olap_spark.catalog import SHARD_MIN_ROWS, table
+from bitcoin_olap_spark import catalog
+from bitcoin_olap_spark.catalog import SHARD_MIN_ROWS, TABLES, table
 from bitcoin_olap_spark.operators import cacheutil as CU
 
-from .conftest import SF_TEST
+from .conftest import SF_TEST, jobs_started
 from .oracle import compare
 
 #: explicit mtimes (ns), so no test depends on the filesystem's
@@ -196,3 +201,207 @@ def test_ivf_retrains_on_rewritten_embeddings(spark, tmp_path):
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
     want = con.execute(REGISTRY["sim_topk_ivf"].oracle).df()
     compare(sim_topk_ivf(spark, sf), want, "sim_topk_ivf")
+
+
+def _write_table_dir(d: str, n_files: int) -> None:
+    os.makedirs(d)
+    for i in range(n_files):
+        _write_ledger(os.path.join(d, f"part-{i}.parquet"), i, T0)
+
+
+@pytest.mark.parametrize("layout", ["file", "shard_copy", "directory"])
+def test_table_starts_no_job(spark, tmp_path, layout):
+    """catalog.table plans a single-file table, the spread shard copy
+    of one and a directory table without starting a Spark job."""
+    sf = str(tmp_path)
+    path = os.path.join(sf, "ledger.parquet")
+    if layout == "directory":
+        _write_table_dir(path, 3)
+    else:
+        _write_ledger(path, 1, T0)
+    spread = layout == "shard_copy"
+    assert jobs_started(spark, lambda: table(spark, sf, "ledger", spread)) == 0
+    df = table(spark, sf, "ledger", spread)
+    assert df.schema == spark.read.parquet(path).schema
+    want = 3 * SHARD_MIN_ROWS if layout == "directory" else SHARD_MIN_ROWS
+    assert df.agg(F.sum("v")).first()[0] == want
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_footer_schema_matches_inference_on_testdata(spark, name):
+    path = os.path.join(SF_TEST, f"{name}.parquet")
+    got = catalog._footer_schema(spark, path)
+    assert got is not None
+    assert got == spark.read.parquet(path).schema
+
+
+def _synthetic_columns() -> pa.Table:
+    """One column per parquet type whose Spark mapping depends on the
+    converter or the session's conf."""
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
+    return pa.table(
+        {
+            "ts_nanos": pa.array([10**18 + 7], pa.timestamp("ns")),
+            "ts_nanos_utc": pa.array([10**18 + 7], pa.timestamp("ns", "UTC")),
+            "ts_micros": pa.array([ts], pa.timestamp("us")),
+            "ts_micros_utc": pa.array([ts], pa.timestamp("us", "UTC")),
+            "ts_millis_utc": pa.array([ts], pa.timestamp("ms", "UTC")),
+            "day": pa.array([datetime.date(2024, 1, 2)], pa.date32()),
+            "dec_small": pa.array([decimal.Decimal("1.25")], pa.decimal128(5, 2)),
+            "dec_big": pa.array(
+                [decimal.Decimal("123456789012345678.901")],
+                pa.decimal128(30, 3),
+            ),
+            "vec": pa.array([[1.0, 2.5]], pa.list_(pa.float32())),
+            "rec": pa.array(
+                [{"a": 1, "b": "x"}],
+                pa.struct([("a", pa.int32()), ("b", pa.string())]),
+            ),
+            "tags": pa.array([[("k", 1)]], pa.map_(pa.string(), pa.int64())),
+            "i8": pa.array([-3], pa.int8()),
+            "i16": pa.array([300], pa.int16()),
+            "u8": pa.array([200], pa.uint8()),
+            "blob": pa.array([b"\x00\xff"], pa.binary()),
+            "text": pa.array(["t"], pa.string()),
+            "flag": pa.array([True], pa.bool_()),
+            "f64": pa.array([0.5], pa.float64()),
+        }
+    )
+
+
+def test_footer_schema_matches_inference_on_synthetic_files(spark, tmp_path):
+    """The footer schema equals the inferred one for the parquet types
+    the converter maps by the session's conf (TIMESTAMP(NANOS) under
+    nanosAsLong, micros with and without UTC adjustment), for nested
+    and narrow types, with and without the dictionary, and for a
+    Spark-written file, whose footer carries Spark's own row schema."""
+    tbl = _synthetic_columns()
+    files = {}
+    for i, kw in enumerate(
+        [
+            {"coerce_timestamps": None, "version": "2.6"},
+            {"coerce_timestamps": None, "use_dictionary": False},
+        ]
+    ):
+        files[i] = str(tmp_path / f"pa{i}.parquet")
+        pq.write_table(tbl, files[i], **kw)
+    out = str(tmp_path / "spark_written")
+    spark.range(3).selectExpr(
+        "id",
+        "CAST(id AS TINYINT) AS i8",
+        "CAST(id AS DECIMAL(12, 4)) AS dec",
+        "TIMESTAMP'2024-01-01 00:00:00' AS ts",
+        "TIMESTAMP_NTZ'2024-01-01 00:00:00' AS ts_ntz",
+        "array(CAST(id AS FLOAT)) AS vec",
+        "named_struct('x', id, 'y', map('k', id)) AS rec",
+        "CAST(id AS STRING) AS s",
+    ).coalesce(1).write.parquet(out)
+    files["spark"] = next(
+        os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")
+    )
+    for f in files.values():
+        got = catalog._footer_schema(spark, f)
+        assert got is not None, f
+        assert got == spark.read.parquet(f).schema, f
+    # the nanos columns are longs only because the session reads them
+    # as such (session.RUNTIME_CONF)
+    got = catalog._footer_schema(spark, files[0])
+    assert got["ts_nanos"].dataType.typeName() == "long"
+
+
+def test_unreadable_footer_keeps_sparks_error(spark, tmp_path):
+    """A file whose footer the driver cannot read or convert gets no
+    footer schema, so Spark's inference reports it as before: a
+    file that is not parquet, and TIMESTAMP(NANOS) with nanosAsLong
+    off, which Spark cannot map."""
+    bad = str(tmp_path / "bad.parquet")
+    with open(bad, "wb") as f:
+        f.write(b"not a parquet file")
+    assert catalog._footer_schema(spark, bad) is None
+    with pytest.raises(Exception):
+        catalog.parquet_schema(spark, bad)
+
+    nanos = str(tmp_path / "nanos.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1], pa.timestamp("ns"))}),
+        nanos,
+        coerce_timestamps=None,
+        version="2.6",
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert catalog._footer_schema(spark, nanos) is None
+        with pytest.raises(Exception, match="TIMESTAMP\\(NANOS"):
+            catalog.parquet_schema(spark, nanos)
+    finally:
+        spark.conf.set(key, old)
+    assert catalog._footer_schema(spark, nanos).names == ["ts"]
+
+
+def test_directory_with_common_metadata(spark, tmp_path):
+    """A directory whose `_common_metadata` summary names a column no
+    data file has: the schema comes from the summary, as inference
+    takes it, and the table opens with no job."""
+    sf = str(tmp_path)
+    d = os.path.join(sf, "ledger.parquet")
+    os.makedirs(d)
+    pq.write_table(
+        pa.table({"k": [1, 2], "v": [10, 20]}), os.path.join(d, "p0.parquet")
+    )
+    pq.write_table(
+        pa.table({"k": [3], "v": [30]}), os.path.join(d, "p1.parquet")
+    )
+    pq.write_metadata(
+        pa.schema([("k", pa.int64()), ("v", pa.int64()), ("z", pa.float32())]),
+        os.path.join(d, "_common_metadata"),
+    )
+    assert catalog._inference_file(d)[0] == os.path.join(d, "_common_metadata")
+    assert jobs_started(spark, lambda: table(spark, sf, "ledger")) == 0
+    df = table(spark, sf, "ledger")
+    assert df.schema == spark.read.parquet(d).schema
+    assert df.schema.names == ["k", "v", "z"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1, 10, None),
+        (2, 20, None),
+        (3, 30, None),
+    ]
+
+
+def test_partitioned_directory(spark, tmp_path):
+    """A `k=v` partitioned directory opens with no job and the inferred
+    schema (data columns, then the partition column). When a partition
+    column is also a file column, a given schema would reorder and
+    retype it, so that layout keeps Spark's inference."""
+    sf = str(tmp_path)
+    d = os.path.join(sf, "ledger.parquet")
+    for day in (2, 1):
+        os.makedirs(os.path.join(d, f"day={day}"))
+        pq.write_table(
+            pa.table({"v": [day * 10, day * 10 + 1]}),
+            os.path.join(d, f"day={day}", "p.parquet"),
+        )
+    os.makedirs(os.path.join(d, "_temporary", "0"))
+    assert jobs_started(spark, lambda: table(spark, sf, "ledger")) == 0
+    df = table(spark, sf, "ledger")
+    assert df.schema == spark.read.parquet(d).schema
+    assert df.schema.names == ["v", "day"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (10, 1),
+        (11, 1),
+        (20, 2),
+        (21, 2),
+    ]
+
+    both = os.path.join(sf, "both.parquet")
+    for day in (1, 2):
+        os.makedirs(os.path.join(both, f"day={day}"))
+        pq.write_table(
+            pa.table({"day": [day], "v": [day]}),
+            os.path.join(both, f"day={day}", "p.parquet"),
+        )
+    assert catalog._footer_schema(spark, both) is None
+    got = table(spark, sf, "both")
+    assert got.schema == spark.read.parquet(both).schema
+    assert sorted(tuple(r) for r in got.collect()) == [(1, 1), (2, 2)]
