@@ -8,9 +8,10 @@ vectorized reader gives split-per-rowgroup parallelism, and filters /
 projections expressed on the returned DataFrame push down into the scan
 (verify with .explain: PushedFilters / ReadSchema).
 
-A table opens without a Spark job: `parquet_schema` reads the schema
+A table opens without a Spark job: `read_parquet` reads the schema
 from one parquet footer on the driver, through Spark's own converter,
-and the reader is given it instead of inferring it.
+and the reader is given it instead of inferring it. The package reads
+back the parquet it writes itself the same way.
 """
 
 from __future__ import annotations
@@ -176,17 +177,11 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     return schema
 
 
-def parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema `spark.read.parquet(path)` has, read from a parquet
-    footer when `_footer_schema` can (about 10 py4j calls and a few
-    ms, no job), else inferred by Spark (one job)."""
-    schema = _footer_schema(spark, path)
-    return spark.read.parquet(path).schema if schema is None else schema
-
-
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """`spark.read.parquet(path)`, given the footer schema when
-    `_footer_schema` has one, so planning it starts no job."""
+    `_footer_schema` has one (about 10 py4j calls and a few ms), so
+    planning it starts no job; else Spark infers it (one job). The
+    one reader for parquet the package loads or writes itself."""
     schema = _footer_schema(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
@@ -257,7 +252,7 @@ def table(
     The DataFrame is memoized per (path, spread) and reused while the
     application and the files under the path are unchanged, and a
     suite run calls table() hundreds of times. Building one is cheap:
-    the reader is given the schema `parquet_schema` reads from a
+    `read_parquet` gives the reader the schema it reads from a
     footer on the driver (about 4 ms), so the load starts no Spark
     job. Left to infer the schema, `spark.read.parquet` started one
     job per load (SchemaMergeUtils.mergeSchemasInParallel, about
@@ -289,9 +284,9 @@ def _load(
     spark: SparkSession, sf_dir: str, name: str, path: str, spread: bool
 ) -> DataFrame:
     if not spread:
-        return _convert_nano_ts(_read_parquet(spark, path), name)
+        return _convert_nano_ts(read_parquet(spark, path), name)
     n = spark.sparkContext.defaultParallelism
     shard_dir = None if os.path.isdir(path) else _sharded_copy(path, n)
     if shard_dir is None:
         return table(spark, sf_dir, name).repartition(n)
-    return _convert_nano_ts(_read_parquet(spark, shard_dir), name)
+    return _convert_nano_ts(read_parquet(spark, shard_dir), name)

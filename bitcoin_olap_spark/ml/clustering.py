@@ -1,60 +1,19 @@
 """Distributed clustering over embedding columns.
 
-KMeans is the coarse-quantization workhorse of a vector pipeline: the
-same centroids that cluster a corpus also shard it into IVF inverted
-lists (operators/vectors.ivf_topk builds its own lightweight variant).
-Here the full pyspark.ml estimator runs in-engine: Arrow-free
-array->vector conversion, distributed Lloyd iterations (each a map +
-tree-aggregate of partial centroid sums — no per-point driver traffic),
-fixed seed for reproducibility.
+Two quantizers. `kmeans_assign` runs the pyspark.ml KMeans estimator
+in-engine (distributed Lloyd iterations, each a map + tree-aggregate
+of partial centroid sums, fixed seed for reproducibility); it backs
+`ml_kmeans`. The fixed-point Lloyd machinery (`quantize_fixed`,
+`lloyd_fixed`, `pq_lloyd_fixed`) replays exactly in SQL, so the
+quantizers it trains carry a full DuckDB oracle: the IVF inverted
+lists of operators/vectors.ivf_topk_exact, SemDeDup's clusters and
+the PQ codebooks of operators/vectors.pq_topk_adc.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def kmeans_centroids(
-    df: DataFrame,
-    vec_col: str,
-    k: int,
-    seed: int = 42,
-    max_iter: int = 20,
-    spherical: bool = True,
-) -> DataFrame:
-    """Fit KMeans and return just the centroids as (cid INT, center
-    ARRAY<DOUBLE>) — the coarse-quantizer feed for IVF inverted lists
-    (operators/vectors.ivf_topk takes this through its centroid seam).
-    Deterministic for a fixed seed + input.
-
-    spherical=True L2-normalizes vectors before fitting (spherical
-    k-means): the IVF probe ranks lists by COSINE, and Euclidean
-    clustering of unnormalized vectors optimizes a different metric —
-    measured as a ~40-point recall drop on the synthetic corpus when
-    the quantizer and probe disagree."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    xs = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    if spherical:
-        norm = F.sqrt(
-            F.aggregate(
-                F.transform(xs, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-        xs = F.transform(xs, lambda x: x / F.greatest(norm, F.lit(1e-30)))
-    feat = df.select(array_to_vector(xs).alias("features"))
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feat)
-    return df.sparkSession.createDataFrame(
-        [
-            (i, [float(x) for x in c])
-            for i, c in enumerate(model.clusterCenters())
-        ],
-        "cid int, center array<double>",
-    )
 
 
 def kmeans_assign(

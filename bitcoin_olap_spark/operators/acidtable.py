@@ -130,11 +130,11 @@ def _read_raw(root: str, version: int) -> dict:
 
 def _resolve(root: str, version: int) -> tuple[list[str], dict, list[str]]:
     """Snapshot `version` as (data files, per-file stats, deletion-
-    vector files): walk back to the nearest checkpoint (or legacy full
-    manifest, or version 0) at-or-below, then replay the delta
-    manifests forward. Bounded by CHECKPOINT_EVERY deltas after the
-    first checkpoint exists. Stats ride with their files: a removed
-    file drops its entry, an added file brings its commit's entry.
+    vector files): walk back to the nearest checkpoint (or version 0)
+    at-or-below, then replay the delta manifests forward. Bounded by
+    CHECKPOINT_EVERY deltas after the first checkpoint exists. Stats
+    ride with their files: a removed file drops its entry, an added
+    file brings its commit's entry.
     Vectors are add-only until a 'dv_reset' replaces the set; ones
     targeting since-removed files are inert, not invalid (the
     anti-join simply never matches them)."""
@@ -153,11 +153,7 @@ def _resolve(root: str, version: int) -> tuple[list[str], dict, list[str]]:
             files, stats = set(c["files"]), c.get("stats", {})
             dvs = set(c.get("dvs", ()))
             break
-        m = _read_raw(root, v)
-        if "files" in m:  # legacy full manifest (pre-delta, pre-DV format)
-            files, stats, dvs = set(m["files"]), m.get("stats") or {}, set()
-            break
-        deltas.append(m)
+        deltas.append(_read_raw(root, v))
         if v == 0:  # version 0's delta is against the empty table
             files, stats, dvs = set(), {}, set()
             break
@@ -177,11 +173,6 @@ def _resolve(root: str, version: int) -> tuple[list[str], dict, list[str]]:
 def _resolve_files(root: str, version: int) -> list[str]:
     """The closed data-file list of snapshot `version`."""
     return _resolve(root, version)[0]
-
-
-def _resolve_dv_files(root: str, version: int) -> list[str]:
-    """Accumulated deletion-vector files visible at `version`."""
-    return _resolve(root, version)[2]
 
 
 def read_manifest(
@@ -1129,7 +1120,6 @@ def change_inventory(
             not m.get("remove")
             and not m.get("dv")
             and m.get("dv_reset") is None
-            and "files" not in m
         ):
             out += [(f, "insert", v) for f in sorted(m.get("add", ()))]
         else:
@@ -1387,8 +1377,7 @@ def table_history(spark: SparkSession, root: str) -> DataFrame:
     rows = []
     for v in range(first_v, head + 1):
         m = _read_raw(root, v)
-        legacy = m.get("files")
-        add = m.get("add", legacy or ())
+        add = m["add"]
         rows.append(
             (
                 v,
@@ -1545,11 +1534,8 @@ def vacuum(
         for v in range(first_v, latest + 1):
             m = _read_raw(root, v)
             if v > first_v:
-                if "files" in m:  # legacy full manifest, pre-DV
-                    files, dvs = set(m["files"]), set()
-                else:
-                    files.difference_update(m["remove"])
-                    files.update(m["add"])
+                files.difference_update(m["remove"])
+                files.update(m["add"])
                 if "dv_reset" in m:
                     dvs = set(m["dv_reset"])
                 dvs.update(m.get("dv", ()))

@@ -1,21 +1,22 @@
 """Vector-similarity operators over embedding columns (array<float>).
 
-Two accumulation modes, both computed per-pair with `F.zip_with` +
-`F.aggregate` folds (one codegen'd expression per pair — never an
-explode-to-positions join, which collapses onto #dimensions join keys
-and dies at any scale):
+The dense-vector operators score through Arrow-batched numpy kernels
+(`mapInPandas`): `exact_score_pairs_arrow` for a pair relation,
+`cosine_pairs_exact_blocked` for block pairs, `assign_fixed_arrow`,
+`pq_codes_arrow` and `lsh_buckets_arrow` for quantizer keys. A Spark
+higher-order-function fold (`zip_with` + `aggregate`) computes the
+same values but evaluates its lambdas interpreted per element, about
+50x slower.
 
-- Exact mode (`cosine_pairs_exact`, `cosine_col_exact`): each product
-  is truncated to fixed-point (floor(p * 1e16) as BIGINT — the floor
-  input is the identical IEEE double in every engine) and accumulated
-  with exact integer addition — associative, therefore bit-identical
-  between Spark and DuckDB regardless of summation order. The 1e-16
-  truncation costs ~6e-15 relative error on unit-scale vectors —
-  far below the 6-dp output rounding. Used for oracle-checked
-  operators. (A DECIMAL fold would be cleaner but Spark's decimal
-  addition widens the type, breaking the fold's acc-type closure.)
-- Float mode (`cosine_col`): double accumulation — fastest, sum order
-  is the fold order (deterministic within Spark, not across engines).
+Scoring is exact: each product is truncated to fixed-point
+(floor(p * 1e16) as BIGINT — the floor input is the identical IEEE
+double in every engine) and accumulated with exact integer addition
+— associative, therefore bit-identical between Spark and DuckDB
+regardless of summation order. The 1e-16 truncation costs ~6e-15
+relative error on unit-scale vectors — far below the 6-dp output
+rounding. Quantizer keys (IVF lists, PQ codes) are int64 squared-L2
+distances over fixed-point vectors (ml/clustering.quantize_fixed),
+exact by construction.
 
 Brute-force top-k cross-joins queries x corpus: O(Q*N) rows — fine for
 small Q (point lookups). The LSH-bucketed variant prunes candidates by
@@ -26,7 +27,7 @@ queries, and co-partition both on the signature (an IVF-style layout).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -42,7 +43,8 @@ FIXED_POINT_SCALE = 1e16
 #: shards the work but cannot shrink it, so above this the job is not
 #: slow, it is impossible (200k rows is already 2e10 pair evaluations).
 #: The exact tier is the VERIFIER (SURVEY §2.11); the scale tier is
-#: dedup_minhash_lsh (near-dup pairs) / topk_lsh / ivf_topk (top-k),
+#: dedup_minhash_lsh (near-dup pairs) / topk_lsh / ivf_topk_exact /
+#: pq_topk_adc (top-k),
 #: which prune candidates before scoring. Callers with a genuinely
 #: bounded larger input pass an explicit max_rows.
 DEFAULT_ALLPAIRS_MAX_ROWS = 200_000
@@ -58,40 +60,10 @@ def _gate_allpairs(df: DataFrame, op: str, max_rows: int) -> None:
             f"max_rows={max_rows} (O(N^2) pairs). This operator is the "
             "bounded verifier tier; for large corpora use "
             "dedup_minhash_lsh (near-duplicate pairs) or "
-            "topk_lsh / ivf_topk (approximate top-k), or pass a larger "
+            "topk_lsh / ivf_topk_exact / pq_topk_adc (approximate "
+            "top-k), or pass a larger "
             "max_rows explicitly if the input is genuinely bounded."
         )
-
-
-def _fixed_fold(products: Column) -> Column:
-    """Order-independent sum of an array of doubles: floor each product
-    to fixed-point BIGINT (same IEEE double -> same long everywhere),
-    accumulate with exact long addition."""
-    return F.aggregate(
-        products,
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + F.floor(v * F.lit(FIXED_POINT_SCALE)).cast("long"),
-    )
-
-
-def norm_sq_exact(vec_col: Column) -> Column:
-    """Fixed-point sum of squares of an array<float> column (BIGINT)."""
-    return _fixed_fold(
-        F.transform(vec_col, lambda x: (x.cast("double") * x.cast("double")))
-    )
-
-
-def cosine_col_exact(vec_a: Column, vec_b: Column) -> Column:
-    """Engine-stable cosine: dot and norms fold as fixed-point BIGINT
-    (associative — bit-identical to DuckDB's SUM over unnest), final
-    divide/sqrt in double. The fixed-point scale cancels in the
-    ratio."""
-    dot = _fixed_fold(
-        F.zip_with(vec_a, vec_b, lambda x, y: x.cast("double") * y.cast("double"))
-    )
-    return dot.cast("double") / F.sqrt(
-        norm_sq_exact(vec_a).cast("double") * norm_sq_exact(vec_b).cast("double")
-    )
 
 
 def cosine_pairs_exact(
@@ -109,15 +81,11 @@ def cosine_pairs_exact(
     with id_a != id_b are scored.
 
     The pair relation is a broadcast cross join (queries x corpus); the
-    scoring is an Arrow-batched `mapInPandas` doing the same fixed-point
-    accumulation in vectorized numpy int64 — identical values to the
-    column-level fold (`cosine_col_exact`), ~50x its throughput (Spark
-    higher-order-function lambdas are interpreted per element, not
-    codegen'd). At 100 TB the corpus side streams; only the (small)
-    query side broadcasts, or LSH bucketing prunes pairs first
-    (topk_lsh) — all-pairs self-join is inherently O(N^2) and is the
-    verifier, not the scale path; the self-pairs mode is therefore
-    gated by `max_rows` (DEFAULT_ALLPAIRS_MAX_ROWS).
+    scoring is `exact_score_pairs_arrow`. At 100 TB the corpus side
+    streams; only the (small) query side broadcasts, or LSH bucketing
+    prunes pairs first (topk_lsh) — all-pairs self-join is inherently
+    O(N^2) and is the verifier, not the scale path; the self-pairs
+    mode is therefore gated by `max_rows` (DEFAULT_ALLPAIRS_MAX_ROWS).
     """
     if queries is None:
         _gate_allpairs(df, "cosine_pairs_exact", max_rows)
@@ -141,16 +109,13 @@ def exact_score_pairs_arrow(
     pairs: DataFrame,
     a_id: str,
     b_id: str,
-    a_vec: str = "_va",
-    b_vec: str = "_vb",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """EXACT-mode cosine over a pair relation, Arrow-batched numpy:
-    (a_id, b_id, [extra_cols...,] cosine double) with the same
-    fixed-point accumulation as `cosine_col_exact` — bit-identical
-    values, ~50x the throughput of the interpreted
-    higher-order-function fold. The shared verify kernel of the exact
-    all-pairs and LSH operators. `extra_cols` pass through untouched
+    (a_id, b_id, [extra_cols...,] cosine double) from the vector
+    columns `_va` and `_vb`, with the module's fixed-point
+    accumulation. The shared verify kernel of the exact all-pairs,
+    LSH and IVF operators. `extra_cols` pass through untouched
     (e.g. cluster id / centroid distance for SemDeDup's survivor rule)
     so callers don't pay a join-back to recover pair metadata."""
     import numpy as np
@@ -171,8 +136,8 @@ def exact_score_pairs_arrow(
             # widen to double BEFORE multiplying — matches
             # x.cast('double') * y.cast('double') and the oracle's
             # CAST(unnest(...) AS DOUBLE) exactly
-            va = np.stack(pdf[a_vec].values).astype(np.float64)
-            vb = np.stack(pdf[b_vec].values).astype(np.float64)
+            va = np.stack(pdf["_va"].values).astype(np.float64)
+            vb = np.stack(pdf["_vb"].values).astype(np.float64)
             scale = FIXED_POINT_SCALE
             dot = np.floor((va * vb) * scale).astype(np.int64).sum(axis=1)
             na = np.floor((va * va) * scale).astype(np.int64).sum(axis=1)
@@ -194,7 +159,6 @@ def assign_fixed_arrow(
     id_col: str,
     cents: list[list[int]],
     k: int,
-    xq_col: str = "xq",
     nprobe: int | None = None,
     keep_cols: tuple[str, ...] = (),
     with_dist: bool = False,
@@ -227,7 +191,7 @@ def assign_fixed_arrow(
     for c in keep_cols:
         fields.append(f"{c} {df.schema[c].dataType.simpleString()}")
     out_schema = ", ".join(fields)
-    cols = [id_col, xq_col, *keep_cols]
+    cols = [id_col, "xq", *keep_cols]
 
     def assign(batches):
         for pdf in batches:
@@ -236,7 +200,7 @@ def assign_fixed_arrow(
                 continue
             for lo in range(0, n, 2048):
                 hi = min(lo + 2048, n)
-                X = np.stack(pdf[xq_col].values[lo:hi]).astype(np.int64)
+                X = np.stack(pdf["xq"].values[lo:hi]).astype(np.int64)
                 d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
                 keys = d * k + np.arange(k, dtype=np.int64)[None, :]
                 out = {}
@@ -268,7 +232,6 @@ def lloyd_partials_arrow(
     df: DataFrame,
     cents: list[list[int]],
     k: int,
-    xq_col: str = "xq",
 ) -> DataFrame:
     """One Lloyd iteration's MAP SIDE as an Arrow-batched combine:
     assign each row to its argmin centroid (same int64 keys as
@@ -291,7 +254,7 @@ def lloyd_partials_arrow(
                 continue
             for lo in range(0, n, 4096):
                 hi = min(lo + 4096, n)
-                X = np.stack(pdf[xq_col].values[lo:hi]).astype(np.int64)
+                X = np.stack(pdf["xq"].values[lo:hi]).astype(np.int64)
                 d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
                 cid = (d * k + np.arange(k, dtype=np.int64)[None, :]).min(
                     axis=1
@@ -312,7 +275,7 @@ def lloyd_partials_arrow(
                     }
                 )
 
-    return df.select(xq_col).mapInPandas(
+    return df.select("xq").mapInPandas(
         part, schema="cid long, j long, s long, n long"
     )
 
@@ -322,7 +285,6 @@ def pq_lloyd_partials_arrow(
     cents: list[list[int]],
     k: int,
     m: int,
-    xq_col: str = "xq",
 ) -> DataFrame:
     """One PQ-Lloyd iteration's MAP SIDE for ALL m subspaces at once,
     Arrow-batched: per row, each of the m subvectors assigns to its
@@ -348,7 +310,7 @@ def pq_lloyd_partials_arrow(
                 continue
             for lo in range(0, n, 4096):
                 hi = min(lo + 4096, n)
-                X = np.stack(pdf[xq_col].values[lo:hi]).astype(np.int64)
+                X = np.stack(pdf["xq"].values[lo:hi]).astype(np.int64)
                 Xs = X.reshape(hi - lo, m, sub)
                 d = ((Xs[:, None, :, :] - Cs[None, :, :, :]) ** 2).sum(
                     axis=3
@@ -378,7 +340,7 @@ def pq_lloyd_partials_arrow(
                     }
                 )
 
-    return df.select(xq_col).mapInPandas(
+    return df.select("xq").mapInPandas(
         part, schema="sub long, cid long, jj long, s long, n long"
     )
 
@@ -398,7 +360,8 @@ def cosine_pairs_exact_blocked(
     vectors once (one shuffle); block pairs (bi <= bj) cross-join —
     B*(B+1)/2 rows total — and each pair's full bipartite cosine matrix
     is computed in one numpy kernel with the same floor-to-fixed-point
-    int64 accumulation as `cosine_col_exact` (bit-identical results).
+    int64 accumulation as `exact_score_pairs_arrow` (bit-identical
+    results).
     Arrow traffic is O(N * B) vector copies instead of O(N^2) (the
     per-pair formulation ships both vectors for every pair), and only
     pairs passing `threshold` leave Python. This is distributed block
@@ -490,27 +453,6 @@ def cosine_pairs_exact_blocked(
     )
 
 
-def cosine_col(vec_a: Column, vec_b: Column) -> Column:
-    """Production cosine: zip_with products, sequential F.aggregate
-    fold, double math — one codegen'd expression per pair."""
-    dot = F.aggregate(
-        F.zip_with(vec_a, vec_b, lambda x, y: (x * y).cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.aggregate(
-        F.transform(vec_a, lambda x: (x * x).cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    nb = F.aggregate(
-        F.transform(vec_b, lambda x: (x * x).cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return dot / F.sqrt(na * nb)
-
-
 def topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -541,131 +483,6 @@ def topk_bruteforce(
     return ranked.filter(F.col("rank") <= k)
 
 
-def score_pairs_arrow(
-    pairs: DataFrame,
-    a_id: str,
-    b_id: str,
-    a_vec: str = "_va",
-    b_vec: str = "_vb",
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Float-mode cosine over a pair relation, Arrow-batched numpy:
-    (a_id, b_id, *extra_cols, cosine double). The generic scoring
-    kernel the ANN operators share — pairs come from whatever pruning
-    strategy (cross join, LSH bucket, IVF probe), scoring cost is one
-    vectorized matmul-row per batch."""
-    import numpy as np
-    import pandas as pd
-
-    schema_ids = ", ".join(
-        f"{c} {pairs.schema[c].dataType.simpleString()}"
-        for c in (a_id, b_id, *extra_cols)
-    )
-    out_schema = f"{schema_ids}, cosine double"
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            va = np.stack(pdf[a_vec].values).astype(np.float64)
-            vb = np.stack(pdf[b_vec].values).astype(np.float64)
-            cos = (va * vb).sum(axis=1) / np.sqrt(
-                (va * va).sum(axis=1) * (vb * vb).sum(axis=1)
-            )
-            out = {c: pdf[c] for c in (a_id, b_id, *extra_cols)}
-            out["cosine"] = cos
-            yield pd.DataFrame(out)
-
-    return pairs.mapInPandas(run, schema=out_schema)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-style approximate top-k: coarse-quantize the corpus into
-    `n_centroids` inverted lists, probe only the query's `nprobe`
-    nearest lists. Scoring cost drops from O(Q*N) to
-    O(Q*N*nprobe/n_centroids) plus the one-off O(N*n_centroids)
-    assignment.
-
-    `centroids` is the quantizer seam: a (cid, center ARRAY) relation —
-    ml/clustering.kmeans_centroids is the production feed (what the
-    registered sim_topk_ivf query uses). When None, falls back to the
-    `n_centroids` lowest-id corpus vectors — deterministic,
-    training-free, useful as a dependency-light baseline; the
-    assignment/probe/score dataflow is identical either way.
-
-    At scale: assignment is a map-side cross join against broadcast
-    centroids; the candidate join shuffles on centroid id — lists are
-    the partitioning unit, exactly how a distributed IVF shards.
-    """
-    if centroids is not None:
-        cent = centroids.select(
-            F.col(centroids.columns[0]).cast("long").alias("cid"),
-            F.col(centroids.columns[1]).alias("_vb"),
-        )
-    else:
-        cent = (
-            corpus.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).cast("long").alias("cid"),
-                F.col(vec_col).alias("_vb"),
-            )
-        )
-
-    def nearest(df: DataFrame, n: int, out: str) -> DataFrame:
-        pairs = df.select(
-            F.col(id_col), F.col(vec_col).alias("_va")
-        ).crossJoin(F.broadcast(cent))
-        scored = score_pairs_arrow(pairs, id_col, "cid")
-        w = Window.partitionBy(id_col).orderBy(
-            F.desc("cosine"), F.asc("cid")
-        )
-        return (
-            scored.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= n)
-            .select(F.col(id_col).alias(out), "cid")
-        )
-
-    lists = nearest(corpus, 1, "vec_id_c")  # inverted lists: vector -> 1 list
-    probes = nearest(queries, nprobe, "query_id")
-
-    corpus_v = corpus.select(
-        F.col(id_col).alias("vec_id_c"), F.col(vec_col).alias("_vb")
-    )
-    query_v = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_va")
-    )
-    cand = (
-        probes.join(lists, "cid")
-        .filter(F.col("query_id") != F.col("vec_id_c"))
-        .select("query_id", "vec_id_c")
-        .distinct()
-        .join(F.broadcast(query_v), "query_id")
-        .join(corpus_v, "vec_id_c")
-    )
-    scored = score_pairs_arrow(cand, "query_id", "vec_id_c").select(
-        "query_id",
-        F.col("vec_id_c").alias("vec_id"),
-        F.round("cosine", 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def ivf_topk_exact(
     corpus: DataFrame,
     queries: DataFrame,
@@ -682,11 +499,9 @@ def ivf_topk_exact(
     init, integer argmin assignment, floor-division means), inverted
     lists and probe ranking use the same int64 squared-L2 keys, and
     candidates score through the exact fixed-point cosine kernel —
-    every stage is reproducible in ANSI SQL, so unlike `ivf_topk`
-    (the pyspark.ml-quantized variant, whose seeded k-means|| init no
-    external engine can replay) this one carries a full DuckDB
-    oracle. On the unit-norm corpus L2-nearest == cosine-nearest, so
-    the coarse and fine metrics agree.
+    every stage is reproducible in ANSI SQL, so the IVF index
+    carries a full DuckDB oracle. On the unit-norm corpus L2-nearest
+    == cosine-nearest, so the coarse and fine metrics agree.
 
     Shuffle inventory: Lloyd pays one bounded-reduce aggregate per
     iteration (Arrow map-side combine, ml/clustering.lloyd_fixed);
@@ -771,7 +586,6 @@ def pq_codes_arrow(
     cents: list[list[int]],
     m: int,
     k: int,
-    xq_col: str = "xq",
 ) -> DataFrame:
     """MAP-ONLY product-quantization encoder, Arrow-batched numpy:
     split each fixed-point vector into `m` contiguous subvectors of
@@ -801,7 +615,7 @@ def pq_codes_arrow(
                 continue
             for lo in range(0, n, 2048):
                 hi = min(lo + 2048, n)
-                X = np.stack(pdf[xq_col].values[lo:hi]).astype(np.int64)
+                X = np.stack(pdf["xq"].values[lo:hi]).astype(np.int64)
                 Xs = X.reshape(hi - lo, m, sub)
                 d = ((Xs[:, None, :, :] - Cs[None, :, :, :]) ** 2).sum(
                     axis=3
@@ -815,7 +629,7 @@ def pq_codes_arrow(
                     }
                 )
 
-    return df.select(id_col, xq_col).mapInPandas(encode, schema=out_schema)
+    return df.select(id_col, "xq").mapInPandas(encode, schema=out_schema)
 
 
 def pq_topk_adc(
@@ -1015,37 +829,6 @@ def lsh_plane(dim: int, plane: int) -> list[float]:
     ]
 
 
-def lsh_bucket_signature(
-    vec_col: Column, dim: int, num_planes: int = 8
-) -> Column:
-    """Random-hyperplane LSH signature: bit i = sign of <v, plane_i>.
-    Returns an int bucket id in [0, 2^num_planes).
-
-    Engine-exact by construction: the planes are ±1 literals
-    (`lsh_plane`), and each projection accumulates
-    floor(x * pm1 * 1e16) as BIGINT — the same fixed-point trick as
-    `cosine_col_exact` — so the SIGN of the projection (hence the
-    bucket) is bit-identical in any engine; a float dot product could
-    flip sign on ULP noise near zero and silently desynchronize
-    buckets between engines."""
-    sig = F.lit(0).cast("long")
-    for i in range(num_planes):
-        plane = F.array(*[F.lit(v) for v in lsh_plane(dim, i)])
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                plane,
-                lambda x, p: F.floor(
-                    x.cast("double") * p * F.lit(FIXED_POINT_SCALE)
-                ).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        sig = sig + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sig
-
-
 def lsh_buckets_arrow(
     df: DataFrame,
     id_col: str,
@@ -1055,13 +838,13 @@ def lsh_buckets_arrow(
     out_id: str,
     out_vec: str,
 ) -> DataFrame:
-    """(out_id, out_vec, bucket LONG) — the Arrow-batched twin of
-    `lsh_bucket_signature`: identical md5-parity planes, identical
-    floor(x * pm1 * 1e16) int64 accumulation (numpy evaluates the same
-    left-associated IEEE double ops), so the bucket values are
-    bit-identical to the Column-API form and the SQL oracle — at
-    vectorized throughput instead of one interpreted fold per plane
-    per row."""
+    """(out_id, out_vec, bucket LONG): random-hyperplane LSH buckets,
+    bit i = sign of <v, plane_i> over the md5-parity planes of
+    `lsh_plane`. Each projection accumulates floor(x * pm1 * 1e16) as
+    int64 (numpy evaluates the same left-associated IEEE double ops
+    as the SQL oracle), so the sign, hence the bucket, is
+    bit-identical in both engines; a float dot product could flip
+    sign on ULP noise near zero and desynchronize the buckets."""
     import numpy as np
     import pandas as pd
 

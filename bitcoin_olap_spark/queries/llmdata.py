@@ -604,10 +604,8 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-reproducible, so the oracle replays quantizer training, list
     assignment, probing, and scoring bit-for-bit — an ANN index with
     a full external-correctness proof. Tests additionally measure
-    recall against sim_topk_bruteforce (the pyspark.ml-quantized
-    ivf_topk variant keeps its own operator-level recall test; its
-    seeded k-means|| init is the one thing no external engine can
-    replay)."""
+    recall against sim_topk_bruteforce on queries outside Lloyd's
+    lowest-id seeds."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return V.ivf_topk_exact(

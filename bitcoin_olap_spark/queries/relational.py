@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import read_parquet, table
 from ..functions import exact_sum, oracle_exact_sum, ts_lit
 from ..registry import query
 
@@ -374,7 +374,7 @@ def flt_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins PartitionFilters: [dynamicpruning...] in the scan."""
     from .sources import _events_by_day
 
-    fact = spark.read.parquet(_events_by_day(spark, sf_dir)).select(
+    fact = read_parquet(spark, _events_by_day(spark, sf_dir)).select(
         "event_type", "value", "day"
     )
     dim = (

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..catalog import table
+from ..catalog import read_parquet, table
 from ..functions import exact_sum, oracle_exact_sum
 from ..registry import query
 
@@ -66,7 +66,7 @@ def src_parquet_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     glob = os.path.join(sf_dir, "lineitem*.parquet")
     return (
-        spark.read.parquet(glob)
+        read_parquet(spark, glob)
         .filter(F.col("l_quantity") >= 30)
         .select("l_orderkey", "l_linenumber", "l_quantity")
     )
@@ -136,7 +136,7 @@ def snk_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _tmp("ctas_orders_by_status.parquet")
     agg.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @query(
@@ -177,7 +177,7 @@ def snk_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         li = table(spark, sf_dir, "lineitem").select(*cols)
         li.unionAll(li).write.mode("overwrite").parquet(path)
 
-    stored = spark.read.parquet(path)
+    stored = read_parquet(spark, path)
     w = Window.partitionBy("l_orderkey", "l_linenumber").orderBy(
         "l_quantity", "l_extendedprice"
     )
@@ -188,7 +188,7 @@ def snk_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = _tmp(f"delete_where_clean_{abs(hash(sf_dir)) % 10**8}.parquet")
     cleaned.write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 @query(
@@ -295,7 +295,7 @@ def snk_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     property that makes a 100 TB date-partitioned ledger queryable.
     Written once per (process, sf_dir), like real ledgers are."""
     out = _events_by_day(spark, sf_dir)
-    got = spark.read.parquet(out).filter(
+    got = read_parquet(spark, out).filter(
         F.col("day").between(
             F.lit("2024-01-10").cast("date"), F.lit("2024-01-12").cast("date")
         )
@@ -403,7 +403,7 @@ def snk_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _tmp(f"merge_upsert_{abs(hash(sf_dir)) % 10**8}.parquet")
     merged.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @query(
@@ -503,12 +503,12 @@ def snk_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(frag)
         )
     (
-        spark.read.parquet(frag)
+        read_parquet(spark, frag)
         .repartition(4)
         .write.mode("overwrite")
         .parquet(compact)
     )
-    return spark.read.parquet(compact)
+    return read_parquet(spark, compact)
 
 
 @query(
@@ -633,7 +633,7 @@ def snk_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays DATE on disk, but the projection casts it — DATE cells
     # canonicalize differently per engine/pandas bridge (datetime.date
     # vs datetime64), TIMESTAMP cells identically.
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "event_id", "user_id", "event_type", "value",
         F.col("day").cast("timestamp").alias("day"),
     )
@@ -878,7 +878,7 @@ def snk_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # partition-directory columns read back as INT by default; the
     # oracle states BIGINT
-    got = spark.read.parquet(out).withColumn(
+    got = read_parquet(spark, out).withColumn(
         "bucket", F.col("bucket").cast("long")
     )
     return got.groupBy("bucket").agg(
@@ -953,7 +953,7 @@ def snk_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key as the view itself, so co-partitioning carries through."""
     from ..functions import day
 
-    base = spark.read.parquet(_rollup_base(spark, sf_dir))
+    base = read_parquet(spark, _rollup_base(spark, sf_dir))
     e = table(spark, sf_dir, "events")
     delta = (
         e.filter(F.col("ts") >= F.lit(_IVM_CUT).cast("timestamp"))

@@ -16,7 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import parquet_schema
+from ..catalog import read_parquet
 from ..functions import exact_sum
 
 #: gap that closes a session (native session_window semantics: an event
@@ -43,12 +43,12 @@ def _drain_memory_sink(spark: SparkSession, name: str) -> DataFrame:
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source streaming read of the events table: the stand-in for
     the BitcoinETL feed (README.md:3). The schema is read from the
-    file's footer (catalog.parquet_schema: streaming file sources
+    file's footer (catalog.read_parquet: streaming file sources
     require an explicit schema — inference would race with new files);
     nanosecond parquet timestamps surface as long and convert with
     integer DIV exactly like catalog.table."""
     path = os.path.join(sf_dir, "events.parquet")
-    schema = parquet_schema(spark, path)
+    schema = read_parquet(spark, path).schema
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -305,7 +305,7 @@ def run_to_batch(
             f.endswith(".parquet") for f in os.listdir(data)
         ):
             return spark.createDataFrame([], sdf.schema)
-        return spark.read.parquet(data)
+        return read_parquet(spark, data)
     name = f"stream_sink_{next(_MEMSINK_SEQ)}"
     q = (
         sdf.writeStream.format("memory")
@@ -336,7 +336,7 @@ def ingest_to_parquet(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return read_parquet(spark, out_dir)
 
 
 def upsert_foreachbatch(
@@ -364,7 +364,7 @@ def upsert_foreachbatch(
             F.count(F.lit(1)).alias("n_events"),
         )
         if os.path.isdir(state_path):
-            cur = batch.sparkSession.read.parquet(state_path)
+            cur = read_parquet(batch.sparkSession, state_path)
             newer = F.struct(
                 F.col("n.last.ts"), F.col("n.last.event_id")
             ) > F.struct(F.col("c.last.ts"), F.col("c.last.event_id"))
@@ -389,7 +389,7 @@ def upsert_foreachbatch(
             # two-phase: parquet cannot overwrite a path while reading it
             tmp = state_path + ".next"
             merged.write.mode("overwrite").parquet(tmp)
-            final = batch.sparkSession.read.parquet(tmp)
+            final = read_parquet(batch.sparkSession, tmp)
             final.write.mode("overwrite").parquet(state_path)
         else:
             agg.write.mode("overwrite").parquet(state_path)
@@ -401,7 +401,7 @@ def upsert_foreachbatch(
         .start()
     )
     q.awaitTermination()
-    got = spark.read.parquet(state_path)
+    got = read_parquet(spark, state_path)
     return got.select(
         "user_id",
         F.col("last.ts").alias("last_ts"),

@@ -209,19 +209,30 @@ def _write_table_dir(d: str, n_files: int) -> None:
         _write_ledger(os.path.join(d, f"part-{i}.parquet"), i, T0)
 
 
-@pytest.mark.parametrize("layout", ["file", "shard_copy", "directory"])
+@pytest.mark.parametrize(
+    "layout", ["file", "shard_copy", "directory", "spark_written"]
+)
 def test_table_starts_no_job(spark, tmp_path, layout):
     """catalog.table plans a single-file table, the spread shard copy
-    of one and a directory table without starting a Spark job."""
+    of one and a directory table without starting a Spark job, and
+    catalog.read_parquet plans a directory Spark wrote (part files
+    beside `_SUCCESS` and `.crc` files) the same way."""
     sf = str(tmp_path)
     path = os.path.join(sf, "ledger.parquet")
-    if layout == "directory":
-        _write_table_dir(path, 3)
+    if layout == "spark_written":
+        rows = spark.range(SHARD_MIN_ROWS).selectExpr("id AS k", "1L AS v")
+        rows.write.parquet(path)
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+        load = lambda: catalog.read_parquet(spark, path)  # noqa: E731
     else:
-        _write_ledger(path, 1, T0)
-    spread = layout == "shard_copy"
-    assert jobs_started(spark, lambda: table(spark, sf, "ledger", spread)) == 0
-    df = table(spark, sf, "ledger", spread)
+        if layout == "directory":
+            _write_table_dir(path, 3)
+        else:
+            _write_ledger(path, 1, T0)
+        spread = layout == "shard_copy"
+        load = lambda: table(spark, sf, "ledger", spread)  # noqa: E731
+    assert jobs_started(spark, load) == 0
+    df = load()
     assert df.schema == spark.read.parquet(path).schema
     want = 3 * SHARD_MIN_ROWS if layout == "directory" else SHARD_MIN_ROWS
     assert df.agg(F.sum("v")).first()[0] == want
@@ -319,7 +330,7 @@ def test_unreadable_footer_keeps_sparks_error(spark, tmp_path):
         f.write(b"not a parquet file")
     assert catalog._footer_schema(spark, bad) is None
     with pytest.raises(Exception):
-        catalog.parquet_schema(spark, bad)
+        catalog.read_parquet(spark, bad).schema
 
     nanos = str(tmp_path / "nanos.parquet")
     pq.write_table(
@@ -334,7 +345,7 @@ def test_unreadable_footer_keeps_sparks_error(spark, tmp_path):
     try:
         assert catalog._footer_schema(spark, nanos) is None
         with pytest.raises(Exception, match="TIMESTAMP\\(NANOS"):
-            catalog.parquet_schema(spark, nanos)
+            catalog.read_parquet(spark, nanos).schema
     finally:
         spark.conf.set(key, old)
     assert catalog._footer_schema(spark, nanos).names == ["ts"]

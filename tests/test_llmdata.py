@@ -104,48 +104,6 @@ def test_exact_dedup_finds_planted_copies(spark, docs):
     assert two.filter(F.col("keep_id") >= 100000).count() == 0
 
 
-def test_ivf_topk_recall_vs_bruteforce(spark):
-    """IVF with k-means centroids, nprobe=4 of 16 lists scans ~25% of
-    the corpus per query and must beat the random-probe baseline
-    (nprobe/n_centroids = 0.25) by a clear margin on the exact top-10.
-
-    The comparison deliberately uses the K-MEANS quantizer, not the
-    lowest-id stand-in: the stand-in scores a misleading ~1.0 recall
-    HERE only because the test queries (vec_id < 5) are themselves
-    among the lowest-id centroids, making every query's neighborhood
-    its own inverted list by construction — for any query outside the
-    centroid set that advantage vanishes."""
-    from pyspark.sql import functions as F
-
-    from bitcoin_olap_spark.catalog import table
-    from bitcoin_olap_spark.ml.clustering import kmeans_centroids
-    from bitcoin_olap_spark.operators.vectors import ivf_topk, topk_bruteforce
-
-    emb = table(spark, SF_ORACLE, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = {
-        (r.query_id, r.vec_id)
-        for r in topk_bruteforce(
-            emb, queries, "vec_id", "embedding", k=10
-        ).collect()
-    }
-    cent = kmeans_centroids(emb, "embedding", k=16, seed=42)
-    approx_rows = ivf_topk(
-        emb,
-        queries,
-        "vec_id",
-        "embedding",
-        k=10,
-        n_centroids=16,
-        nprobe=4,
-        centroids=cent,
-    ).collect()
-    approx = {(r.query_id, r.vec_id) for r in approx_rows}
-    assert all(1 <= r.rank <= 10 for r in approx_rows)
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.4, f"IVF top-k recall too low: {recall}"
-
-
 def test_kmeans_assignment_invariants(spark):
     """KMeans assignment must be total (every vector, one cluster in
     [0,k)), deterministic for the fixed seed, and distances
@@ -225,7 +183,12 @@ def test_ivf_exact_recall_vs_bruteforce(spark):
     (nprobe/n_centroids = 0.25) by a clear margin on the exact
     top-10 — recall is the property the oracle compare cannot check
     (it proves the pipeline computes ITS OWN spec exactly; this
-    proves the spec finds real neighbors)."""
+    proves the spec finds real neighbors).
+
+    The queries are vec_id 300-319, outside the 16 lowest ids that
+    seed Lloyd's centroids: a seed query finds its own neighborhood
+    in the list it seeded, which inflates recall (about 0.84 for
+    vec_id < 5 at sf0.01, against about 0.5 here)."""
     from pyspark.sql import functions as F
 
     from bitcoin_olap_spark.catalog import table
@@ -235,13 +198,14 @@ def test_ivf_exact_recall_vs_bruteforce(spark):
     )
 
     emb = table(spark, SF_ORACLE, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
+    queries = emb.filter(F.col("vec_id").between(300, 319))
     exact = {
         (r.query_id, r.vec_id)
         for r in topk_bruteforce(
             emb, queries, "vec_id", "embedding", k=10
         ).collect()
     }
+    assert len(exact) == 20 * 10
     approx_rows = ivf_topk_exact(
         emb, queries, "vec_id", "embedding",
         k=10, n_centroids=16, nprobe=4, iters=2,

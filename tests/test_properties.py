@@ -2781,7 +2781,7 @@ def test_deletion_vectors_full_lifecycle(spark, tmp_path):
     # (b) reads agree; overlap not double-recorded; time travel exact
     assert AT.snapshot(spark, root).count() == 850
     assert AT.snapshot(spark, root).filter(F.col("id") < 150).count() == 0
-    assert AT._dv_row_count(AT._resolve_dv_files(root, 2)) == 150
+    assert AT._dv_row_count(AT._resolve(root, 2)[2]) == 150
     assert AT.snapshot(spark, root, 1).count() == 900
     assert AT.snapshot(spark, root, 0).count() == 1000
     pruned, _, _ = AT.snapshot_pruned(spark, root, "id", 0, 200)
@@ -2912,7 +2912,7 @@ def test_restore_rewinds_deletion_vectors(spark, tmp_path):
     AT.restore(spark, root, 1)  # v3: re-hidden
     assert AT.snapshot(spark, root).count() == 900
     AT.optimize(spark, root, target_files=2)  # v4
-    assert AT._resolve_dv_files(root, 4) == []
+    assert AT._resolve(root, 4)[2] == []
     assert AT.snapshot(spark, root).count() == 900
 
     # DV-free table: restore stays diffable (no dv_reset recorded)
@@ -3032,7 +3032,7 @@ def test_acid_change_dv_dirs_are_per_attempt(spark, tmp_path):
     AT._commit(root, 1, "delete", add=[], cdc=a_cdc, dv=a_dv)
     inv = AT.change_inventory(root, 0)
     assert [p for p, _, _ in inv] == sorted(a_cdc)
-    assert AT._resolve_dv_files(root, 1) == sorted(a_dv)
+    assert AT._resolve(root, 1)[2] == sorted(a_dv)
 
 
 def test_acid_cdf_schema_includes_evolved_columns(spark, tmp_path):
@@ -3257,7 +3257,7 @@ def test_acid_vacuum_reclaims_unreferenced_dv_and_change_files(
     root = str(tmp_path / "tbl")
     AT.init_table(spark, root, spark.range(0, 100).select("id"))
     AT.delete_where_mor(spark, root, F.col("id") < 10, cdf=True)  # v1
-    old_dvs = AT._resolve_dv_files(root, 1)
+    old_dvs = AT._resolve(root, 1)[2]
     assert old_dvs
     AT.optimize(spark, root, target_files=2)  # v2: dv_reset
     # orphan from a lost race at an old version number
@@ -3300,7 +3300,7 @@ def test_acid_vacuum_keeps_dvs_referenced_by_surviving_versions(
     root = str(tmp_path / "tbl")
     AT.init_table(spark, root, spark.range(0, 50).select("id"))
     AT.delete_where_mor(spark, root, F.col("id") < 5)  # v1
-    dvs = AT._resolve_dv_files(root, 1)
+    dvs = AT._resolve(root, 1)[2]
     AT.optimize(spark, root, target_files=1)  # v2: dv_reset
     AT.vacuum(root, keep_versions=2)  # v1 survives -> its DVs must too
     import os
