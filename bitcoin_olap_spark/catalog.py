@@ -16,6 +16,7 @@ back the parquet it writes itself the same way.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -86,22 +87,35 @@ def _inference_file(path: str) -> tuple[str, set[str]] | None:
     """The file whose footer Spark's schema inference reads for `path`
     (ParquetUtils.inferSchema without mergeSchema), with the partition
     column names of a `k=v` directory layout. A file is its own.
-    Of a directory's leaf files sorted by path: the first
-    `_common_metadata`, else the first `_metadata`, else the first
-    data file. None for an empty directory, and for one with a
-    subdirectory that is not a `k=v` partition."""
-    if not os.path.isdir(path):
+    Of a directory's leaf files, or of the files a glob pattern
+    matches, sorted by path: the first `_common_metadata`, else the
+    first `_metadata`, else the first data file. None for an empty
+    directory, for one with a subdirectory that is not a `k=v`
+    partition, and for a pattern that matches nothing, matches a
+    directory or a hidden name, or uses syntax Python's glob reads
+    differently from Hadoop's (`{`, `\\`, negated `[` classes)."""
+    if any(c in path for c in "*?["):
+        if any(t in path for t in ("{", "\\", "[!", "[^")):
+            return None
+        leaves = sorted(glob.glob(path, include_hidden=True))
+        if not all(
+            os.path.isfile(f) and _listed(os.path.basename(f)) for f in leaves
+        ):
+            return None
+        parts: set[str] = set()
+    elif not os.path.isdir(path):
         return path, set()
-    leaves, parts = [], set()
-    for dirpath, dirs, files in os.walk(path, followlinks=True):
-        if dirpath != path:
-            key, eq, _ = os.path.basename(dirpath).partition("=")
-            if not eq:
-                return None
-            parts.add(key.lower())
-        dirs[:] = [d for d in dirs if _listed(d)]
-        leaves += [os.path.join(dirpath, f) for f in files if _listed(f)]
-    leaves.sort()
+    else:
+        leaves, parts = [], set()
+        for dirpath, dirs, files in os.walk(path, followlinks=True):
+            if dirpath != path:
+                key, eq, _ = os.path.basename(dirpath).partition("=")
+                if not eq:
+                    return None
+                parts.add(key.lower())
+            dirs[:] = [d for d in dirs if _listed(d)]
+            leaves += [os.path.join(dirpath, f) for f in files if _listed(f)]
+        leaves.sort()
     names = [os.path.basename(f) for f in leaves]
     for summary in _SUMMARIES:
         if summary in names:

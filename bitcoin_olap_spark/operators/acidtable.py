@@ -51,13 +51,14 @@ Checkpoints carry the merged statistics, so snapshot_pruned resolves
 them from the same bounded checkpoint-plus-deltas walk as the files.
 
 The Spark schema is a table property too (Delta's
-`metaData.schemaString`): each commit reads it from the same footers
-(the key Spark's own schema inference reads) and widens the previous
-version's with the added files' new top-level columns, in order. Every
-scan of the table passes it (`_scan`), so planning a read, merge,
-delete or optimize starts no schema-inference job. A table without the
-property (written before it existed, or whose files disagree on a
-column's type) falls back to inference.
+`metaData.schemaString`), recorded in every version: each commit reads
+it from the same footers (the key Spark's own schema inference reads)
+and widens the previous version's with the added files' new top-level
+columns, in order — an append with extra columns is schema evolution.
+A write that changes a column's type is refused before its commit
+(Delta's schema enforcement). Every scan of the table passes the
+property (`_scan`), so planning a read, merge, delete or optimize
+starts no schema-inference job.
 """
 
 from __future__ import annotations
@@ -334,25 +335,27 @@ def _commit(
     known for added files (blooms; a restore's resolved ones); footers
     fill the columns they lack. The schema property is version-1's
     (empty at version 0) widened by each added file's footer schema
-    (_widen_schema); a version without one records none. `props`, when
-    given, is this version's table properties verbatim (clone,
-    restore: a known snapshot's), and no footer schema is read."""
+    (_widen_schema), which raises ValueError before anything is
+    published when a file changes a column's type or carries no Spark
+    schema; the files already written are then orphans for vacuum.
+    `props`, when given, is this version's table properties verbatim
+    (clone, restore: a known snapshot's), and no footer schema is
+    read."""
     import pyarrow.parquet as pq
 
     os.makedirs(_log_dir(root), exist_ok=True)
     if version == 0:
         table_id(root)  # stamp this incarnation's identity at birth
-    if props is None:
-        if version == 0:
-            props = {"stats_cols": list(stats_cols), "schema": _NO_FIELDS}
-        else:
-            try:
-                props = _table_props(root, version - 1)
-            except FileNotFoundError:  # vacuumed, so a newer head exists
-                raise ConcurrentCommitError(f"version {version} is stale")
-        widen = "schema" in props
+    widen = props is None
+    if not widen:
+        props = dict(props)
+    elif version == 0:
+        props = {"stats_cols": list(stats_cols), "schema": _NO_FIELDS}
     else:
-        props, widen = dict(props), False
+        try:
+            props = _table_props(root, version - 1)
+        except FileNotFoundError:  # vacuumed, so a newer head exists
+            raise ConcurrentCommitError(f"version {version} is stale")
     table_cols = props.get("stats_cols", [])
     cols = list(dict.fromkeys([*table_cols, *stats_cols]))
     stats = dict(stats or {})
@@ -366,7 +369,6 @@ def _commit(
             stats[f] = {**_footer_stats(md, cols), **have}
         if widen:
             props["schema"] = _widen_schema(props["schema"], md)
-            widen = props["schema"] is not None
     manifest = {
         "version": version,
         "op": op,
@@ -378,9 +380,7 @@ def _commit(
     # never drop them
     if table_cols:
         manifest["stats_cols"] = table_cols
-    schema = props.get("schema")
-    if schema and schema["fields"]:
-        manifest["schema"] = schema
+    manifest["schema"] = props["schema"]
     if stats:
         # OPTIONAL per-file column min/max for data skipping —
         # readers that ignore this key stay correct (a file without
@@ -548,8 +548,9 @@ def _probe_coerce(lo, hi):
 
 def _table_props(root: str, version: int) -> dict:
     """The table's properties as of `version`, each repeated in every
-    manifest: "stats_cols" (its statistics columns, set at version 0)
-    and, when recorded, "schema" (its Spark schema as JSON)."""
+    manifest: "stats_cols" (its statistics columns, set at version 0,
+    recorded when there are any) and "schema" (its Spark schema as
+    JSON)."""
     m = _read_raw(root, version)
     return {k: m[k] for k in ("stats_cols", "schema") if k in m}
 
@@ -582,37 +583,38 @@ def _nullable(t):
     return out
 
 
-def _widen_schema(schema: dict, md) -> dict | None:
+def _widen_schema(schema: dict, md) -> dict:
     """Schema property `schema` widened by the Spark schema in a data
     file's footer `md` (pyarrow FileMetaData): the file's top-level
-    fields that are new append in the file's order. None when the
-    footer carries no Spark schema or a field changes type — the table
-    then has no schema property and reads infer it."""
+    fields that are new append in the file's order. ValueError when
+    the footer carries no Spark schema or a field changes type, which
+    no reader of the table could read."""
     raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
     if raw is None:
-        return None
+        raise ValueError("acid: a data file without a Spark schema footer")
     fields = list(schema["fields"])
-    known = {f["name"]: f["type"] for f in fields}
+    known = {f["name"]: f for f in fields}
     for f in _nullable(json.loads(raw))["fields"]:
-        if f["name"] not in known:
+        was = known.setdefault(f["name"], f)
+        if was is f:
             fields.append(f)
-            known[f["name"]] = f["type"]
-        elif known[f["name"]] != f["type"]:
-            return None
+        elif was["type"] != f["type"]:
+            a, b = StructType.fromJson({"fields": [was, f]}).fields
+            raise ValueError(
+                f"acid: a write may not change column {f['name']!r} from "
+                f"{a.dataType.simpleString()} to {b.dataType.simpleString()}"
+            )
     return {"type": "struct", "fields": fields}
 
 
 def _scan(
     spark: SparkSession, root: str, version: int, files: list[str]
 ) -> DataFrame:
-    """Parquet scan of data files `files` of snapshot `version`. With
-    the table's schema property the scan is given that schema, so
-    planning it starts no inference job (files missing a column read
-    it as NULL); without one, Spark infers the schema as before."""
-    schema = _table_props(root, version).get("schema")
-    if schema is None:
-        return spark.read.parquet(*files)
-    return spark.read.schema(StructType.fromJson(schema)).parquet(*files)
+    """Parquet scan of data files `files` of snapshot `version`, given
+    the table's schema property, so planning it starts no inference
+    job (files missing a column read it as NULL)."""
+    schema = StructType.fromJson(_table_props(root, version)["schema"])
+    return spark.read.schema(schema).parquet(*files)
 
 
 def _footer_decoder(col):
@@ -988,8 +990,8 @@ def table_changes(
     diff reads 0.2% of the data and the join is keyed on the same
     columns the table is clustered by. Requires both snapshots to
     share the key schema; non-key columns are taken from the newer
-    snapshot, whose schema property both sides are read with
-    (add_columns evolution widens old rows with NULLs, which null-safe
+    snapshot, whose schema property both sides are read with (a
+    column added since v_from reads NULL in old rows, which null-safe
     compare treats as a change — the CDF convention)."""
     v_to = current_version(root) if v_to is None else v_to
     for v in range(v_from + 1, v_to + 1):
@@ -1879,24 +1881,6 @@ def optimize_zorder(
     return base + 1
 
 
-def add_columns(
-    spark: SparkSession, root: str, new_df: DataFrame
-) -> int:
-    """Schema evolution by appending a batch with EXTRA columns: old
-    data files keep their narrow schema on disk (never rewritten); the
-    commit appends the new columns to the table's schema property, and
-    snapshot() reads every file with it, so pre-evolution rows surface
-    the new columns as NULL — Delta/Iceberg's add-column semantics,
-    which at 100 TB is the difference between a metadata change and a
-    full-table rewrite. Returns the committed version."""
-    base = current_version(root)
-    files = _write_data_files(new_df, root)
-    # the delta manifest lists ONLY the appended wide files: schema
-    # evolution at 100 TB really is a metadata-sized commit here
-    _commit(root, base + 1, "add-columns", add=files)
-    return base + 1
-
-
 def restore(spark: SparkSession, root: str, version: int) -> int:
     """RESTORE the table to an earlier version AS A NEW COMMIT
     (Delta's RESTORE TABLE ... VERSION AS OF): the delta manifest
@@ -1939,22 +1923,6 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
     return head + 1
 
 
-def snapshot_merged(
-    spark: SparkSession, root: str, version: int | None = None
-) -> DataFrame:
-    """snapshot() for a table that add_columns widened. A table with a
-    schema property is read with it (it already holds every column), so
-    this is snapshot(); without one, the files' schemas are merged by
-    a mergeSchema read."""
-    v = current_version(root) if version is None else version
-    if "schema" in _table_props(root, v):
-        return snapshot(spark, root, v)
-    files, _, dvs = _resolve(root, v)
-    return _apply_dvs(
-        spark, spark.read.option("mergeSchema", "true").parquet(*files), dvs
-    )
-
-
 # --------------------------------------------------------------- blooms
 
 BLOOM_BITS = 4096
@@ -1986,49 +1954,57 @@ def collect_file_blooms(
     UNCLUSTERED layout every file's [min, max] spans the whole domain
     and range stats skip nothing, but a per-file bloom still answers
     'is key X definitely absent from this file'. ONE distributed
-    aggregate per column at write time: each row explodes to its k
-    bit positions map-side, bits OR together grouped on
-    (file, word-index), and the driver assembles the sparse word map
-    {path: {'bloom:col': {'b': bits, 'k': k,
+    aggregate at write time, for every column: each row explodes to
+    its k bit positions per column map-side, bits OR together grouped
+    on (file, column, word-index), and the driver assembles the sparse
+    word map {path: {'bloom:col': {'b': bits, 'k': k,
     'w': {word_idx: int64}}}} — entries ride the manifest's existing
     per-file stats dict, so resolution, vacuum, and old readers need
     no changes (unknown keys are ignored; files without blooms are
-    never skipped). Cost is one scan of the committed batch; the
-    bitmap is bits/8 bytes per file per column (512 B at the 4096
-    default — manifest-weight like Delta's)."""
+    never skipped). Cost is one scan of the committed batch, given the
+    Spark schema its writer put in the first file's footer (no
+    inference job); the bitmap is bits/8 bytes per file per column
+    (512 B at the 4096 default — manifest-weight like Delta's)."""
+    import pyarrow.parquet as pq
+
+    schema = _widen_schema(_NO_FIELDS, pq.read_metadata(files[0]))
+    per_col = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("_c"),
+                _bloom_positions(F.col(c), bits, k).alias("_ps"),
+            )
+            for c in cols
+        ]
+    )
+    words = (
+        spark.read.schema(StructType.fromJson(schema))
+        .parquet(*files)
+        .select(F.col("_metadata.file_path").alias("_f"), F.inline(per_col))
+        .select("_f", "_c", F.explode("_ps").alias("_p"))
+        .select(
+            "_f",
+            "_c",
+            (F.col("_p") / 64).cast("long").alias("_w"),
+            F.expr("shiftleft(1L, CAST(_p % 64 AS INT))").alias("_b"),
+        )
+        .groupBy("_f", "_c", "_w")
+        .agg(F.bit_or("_b").alias("_m"))
+        .collect()
+    )
+    by_real = {os.path.realpath(f): f for f in files}
     out: dict = {}
-    for c in cols:
-        pos = (
-            spark.read.parquet(*files)
-            .select(
-                F.col("_metadata.file_path").alias("_f"),
-                F.explode(_bloom_positions(F.col(c), bits, k)).alias(
-                    "_p"
-                ),
-            )
+    for r in words:
+        # stats dict keys must be the manifest's OWN path strings
+        # (relative under a relative root), else the probe never
+        # matches
+        path = by_real.get(
+            os.path.realpath(_strip_uri(r["_f"])), _strip_uri(r["_f"])
         )
-        words = (
-            pos.select(
-                "_f",
-                (F.col("_p") / 64).cast("long").alias("_w"),
-                F.expr("shiftleft(1L, CAST(_p % 64 AS INT))").alias("_b"),
-            )
-            .groupBy("_f", "_w")
-            .agg(F.bit_or("_b").alias("_m"))
-            .collect()
+        ent = out.setdefault(path, {}).setdefault(
+            f"bloom:{r['_c']}", {"b": bits, "k": k, "w": {}}
         )
-        by_real = {os.path.realpath(f): f for f in files}
-        for r in words:
-            # stats dict keys must be the manifest's OWN path strings
-            # (relative under a relative root), else the probe never
-            # matches
-            path = by_real.get(
-                os.path.realpath(_strip_uri(r["_f"])), _strip_uri(r["_f"])
-            )
-            ent = out.setdefault(path, {}).setdefault(
-                f"bloom:{c}", {"b": bits, "k": k, "w": {}}
-            )
-            ent["w"][str(r["_w"])] = r["_m"]
+        ent["w"][str(r["_w"])] = r["_m"]
     return out
 
 
@@ -2060,10 +2036,9 @@ def snapshot_bloom_lookup(
     }
     # xxhash64 is TYPE-sensitive (hashing 0 as INT != as BIGINT), so
     # the probe literal must carry the stored column's exact type
-    probe_lit = F.lit(value)
-    if files:
-        dtype = _scan(spark, root, v, files[:1]).schema[col].dataType
-        probe_lit = probe_lit.cast(dtype)
+    probe_lit = F.lit(value).cast(
+        StructType.fromJson(_table_props(root, v)["schema"])[col].dataType
+    )
     pos_by_cfg = {}
     for bits, k in configs:
         pos_by_cfg[(bits, k)] = (

@@ -3,7 +3,7 @@ and a bounded registry of cached Spark relations.
 
 memo(key, token, build) is the one memo for values derived from files
 that can change under a fixed path (catalog DataFrames and shard
-copies, trained quantizers, feed DDL). The key names WHAT is cached and
+copies, trained quantizers). The key names WHAT is cached and
 always carries the path; the token (usually `file_token(path)`) says
 WHICH version of the files the value came from. A key holds exactly one
 entry: an equal token is a hit, any other token rebuilds under a

@@ -66,45 +66,6 @@ def _gate_allpairs(df: DataFrame, op: str, max_rows: int) -> None:
         )
 
 
-def cosine_pairs_exact(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    queries: DataFrame | None = None,
-    max_rows: int = DEFAULT_ALLPAIRS_MAX_ROWS,
-) -> DataFrame:
-    """All-pairs (or queries x corpus) cosine similarity with
-    exact-decimal accumulation: (id_a, id_b, cosine double).
-
-    If `queries` is None: self-pairs with id_a < id_b. Otherwise
-    `queries` is a same-schema DataFrame and all (query, corpus) pairs
-    with id_a != id_b are scored.
-
-    The pair relation is a broadcast cross join (queries x corpus); the
-    scoring is `exact_score_pairs_arrow`. At 100 TB the corpus side
-    streams; only the (small) query side broadcasts, or LSH bucketing
-    prunes pairs first (topk_lsh) — all-pairs self-join is inherently
-    O(N^2) and is the verifier, not the scale path; the self-pairs
-    mode is therefore gated by `max_rows` (DEFAULT_ALLPAIRS_MAX_ROWS).
-    """
-    if queries is None:
-        _gate_allpairs(df, "cosine_pairs_exact", max_rows)
-    a = df if queries is None else queries
-    left = a.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")
-    )
-    right = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")
-    )
-    cond = (
-        (F.col("id_a") < F.col("id_b"))
-        if queries is None
-        else (F.col("id_a") != F.col("id_b"))
-    )
-    pairs = F.broadcast(left).crossJoin(right).filter(cond)
-    return exact_score_pairs_arrow(pairs, "id_a", "id_b")
-
-
 def exact_score_pairs_arrow(
     pairs: DataFrame,
     a_id: str,
@@ -114,7 +75,7 @@ def exact_score_pairs_arrow(
     """EXACT-mode cosine over a pair relation, Arrow-batched numpy:
     (a_id, b_id, [extra_cols...,] cosine double) from the vector
     columns `_va` and `_vb`, with the module's fixed-point
-    accumulation. The shared verify kernel of the exact all-pairs,
+    accumulation. The shared verify kernel of the exact top-k,
     LSH and IVF operators. `extra_cols` pass through untouched
     (e.g. cluster id / centroid distance for SemDeDup's survivor rule)
     so callers don't pay a join-back to recover pair metadata."""
@@ -461,11 +422,26 @@ def topk_bruteforce(
     k: int = 10,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector (query_id, vec_id,
-    cosine, rank). Ranks on round(cosine, 6) with vec_id tiebreak so the
-    cut at rank k is stable across engines."""
-    from pyspark.sql.window import Window
+    cosine, rank) over every (query, corpus) pair with different ids.
+    Ranks on round(cosine, 6) with vec_id tiebreak so the cut at rank
+    k is stable across engines.
 
-    pairs = cosine_pairs_exact(corpus, id_col, vec_col, queries=queries)
+    The pair relation is a broadcast cross join (queries x corpus)
+    scored by `exact_score_pairs_arrow`: the corpus side streams and
+    only the (small) query side broadcasts."""
+    left = queries.select(
+        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")
+    )
+    right = corpus.select(
+        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")
+    )
+    pairs = exact_score_pairs_arrow(
+        F.broadcast(left)
+        .crossJoin(right)
+        .filter(F.col("id_a") != F.col("id_b")),
+        "id_a",
+        "id_b",
+    )
     ranked = pairs.select(
         F.col("id_a").alias("query_id"),
         F.col("id_b").alias("vec_id"),

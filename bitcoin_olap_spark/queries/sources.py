@@ -1800,8 +1800,8 @@ def snk_acid_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     files — O(batch) metadata however large the table), an OPTIMIZE
     compaction (content-identical, layout-only: the delta removes
     every old file and adds the compacted ones), then add-column
-    schema EVOLUTION (a metadata-sized commit appending one wide
-    batch; old files never rewrite). The final merged-schema snapshot
+    schema EVOLUTION (an append of one wide batch widens the table's
+    schema property; old files never rewrite). The final snapshot
     must equal lineitem plus the wide row exactly — the oracle states
     that content identity, so compaction or resolution dropping or
     duplicating any row hash-fails. Exercises checkpoint + delta
@@ -1823,7 +1823,7 @@ def snk_acid_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, root, li.filter(F.col("l_orderkey") % 8 == 4), op="a2"
         )
         AT.optimize(spark, root, target_files=4)
-        AT.add_columns(
+        AT.append(
             spark,
             root,
             spark.createDataFrame(
@@ -1831,8 +1831,9 @@ def snk_acid_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "l_orderkey long, l_linenumber int, l_quantity double,"
                 " l_returnflag string, note string",
             ),
+            op="add-columns",
         )
-    snap = AT.snapshot_merged(spark, root)
+    snap = AT.snapshot(spark, root)
     return snap.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         exact_sum("l_quantity", "total_qty"),

@@ -22,9 +22,11 @@ end_version], and because manifests and change files are immutable
 the replay contract (same offsets -> same rows) holds exactly — the
 checkpointed-offset half of end-to-end exactly-once.
 
-Schema = table columns + `_change_type` string + `_commit_version`
-bigint (Delta's CDF vocabulary: insert / delete / update_preimage /
-update_postimage).
+Schema = the head version's schema property (the table's columns,
+typed as `snapshot()` reads them) + `_change_type` string +
+`_commit_version` bigint (Delta's CDF vocabulary: insert / delete /
+update_preimage / update_postimage). Opening the feed reads one
+manifest and no data-file footer.
 
 Options:
   path             ACID table root (required)
@@ -42,80 +44,7 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-
-DDL_BY_ARROW = {
-    "int8": "tinyint",
-    "int16": "smallint",
-    "int32": "int",
-    "int64": "bigint",
-    "float": "float",
-    "double": "double",
-    "bool": "boolean",
-    "string": "string",
-    "large_string": "string",
-    "binary": "binary",
-    "date32[day]": "date",
-}
-
-
-def _table_ddl(root: str) -> str:
-    """Table-column DDL derived from the UNION of the head snapshot's
-    data-file footers (driver-side, metadata-only — O(files) footer
-    reads, the same cost Spark's mergeSchema pays). Memoized per root
-    with one entry, valid while the head is the same version of the
-    same table incarnation: manifests and data files are immutable, so
-    repeated feed opens (every readStream start, every batch load) skip
-    the footer sweep, and table_id stops a table dropped and recreated
-    at the same root, at the same head version, with a different schema
-    from being served the stale DDL. A single-footer derivation would
-    be wrong after add-column evolution: path order can put a
-    pre-evolution narrow file first, silently dropping the evolved
-    columns from the whole feed, contradicting _read_change_file's
-    null-fill widening. Field order: first file's order, later-seen
-    columns appended — mirroring snapshot reads' mergeSchema
-    semantics."""
-    import os
-
-    from ..operators import acidtable as AT
-    from ..operators.cacheutil import memo
-
-    head = AT.current_version(root)
-    return memo(
-        ("cdcfeed.ddl", os.path.realpath(root)),
-        (AT.table_id(root), head),
-        lambda: _footer_ddl(AT._resolve_files(root, head), root),
-    )
-
-
-def _footer_ddl(files: list, root: str) -> str:
-    import pyarrow.parquet as pq
-
-    if not files:
-        raise ValueError(f"acid_cdf: table at {root} has no data files")
-    merged: list = []
-    seen: set[str] = set()
-    for path in files:
-        for f in pq.read_schema(path):
-            if f.name not in seen:
-                seen.add(f.name)
-                merged.append(f)
-    cols = []
-    for f in merged:
-        t = str(f.type)
-        if t.startswith("timestamp"):
-            ddl = "timestamp"
-        elif t.startswith("decimal"):
-            ddl = t.replace("decimal128", "decimal").replace(
-                "decimal256", "decimal"
-            )
-        else:
-            ddl = DDL_BY_ARROW.get(t)
-        if ddl is None:
-            raise ValueError(
-                f"acid_cdf: unsupported column type {t} for {f.name}"
-            )
-        cols.append(f"{f.name} {ddl}")
-    return ", ".join(cols)
+from pyspark.sql.types import LongType, StringType, StructType
 
 
 class _ChangeFilePartition(InputPartition):
@@ -131,8 +60,8 @@ class _ChangeFilePartition(InputPartition):
 def _read_change_file(part: _ChangeFilePartition, fields: list[tuple]):
     """Executor-side scan of one change file -> Arrow record batches
     aligned to the output schema (`fields` = [(name, arrow_type)]).
-    Missing table columns (a change file written before add-column
-    evolution) fill with typed nulls, mirroring how snapshot reads
+    Missing table columns (a change file written before an append
+    added them) fill with typed nulls, mirroring how snapshot reads
     widen old data files."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -221,10 +150,15 @@ class CdcFeedDataSource(DataSource):
     def name(cls) -> str:
         return "acid_cdf"
 
-    def schema(self) -> str:
+    def schema(self) -> StructType:
+        from ..operators import acidtable as AT
+
+        root = self.options["path"]
+        props = AT._table_props(root, AT.current_version(root))
         return (
-            _table_ddl(self.options["path"])
-            + ", _change_type string, _commit_version bigint"
+            StructType.fromJson(props["schema"])
+            .add("_change_type", StringType())
+            .add("_commit_version", LongType())
         )
 
     def _fields(self, schema) -> list[tuple]:

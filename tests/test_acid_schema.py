@@ -1,16 +1,13 @@
 """The ACID table's schema property (operators/acidtable): every commit
 records the table's Spark schema from the footers it already opens,
-every scan is given it, and a table without it falls back to
-inference. Also: copy-on-write writers keep working while a snapshot
-of the table is cached.
+every scan and the change feed are given it, and a write that changes
+a column's type is refused. Also: copy-on-write writers keep working
+while a snapshot of the table is cached.
 """
 
 from __future__ import annotations
 
 import datetime
-import json
-import os
-import shutil
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -158,9 +155,7 @@ def test_acid_schema_property_tracks_every_writer(spark, tmp_path):
     check()
     v_narrow = AT.current_version(root)
 
-    AT.add_columns(
-        spark, root, _batch(spark, 900, 5).withColumn("tag", F.lit("x"))
-    )
+    AT.append(spark, root, _batch(spark, 900, 5).withColumn("tag", F.lit("x")))
     wide = _prop(root)
     assert wide.names == ["k", "v", "ts", "tag"]
 
@@ -174,66 +169,93 @@ def test_acid_schema_property_tracks_every_writer(spark, tmp_path):
 
 
 def test_acid_add_columns_snapshot_has_table_schema(spark, tmp_path):
-    """After add_columns, snapshot() reads the widened schema in table
-    order (the new column last, whatever file sorts first) with the
-    same rows as snapshot_merged(), old rows NULL in the new column."""
+    """After an append with an extra column, snapshot() reads the
+    widened schema in table order (the new column last, whatever file
+    sorts first), old rows NULL in the new column."""
     root = str(tmp_path / "t")
     AT.init_table(spark, root, _batch(spark, 0, 300, parts=3))
-    AT.add_columns(
-        spark,
-        root,
-        _batch(spark, 300, 4).select(F.lit("x").alias("tag"), "ts", "v", "k"),
-    )
+    wide = _batch(spark, 300, 4).select(F.lit("x").alias("tag"), "ts", "v", "k")
+    AT.append(spark, root, wide)
     snap = AT.snapshot(spark, root)
     assert snap.columns == ["k", "v", "ts", "tag"]
-    merged = AT.snapshot_merged(spark, root)
-    assert _rows(snap) == _rows(merged.select(*snap.columns))
-    assert snap.filter(F.col("tag").isNull()).count() == 300
+    want = _rows(_batch(spark, 0, 300).withColumn("tag", F.lit(None)))
+    want += _rows(wide.select(*snap.columns))
+    assert _rows(snap) == sorted(want)
     # later writers keep the widened schema
     AT.append(spark, root, _batch(spark, 400, 2))
     assert AT.snapshot(spark, root).columns == ["k", "v", "ts", "tag"]
 
 
-def test_acid_reads_fall_back_without_schema_property(spark, tmp_path):
-    """A table whose manifests lack the property (written before it
-    existed) reads, merges and appends correctly through inference,
-    and its later commits record none; a type conflict between files
-    also leaves a commit without one."""
-    src = str(tmp_path / "src")
-    AT.init_table(spark, src, _batch(spark, 0, 500, parts=2), stats_cols=("k",))
-    AT.append(spark, src, _batch(spark, 500, 100))
-    want = _rows(AT.snapshot(spark, src))
-
-    old = str(tmp_path / "old")
-    shutil.copytree(src, old)
-    for f in os.listdir(os.path.join(old, "_log")):
-        if f[0].isdigit():
-            p = os.path.join(old, "_log", f)
-            with open(p) as fh:
-                m = json.load(fh)
-            m.pop("schema", None)
-            with open(p, "w") as fh:
-                json.dump(m, fh)
-    assert _prop(old) is None
-    assert _rows(AT.snapshot(spark, old)) == want
-    assert _rows(AT.snapshot_merged(spark, old)) == want
-    df, _, _ = AT.snapshot_pruned(spark, old, "k", 100, 199)
-    assert _rows(df) == [r for r in want if 100 <= r[0] <= 199]
-    AT.merge_upsert(spark, old, _batch(spark, 590, 20), ["k"])
-    assert _prop(old) is None
-    assert AT.snapshot(spark, old).count() == 610
-
-    conflict = spark.createDataFrame([(9000, "seven")], "k long, v string")
-    AT.append(spark, src, conflict)
-    assert _prop(src) is None
-    assert "schema" not in AT._read_raw(src, AT.current_version(src))
-
-
-def test_acid_widen_schema_needs_spark_footer(tmp_path):
-    """A data file whose footer carries no Spark schema (written by a
-    non-Spark writer) leaves the commit without a property."""
+def test_acid_type_changing_write_is_refused(spark, tmp_path):
+    """An append or a merge whose files change a column's type raises
+    ValueError naming the column before anything is committed: the
+    head stays, and snapshot() still reads its rows. So does a data
+    file whose footer carries no Spark schema."""
     import pyarrow as pa
+    import pytest
+
+    root = str(tmp_path / "t")
+    AT.init_table(
+        spark, root, spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
+    )
+    AT.append(spark, root, spark.createDataFrame([(3, 30)], "k long, v long"))
+    head = AT.current_version(root)
+    want = [(1, 10), (2, 20), (3, 30)]
+    conflict = spark.createDataFrame([(2, "seven")], "k long, v string")
+    with pytest.raises(ValueError, match="'v' from bigint to string"):
+        AT.append(spark, root, conflict)
+    assert AT.current_version(root) == head
+    assert _rows(AT.snapshot(spark, root)) == want
+    with pytest.raises(ValueError, match="'v' from bigint to string"):
+        AT.merge_upsert(spark, root, conflict, ["k"])
+    assert AT.current_version(root) == head
+    assert _rows(AT.snapshot(spark, root)) == want
+    assert _prop(root).simpleString() == "struct<k:bigint,v:bigint>"
 
     p = str(tmp_path / "plain.parquet")
     pq.write_table(pa.table({"k": [1, 2]}), p)
-    assert AT._widen_schema(AT._NO_FIELDS, pq.read_metadata(p)) is None
+    with pytest.raises(ValueError, match="Spark schema"):
+        AT._widen_schema(AT._NO_FIELDS, pq.read_metadata(p))
+
+
+def test_acid_bloom_collection_infers_no_schema(spark, tmp_path):
+    """collect_file_blooms gives its one scan the schema the writer put
+    in the footers: it starts no inference job, and a second bloom
+    column costs no extra job."""
+    root = str(tmp_path / "t")
+    AT.init_table(spark, root, _batch(spark, 0, 400, parts=2))
+    files = AT.read_manifest(root)["files"]
+    one = jobs_started(spark, lambda: AT.collect_file_blooms(spark, files, ("k",)))
+    two = jobs_started(
+        spark, lambda: AT.collect_file_blooms(spark, files, ("k", "v"))
+    )
+    assert one == two <= 2
+    # one aggregate for both columns gives each its own bitmaps
+    both = AT.collect_file_blooms(spark, files, ("k", "v"))
+    k = AT.collect_file_blooms(spark, files, ("k",))
+    v = AT.collect_file_blooms(spark, files, ("v",))
+    assert set(both) == set(files)
+    assert both == {f: {**k[f], **v[f]} for f in files}
+
+
+def test_cdf_feed_reads_the_snapshot_types(spark, tmp_path):
+    """The change feed's table columns are the schema property: a
+    TIMESTAMP_NTZ and an array column read with snapshot()'s types and
+    values."""
+    from bitcoin_olap_spark.sources.cdcfeed import register_cdcfeed
+
+    root = str(tmp_path / "t")
+    AT.init_table(
+        spark,
+        root,
+        _batch(spark, 0, 20).withColumn("tags", F.array("k", "v")),
+    )
+    AT.append(
+        spark, root, _batch(spark, 20, 5).withColumn("tags", F.array("v"))
+    )
+    register_cdcfeed(spark)
+    feed = spark.read.format("acid_cdf").option("path", root).load()
+    snap = AT.snapshot(spark, root)
+    assert feed.drop("_change_type", "_commit_version").schema == snap.schema
+    assert _rows(feed.select(*snap.columns)) == _rows(snap)
+    assert {r[0] for r in feed.select("_change_type").collect()} == {"insert"}

@@ -1,9 +1,10 @@
 """The file-identity memo (operators/cacheutil.memo) and its users:
-catalog tables and shard copies, the trained IVF quantizer and the CDF
-feed DDL. Files are rewritten in place at a fixed path, as a re-export
-does, and every read after the rewrite must see the new bytes. Also:
-catalog.table opens a table with no Spark job, given the schema read
-from a parquet footer, which equals the schema Spark infers."""
+catalog tables, shard copies and the trained IVF quantizer; and the
+CDF feed's schema, which follows the table's head. Files are
+rewritten in place at a fixed path, as a re-export does, and every
+read after the rewrite must see the new bytes. Also: catalog.table
+opens a table with no Spark job, given the schema read from a parquet
+footer, which equals the schema Spark infers."""
 
 from __future__ import annotations
 
@@ -95,26 +96,30 @@ def test_memo_builds_each_key_once_under_thread_stress():
     assert all(all(a is b for a, b in zip(r, got[0])) for r in got)
 
 
-def test_cdf_ddl_memo_holds_one_entry_per_table(spark, tmp_path):
-    """The feed DDL memo keeps one entry per table root however many
-    versions are committed, and serves the DDL of the current head."""
+def test_cdf_feed_schema_follows_head(spark, tmp_path):
+    """The feed's schema is the head version's: appends keep it, and
+    an append with an extra column widens it."""
     from bitcoin_olap_spark.operators import acidtable as AT
-    from bitcoin_olap_spark.sources.cdcfeed import _table_ddl
+    from bitcoin_olap_spark.sources.cdcfeed import register_cdcfeed
 
+    register_cdcfeed(spark)
     root = str(tmp_path / "tbl")
+
+    def columns():
+        feed = spark.read.format("acid_cdf").option("path", root).load()
+        return feed.schema.simpleString()
+
     AT.init_table(spark, root, spark.range(0, 5).select("id"))
-    _table_ddl(root)
-    n_before = len(CU._MEMO)
     for i in range(3):
         AT.append(spark, root, spark.range(10 * i, 10 * i + 5).select("id"))
-        assert _table_ddl(root) == "id bigint"
-    AT.add_columns(
-        spark, root, spark.range(90, 95).selectExpr("id", "'x' AS note")
+        assert columns() == (
+            "struct<id:bigint,_change_type:string,_commit_version:bigint>"
+        )
+    AT.append(spark, root, spark.range(90, 95).selectExpr("id", "'x' AS note"))
+    assert columns() == (
+        "struct<id:bigint,note:string,_change_type:string,"
+        "_commit_version:bigint>"
     )
-    assert _table_ddl(root) == "id bigint, note string"
-    assert len(CU._MEMO) == n_before
-    token = CU._MEMO[("cdcfeed.ddl", os.path.realpath(root))][0]
-    assert token == (AT.table_id(root), AT.current_version(root))
 
 
 def test_table_sees_in_place_rewrite(spark, tmp_path):
@@ -210,16 +215,22 @@ def _write_table_dir(d: str, n_files: int) -> None:
 
 
 @pytest.mark.parametrize(
-    "layout", ["file", "shard_copy", "directory", "spark_written"]
+    "layout", ["file", "shard_copy", "directory", "spark_written", "glob"]
 )
 def test_table_starts_no_job(spark, tmp_path, layout):
     """catalog.table plans a single-file table, the spread shard copy
     of one and a directory table without starting a Spark job, and
     catalog.read_parquet plans a directory Spark wrote (part files
-    beside `_SUCCESS` and `.crc` files) the same way."""
+    beside `_SUCCESS` and `.crc` files) and a glob pattern over files
+    the same way."""
     sf = str(tmp_path)
     path = os.path.join(sf, "ledger.parquet")
-    if layout == "spark_written":
+    if layout == "glob":
+        _write_ledger(os.path.join(sf, "ledger-b.parquet"), 1, T0)
+        _write_ledger(os.path.join(sf, "ledger-a.parquet"), 2, T0)
+        path = os.path.join(sf, "ledger-*.parquet")
+        load = lambda: catalog.read_parquet(spark, path)  # noqa: E731
+    elif layout == "spark_written":
         rows = spark.range(SHARD_MIN_ROWS).selectExpr("id AS k", "1L AS v")
         rows.write.parquet(path)
         assert os.path.exists(os.path.join(path, "_SUCCESS"))
@@ -234,7 +245,7 @@ def test_table_starts_no_job(spark, tmp_path, layout):
     assert jobs_started(spark, load) == 0
     df = load()
     assert df.schema == spark.read.parquet(path).schema
-    want = 3 * SHARD_MIN_ROWS if layout == "directory" else SHARD_MIN_ROWS
+    want = {"directory": 3, "glob": 3}.get(layout, 1) * SHARD_MIN_ROWS
     assert df.agg(F.sum("v")).first()[0] == want
 
 

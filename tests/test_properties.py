@@ -458,7 +458,7 @@ def test_acid_clone_zero_copy_divergence(spark, tmp_path):
 
     # divergence: append to clone, delete on source
     AT.append(spark, dst, spark.range(1000, 1010).select(
-        F.col("id"), F.lit(0).alias("grp")))
+        F.col("id"), F.lit(0).cast("long").alias("grp")))
     AT.delete_where(spark, src, F.col("id") < 100)
     assert AT.snapshot(spark, src).count() == 300
     assert AT.snapshot(spark, dst).count() == 410
@@ -534,9 +534,10 @@ def test_acid_merge_cow_semantics(spark, tmp_path):
 
 
 def test_acid_optimize_and_schema_evolution(spark, tmp_path):
-    """OPTIMIZE must be content-identical and layout-only; add_columns
-    must widen the schema without rewriting old files (they stay in
-    the manifest verbatim; merged reads null-fill the new column)."""
+    """OPTIMIZE must be content-identical and layout-only; an append
+    with an extra column must widen the schema without rewriting old
+    files (they stay in the manifest verbatim; snapshot reads
+    null-fill the new column)."""
     from pyspark.sql import functions as F
 
     from bitcoin_olap_spark.operators import acidtable as AT
@@ -560,10 +561,10 @@ def test_acid_optimize_and_schema_evolution(spark, tmp_path):
     wide = spark.createDataFrame(
         [(1000, 0, "tagged")], "id long, v long, tag string"
     )
-    AT.add_columns(spark, root, wide)
+    AT.append(spark, root, wide)
     m2 = AT.read_manifest(root, 2)
     assert set(m1["files"]) <= set(m2["files"])  # old files untouched
-    snap = AT.snapshot_merged(spark, root)
+    snap = AT.snapshot(spark, root)
     assert snap.count() == 501
     assert snap.filter(F.col("tag").isNull()).count() == 500
     assert snap.filter(F.col("tag") == "tagged").count() == 1
@@ -1334,7 +1335,7 @@ def test_acid_data_skipping_prunes_files(spark, tmp_path):
 
     # a stats-less append must never be skipped
     AT.append(spark, root, spark.range(2500, 2510).select(
-        F.col("id"), F.lit(9).alias("grp")).coalesce(1))
+        F.col("id"), F.lit(9).cast("long").alias("grp")).coalesce(1))
     pruned2, n_read2, n_total2 = AT.snapshot_pruned(
         spark, root, "id", 2000, 2999
     )
@@ -1623,7 +1624,7 @@ def test_acid_bloom_lookup_prunes_and_never_loses_rows(spark, tmp_path):
 
     # a bloom-less append must never be skipped
     AT.append(spark, root, spark.range(50000, 50001).select(
-        F.col("id"), F.lit(9).alias("grp")).coalesce(1))
+        F.col("id"), F.lit(9).cast("long").alias("grp")).coalesce(1))
     got2, n_read2, n_total2 = AT.snapshot_bloom_lookup(
         spark, root, "id", 50000
     )
@@ -3036,9 +3037,9 @@ def test_acid_change_dv_dirs_are_per_attempt(spark, tmp_path):
 
 
 def test_acid_cdf_schema_includes_evolved_columns(spark, tmp_path):
-    """ADVICE r8 regression (cdcfeed._table_ddl): the feed schema must
-    be the UNION of the head snapshot's file footers, not files[0] —
-    after add_columns evolution, path order can put a pre-evolution
+    """ADVICE r8 regression (the feed schema): the feed's columns must
+    be every column of the head snapshot, not those of files[0] —
+    after an append added a column, path order can put a pre-evolution
     narrow file first and the evolved columns silently vanished from
     the entire CDF feed. Pre-evolution change rows surface the new
     column as NULL (the same widening snapshot reads do)."""
@@ -3051,7 +3052,7 @@ def test_acid_cdf_schema_includes_evolved_columns(spark, tmp_path):
     AT.init_table(
         spark, root, spark.range(0, 8).select("id", F.lit(1).alias("v"))
     )
-    AT.add_columns(
+    AT.append(
         spark,
         root,
         spark.range(100, 104).select(
@@ -3105,9 +3106,9 @@ def test_acid_stale_dv_target_is_inert_not_invalid(spark, tmp_path):
     every CoW delete/merge. The state is synthesized by committing a
     rewrite delta that removes the vector's target WITHOUT a
     dv_reset — legal under the add-only vector contract."""
+    import glob
     import os
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from bitcoin_olap_spark.operators import acidtable as AT
@@ -3123,9 +3124,8 @@ def test_acid_stale_dv_target_is_inert_not_invalid(spark, tmp_path):
     # rows the vector's math would produce, old file removed, vector
     # deliberately NOT reset
     newdir = os.path.join(AT._data_dir(root), "rewrite0")
-    os.makedirs(newdir)
-    newfile = os.path.join(newdir, "part-0.parquet")
-    pd.DataFrame({"id": list(range(10, 100))}).to_parquet(newfile)
+    spark.range(10, 100).coalesce(1).write.parquet(newdir)
+    (newfile,) = glob.glob(os.path.join(newdir, "*.parquet"))
     AT._commit(root, 2, "rewrite", add=[newfile], remove=sorted(targets))
     # the stale vector maps to no live file: interlock input is empty
     assert AT._live_dv_targets(root) == set()
@@ -3507,19 +3507,23 @@ def test_bpe_exhaustion_returns_partial_merges(spark, tmp_path):
 
 
 def test_cdf_ddl_cache_pinned_to_table_incarnation(spark, tmp_path):
-    """ADVICE r9 regression (cdcfeed._DDL_CACHE): a table dropped and
+    """ADVICE r9 regression (a cached feed DDL): a table dropped and
     recreated at the same path that reaches the same head version with
-    a DIFFERENT schema must not be served the stale cached DDL — the
-    cache key carries table_id, mirroring acidtable's _OPS_CACHE."""
+    a DIFFERENT schema must not be served the old table's columns."""
     import shutil
 
     from bitcoin_olap_spark.operators import acidtable as AT
-    from bitcoin_olap_spark.sources.cdcfeed import _table_ddl
+    from bitcoin_olap_spark.sources.cdcfeed import register_cdcfeed
 
+    def ddl(root):
+        feed = spark.read.format("acid_cdf").option("path", root).load()
+        return feed.schema.simpleString()
+
+    register_cdcfeed(spark)
     root = str(tmp_path / "tbl")
     AT.init_table(spark, root, spark.range(0, 5).select("id"))
-    ddl1 = _table_ddl(root)
-    assert "id bigint" in ddl1
+    ddl1 = ddl(root)
+    assert "id:bigint" in ddl1
     shutil.rmtree(root)
     AT.init_table(
         spark,
@@ -3528,9 +3532,9 @@ def test_cdf_ddl_cache_pinned_to_table_incarnation(spark, tmp_path):
             "CAST(id AS INT) AS other", "CAST(id AS STRING) AS name"
         ),
     )
-    ddl2 = _table_ddl(root)  # same root, same head version (0)
-    assert "other int" in ddl2 and "name string" in ddl2
-    assert "id bigint" not in ddl2
+    ddl2 = ddl(root)  # same root, same head version (0)
+    assert "other:int" in ddl2 and "name:string" in ddl2
+    assert "id:bigint" not in ddl2
 
 
 def test_acid_delete_where_under_percent_encoded_root(spark, tmp_path):
