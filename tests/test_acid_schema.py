@@ -189,9 +189,7 @@ def test_acid_add_columns_snapshot_has_table_schema(spark, tmp_path):
 def test_acid_type_changing_write_is_refused(spark, tmp_path):
     """An append or a merge whose files change a column's type raises
     ValueError naming the column before anything is committed: the
-    head stays, and snapshot() still reads its rows. So does a data
-    file whose footer carries no Spark schema."""
-    import pyarrow as pa
+    head stays, and snapshot() still reads its rows."""
     import pytest
 
     root = str(tmp_path / "t")
@@ -211,6 +209,14 @@ def test_acid_type_changing_write_is_refused(spark, tmp_path):
     assert AT.current_version(root) == head
     assert _rows(AT.snapshot(spark, root)) == want
     assert _prop(root).simpleString() == "struct<k:bigint,v:bigint>"
+
+
+def test_acid_widen_schema_needs_spark_footer(tmp_path):
+    """A data file whose footer carries no Spark schema (written by a
+    non-Spark writer) is refused: widening raises rather than leave
+    the commit without a schema property."""
+    import pyarrow as pa
+    import pytest
 
     p = str(tmp_path / "plain.parquet")
     pq.write_table(pa.table({"k": [1, 2]}), p)
