@@ -14,9 +14,14 @@ manifests) from first principles:
   is O(changed files) — at 100 TB (1e6+ live files) an append or a
   targeted DELETE commits a few-hundred-byte manifest, not a
   megabytes-long full listing. Every ``CHECKPOINT_EVERY``-th version
-  additionally materializes a full file listing as a sidecar
+  additionally materializes the resolved snapshot as a sidecar
   (`00000016.checkpoint.json`), Delta's checkpoint-parquet pattern,
-  so resolving any snapshot replays a bounded number of deltas.
+  so resolving any snapshot replays a bounded number of deltas. A
+  checkpoint holds the snapshot's files, their statistics, its
+  deletion-vector set and every op tag committed up to it (Delta
+  keeps streaming transaction ids there too), so vacuum, which
+  checkpoints its cutoff before unlinking older manifests, loses none
+  of them.
 - Readers resolve a snapshot by manifest — never by listing `data/`
   — so concurrent writers never corrupt a read (files are immutable,
   manifests are immutable, a version is a closed file list: nearest
@@ -129,16 +134,36 @@ def _read_raw(root: str, version: int) -> dict:
         return json.load(f)
 
 
-def _resolve(root: str, version: int) -> tuple[list[str], dict, list[str]]:
+def _apply_delta(
+    files: set[str], stats: dict, dvs: set[str], ops: set[str], m: dict
+) -> None:
+    """Step a snapshot state forward by delta manifest `m`, in place —
+    the one place a manifest key's meaning is applied. Stats ride with
+    their files: a removed file drops its entry, an added file brings
+    its commit's entry. Vectors are add-only until a 'dv_reset'
+    replaces the set; ones targeting since-removed files are inert,
+    not invalid (the anti-join simply never matches them). Op tags
+    only accumulate."""
+    files.difference_update(m["remove"])
+    files.update(m["add"])
+    for f in m["remove"]:
+        stats.pop(f, None)
+    stats.update(m.get("stats") or {})
+    if "dv_reset" in m:
+        dvs.clear()
+        dvs.update(m["dv_reset"])
+    dvs.update(m.get("dv", ()))
+    ops.add(m["op"])
+
+
+def _resolve(
+    root: str, version: int
+) -> tuple[list[str], dict, list[str], set[str]]:
     """Snapshot `version` as (data files, per-file stats, deletion-
-    vector files): walk back to the nearest checkpoint (or version 0)
-    at-or-below, then replay the delta manifests forward. Bounded by
-    CHECKPOINT_EVERY deltas after the first checkpoint exists. Stats
-    ride with their files: a removed file drops its entry, an added
-    file brings its commit's entry.
-    Vectors are add-only until a 'dv_reset' replaces the set; ones
-    targeting since-removed files are inert, not invalid (the
-    anti-join simply never matches them)."""
+    vector files, op tags committed up to it): walk back to the
+    nearest checkpoint (or version 0) at-or-below, then replay the
+    delta manifests forward (_apply_delta). Bounded by
+    CHECKPOINT_EVERY deltas after the first checkpoint exists."""
     deltas: list[dict] = []
     v = version
     while True:
@@ -151,24 +176,17 @@ def _resolve(root: str, version: int) -> tuple[list[str], dict, list[str]]:
         if os.path.exists(cp):
             with open(cp) as f:
                 c = json.load(f)
-            files, stats = set(c["files"]), c.get("stats", {})
-            dvs = set(c.get("dvs", ()))
+            state = set(c["files"]), c["stats"], set(c["dvs"]), set(c["ops"])
             break
         deltas.append(_read_raw(root, v))
         if v == 0:  # version 0's delta is against the empty table
-            files, stats, dvs = set(), {}, set()
+            state = set(), {}, set(), set()
             break
         v -= 1
     for m in reversed(deltas):  # oldest first: resets must apply in order
-        files.difference_update(m["remove"])
-        files.update(m["add"])
-        for f in m["remove"]:
-            stats.pop(f, None)
-        stats.update(m.get("stats") or {})
-        if "dv_reset" in m:
-            dvs = set(m["dv_reset"])
-        dvs.update(m.get("dv", ()))
-    return sorted(files), stats, sorted(dvs)
+        _apply_delta(*state, m)
+    files, stats, dvs, ops = state
+    return sorted(files), stats, sorted(dvs), ops
 
 
 def _resolve_files(root: str, version: int) -> list[str]:
@@ -194,18 +212,24 @@ def read_manifest(
 
 
 def write_checkpoint(root: str, version: int | None = None) -> int:
-    """Materialize a full file-listing checkpoint sidecar for
-    `version` (latest if None) — atomic via temp-file + os.replace, so
-    a concurrent reader never sees a partial listing. Idempotent."""
+    """Materialize the resolved snapshot of `version` (latest if None)
+    as a checkpoint sidecar — atomic via temp-file + os.replace, so a
+    concurrent reader never sees a partial listing. Idempotent."""
     v = current_version(root) if version is None else version
-    # the dvs union and the merged file stats ride in every checkpoint
-    # so merge-on-read deletes and data skipping survive vacuum (the
-    # cutoff checkpoint is written before the delta manifests carrying
-    # the 'dv' and 'stats' keys are dropped)
-    files, stats, dvs = _resolve(root, v)
+    # the dvs union, the merged file stats and the op tags ride in
+    # every checkpoint, so merge-on-read deletes, data skipping and
+    # exactly-once history survive vacuum (the cutoff checkpoint is
+    # written before the delta manifests carrying them are dropped)
+    files, stats, dvs, ops = _resolve(root, v)
     _replace_json(
         _checkpoint_path(root, v),
-        {"version": v, "files": files, "dvs": dvs, "stats": stats},
+        {
+            "version": v,
+            "files": files,
+            "dvs": dvs,
+            "stats": stats,
+            "ops": sorted(ops),
+        },
     )
     return v
 
@@ -225,63 +249,8 @@ def _earliest_version(root: str) -> int:
     return min(_log_versions(root), default=0)
 
 
-def _table_id_path(root: str) -> str:
-    return os.path.join(_log_dir(root), "_table_id")
-
-
-def table_id(root: str) -> str:
-    """Stable uuid identifying THIS incarnation of the table (Delta's
-    metadata.id): written once when the log is created, removed with
-    the table, so a table dropped and recreated at the same root gets
-    a DIFFERENT id. committed_ops keys its per-process cache on it —
-    an op-tag coincidence on a recreated table can no longer validate
-    a stale cache entry. Created lazily (atomic os.link, first writer
-    wins) for tables that predate the id file."""
-    p = _table_id_path(root)
-    try:
-        with open(p) as f:
-            return f.read().strip()
-    except FileNotFoundError:
-        pass
-    os.makedirs(_log_dir(root), exist_ok=True)
-    tmp = os.path.join(_log_dir(root), f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        f.write(uuid.uuid4().hex)
-    try:
-        os.link(tmp, p)
-    except FileExistsError:
-        pass  # a concurrent caller won the create race — use theirs
-    finally:
-        os.unlink(tmp)
-    with open(p) as f:
-        return f.read().strip()
-
-
 def _vacuum_marker_path(root: str) -> str:
     return os.path.join(_log_dir(root), "_last_vacuum.json")
-
-
-def _vacuumed_ops_path(root: str) -> str:
-    return os.path.join(_log_dir(root), "_vacuumed_ops.json")
-
-
-def _vacuumed_ops(root: str) -> set:
-    """Op tags of manifests vacuum has physically removed — persisted
-    so exactly-once dedup history (append_idempotent) survives table
-    maintenance, Delta's txn appId/version sidecar pattern."""
-    p = _vacuumed_ops_path(root)
-    if not os.path.exists(p):
-        return set()
-    with open(p) as f:
-        return set(json.load(f)["ops"])
-
-
-def _record_vacuumed_ops(root: str, ops: set) -> None:
-    """Merge `ops` into the persisted vacuumed-op set (atomic replace).
-    Written by vacuum BEFORE it unlinks the manifests that carry them,
-    so committed_ops never loses a tag across maintenance."""
-    merged = _vacuumed_ops(root) | set(ops)
-    _replace_json(_vacuumed_ops_path(root), {"ops": sorted(merged)})
 
 
 def _record_vacuum_cutoff(root: str, cutoff: int) -> None:
@@ -344,8 +313,6 @@ def _commit(
     import pyarrow.parquet as pq
 
     os.makedirs(_log_dir(root), exist_ok=True)
-    if version == 0:
-        table_id(root)  # stamp this incarnation's identity at birth
     widen = props is None
     if not widen:
         props = dict(props)
@@ -749,7 +716,7 @@ def snapshot_pruned(
     over a range-clustered table opens O(matching files), not
     O(table). Returns (DataFrame, n_files_read, n_files_total)."""
     v = current_version(root) if version is None else version
-    files, stats, dvs = _resolve(root, v)
+    files, stats, dvs, _ = _resolve(root, v)
     lo_c, hi_c, decode = _probe_coerce(lo, hi)
     kept = []
     for f in files:
@@ -818,15 +785,6 @@ def append(
             continue
 
 
-#: per-process incremental scan state for committed_ops: root ->
-#: (table_id, last_scanned_version, op_of_that_version, frozenset(ops)).
-#: Each call only reads manifests committed since the last scan (O(new
-#: commits) per stream batch). The table_id pins the entry to ONE table
-#: incarnation, so a table recreated at the same root whose version
-#: carries the same op tag can never validate a stale entry.
-_OPS_CACHE: dict[str, tuple[str, int, str, frozenset]] = {}
-
-
 def clone(root: str, dest: str, version: int | None = None) -> int:
     """SHALLOW CLONE (Delta's CLONE TABLE): dest's version 0 is one
     delta manifest whose add-list is the source snapshot's resolved
@@ -843,7 +801,7 @@ def clone(root: str, dest: str, version: int | None = None) -> int:
     if current_version(dest) >= 0:
         raise FileExistsError(f"table already initialized at {dest}")
     v = current_version(root) if version is None else version
-    files, stats, dvs = _resolve(root, v)
+    files, stats, dvs, _ = _resolve(root, v)
     os.makedirs(_data_dir(dest), exist_ok=True)
     # deletion vectors are part of the snapshot's logical content —
     # a clone that dropped them would resurrect MoR-deleted rows. The
@@ -861,45 +819,19 @@ def clone(root: str, dest: str, version: int | None = None) -> int:
 
 
 def committed_ops(root: str) -> set:
-    """The set of op tags ever committed to the log — union of the
-    surviving manifests' tags and the persisted tags of vacuumed
-    manifests (_vacuumed_ops), so the exactly-once history survives
-    table maintenance. Incremental: a per-process cache remembers the
-    highest version already scanned and only newer manifests are read
-    (validated by re-reading the cached version's op, so a table
-    recreated at the same root can't serve stale tags)."""
-    head = current_version(root)
-    ops = _vacuumed_ops(root)
-    if head < 0:
-        return ops
-    tid = table_id(root)
-    start = _earliest_version(root)
-    cached = _OPS_CACHE.get(root)
-    if cached is not None:
-        cached_tid, last_v, last_op, cached_ops = cached
-        if cached_tid == tid and start <= last_v <= head:
-            try:
-                valid = _read_raw(root, last_v)["op"] == last_op
-            except FileNotFoundError:
-                # cached version vacuumed since: its tag is in
-                # _vacuumed_ops, the newer cached tags are still good
-                valid = True
-            if valid:
-                ops |= cached_ops
-                start = last_v + 1
-    for v in range(start, head + 1):
-        try:
-            ops.add(_read_raw(root, v)["op"])
-        except FileNotFoundError:
-            # concurrent vacuum unlinked it mid-scan; vacuum persists
-            # dropped tags BEFORE unlinking, so re-read the sidecar
-            ops |= _vacuumed_ops(root)
+    """The set of op tags ever committed to the table: the head
+    snapshot's (_resolve), so one walk back to the nearest checkpoint
+    reads at most CHECKPOINT_EVERY manifests. Checkpoints carry the
+    tags of every version at or below them, so the exactly-once
+    history survives vacuum. A vacuum running concurrently may unlink
+    a manifest mid-walk; it checkpoints its cutoff before unlinking
+    anything, so one more walk from the new head stops there."""
+    if current_version(root) < 0:
+        return set()
     try:
-        head_op = _read_raw(root, head)["op"]
-        _OPS_CACHE[root] = (tid, head, head_op, frozenset(ops))
+        return _resolve(root, current_version(root))[3]
     except FileNotFoundError:
-        _OPS_CACHE.pop(root, None)
-    return ops
+        return _resolve(root, current_version(root))[3]
 
 
 def append_idempotent(
@@ -934,8 +866,8 @@ def append_idempotent(
         # re-check BEFORE picking a target version: a duplicate of
         # this op that committed since the last check must win here,
         # otherwise our os.link lands on a fresh version number with
-        # no conflict and the batch is durable twice. committed_ops is
-        # incrementally cached, so this is O(commits since last check).
+        # no conflict and the batch is durable twice. committed_ops
+        # reads at most CHECKPOINT_EVERY manifests, so this is cheap.
         if op in committed_ops(root):
             for f in new_files:
                 if os.path.exists(f):
@@ -959,7 +891,7 @@ def snapshot(
     accumulated deletion vectors (merge-on-read deletes; a no-op
     branch when the table has none)."""
     v = current_version(root) if version is None else version
-    files, _, dvs = _resolve(root, v)
+    files, _, dvs, _ = _resolve(root, v)
     return _apply_dvs(spark, _scan(spark, root, v, files), dvs)
 
 
@@ -1214,12 +1146,10 @@ def _apply_dvs(spark: SparkSession, df: DataFrame, dvs: list[str]) -> DataFrame:
     return _live_positions(spark, df, dvs).drop("_dv_file", "_dv_pos")
 
 
-def _live_dv_targets(root: str, version: int | None = None) -> set[str]:
-    """Data files of `version` that some deletion vector still
-    targets (plain paths). Metadata-cheap: one footer-column read per
-    vector file."""
-    v = current_version(root) if version is None else version
-    files, _, dvs = _resolve(root, v)
+def _live_dv_targets(files: list[str], dvs: list[str]) -> set[str]:
+    """The snapshot data `files` that some deletion vector in `dvs`
+    still targets (plain paths). Metadata-cheap: one footer-column read
+    per vector file."""
     if not dvs:
         return set()
     import pyarrow.parquet as pq
@@ -1252,7 +1182,7 @@ def delete_where_mor(
     change data, so the CDF feed sees MoR deletes exactly like CoW
     ones. Returns the committed version."""
     base = current_version(root)
-    files, _, prior = _resolve(root, base)
+    files, _, prior, _ = _resolve(root, base)
     live = _live_positions(spark, _scan(spark, root, base, files), prior)
     hits = live.filter(F.coalesce(cond, F.lit(False)))
     dv_files = _write_dv_files(
@@ -1337,7 +1267,7 @@ def merge_upsert_mor(
     / insert change rows so the CDF feed sees the merge exactly like
     the CoW path's. Returns the committed version."""
     base = current_version(root)
-    files, _, prior = _resolve(root, base)
+    files, _, prior, _ = _resolve(root, base)
     _check_unique_keys(updates, key_cols, "merge_upsert_mor")
     keys = updates.select(*key_cols).distinct()
     live = _live_positions(spark, _scan(spark, root, base, files), prior)
@@ -1405,12 +1335,13 @@ def _cow_base(root: str, what: str) -> tuple[int, list[str]]:
     refused while live deletion vectors target those files: the raw
     rewrite would resurrect the rows they hide."""
     base = current_version(root)
-    if _live_dv_targets(root, base):
+    files, _, dvs, _ = _resolve(root, base)
+    if _live_dv_targets(files, dvs):
         raise DeletionVectorsPending(
             f"copy-on-write {what} on a table with live deletion "
             "vectors; run optimize() first to materialize them"
         )
-    return base, _resolve_files(root, base)
+    return base, files
 
 
 def _source_files(uris: DataFrame, files: list[str]) -> set[str]:
@@ -1475,17 +1406,23 @@ def delete_where(spark: SparkSession, root: str, cond, cdf: bool = False) -> int
     return base + 1
 
 
+#: head re-reads vacuum makes before giving up on a table whose
+#: writers keep committing during its log scan (guard (a) in vacuum)
+VACUUM_RESCANS = 8
+
+
 def vacuum(
     root: str,
     keep_versions: int = 1,
-    _max_rescans: int = 8,
     orphan_retention_s: float = 7 * 24 * 3600,
 ) -> int:
     """Physically remove data files referenced ONLY by manifests older
     than the newest `keep_versions` (and those manifests). Returns the
     number of files removed. The destructive companion op every CoW
     format needs — separated from delete_where so time travel works
-    until the user explicitly gives it up.
+    until the user explicitly gives it up. The cutoff version is
+    checkpointed before anything is unlinked, so it stays resolvable
+    and keeps the op tags of the dropped versions (committed_ops).
 
     Also reclaims ORPHANS: data files under data/ referenced by NO
     surviving manifest at all — the debris of (a) a writer killed
@@ -1509,12 +1446,12 @@ def vacuum(
     to the head) could reference a file this pass is about to unlink.
     Two guards close the race: (a) after computing the live set the
     head is re-read, and if new versions appeared the scan restarts
-    against the new head (up to `_max_rescans` times, then raises);
+    against the new head (up to VACUUM_RESCANS times, then raises);
     (b) `restore()` refuses targets below the last vacuum cutoff — a
     restore that wins the re-scan race still cannot resurrect dropped
     manifests. Concurrent vacuum+vacuum remains single-maintainer
     (unlink is idempotent here, but run one at a time)."""
-    for _ in range(_max_rescans):
+    for _ in range(VACUUM_RESCANS):
         latest = current_version(root)
         # a caller asking to keep more history than exists is a no-op,
         # not a crash: clamp so the live-file loop never sees a
@@ -1524,28 +1461,20 @@ def vacuum(
         # prior vacuum left it checkpointed): accumulate the union of
         # files referenced by dropped versions vs kept versions, and
         # the change-data and deletion-vector files the kept versions
-        # reference (same transitions as _resolve) — O(total delta
+        # reference (_apply_delta, as _resolve steps) — O(total delta
         # entries), never versions x files
         first_v = _earliest_version(root)
-        files, _, dvs = _resolve(root, first_v)
+        files, stats, dvs, ops = _resolve(root, first_v)
         files, dvs = set(files), set(dvs)
         dropped: set[str] = set()
         live: set[str] = set()
         live_aux: set[str] = set()
-        dropped_ops: set[str] = set()
         for v in range(first_v, latest + 1):
             m = _read_raw(root, v)
             if v > first_v:
-                files.difference_update(m["remove"])
-                files.update(m["add"])
-                if "dv_reset" in m:
-                    dvs = set(m["dv_reset"])
-                dvs.update(m.get("dv", ()))
+                _apply_delta(files, stats, dvs, ops, m)
             if v < cutoff:
                 dropped |= files
-                # this manifest is about to be unlinked: preserve its
-                # op tag so exactly-once dedup history survives
-                dropped_ops.add(m["op"])
             else:
                 live |= files
                 live_aux |= dvs
@@ -1566,16 +1495,14 @@ def vacuum(
     else:
         raise ConcurrentCommitError(
             "vacuum: table head kept moving across "
-            f"{_max_rescans} rescans; retry when writers quiesce"
+            f"{VACUUM_RESCANS} rescans; retry when writers quiesce"
         )
     # the cutoff version must stay resolvable once older manifests are
-    # gone: checkpoint it before deleting anything, and persist the
-    # dropped manifests' op tags before their files go (committed_ops
-    # reads this sidecar so append_idempotent's dedup never forgets)
+    # gone: checkpoint it before deleting anything. The checkpoint
+    # carries the dropped manifests' op tags too, so committed_ops (and
+    # append_idempotent's dedup) never forgets them.
     if cutoff > first_v:
         write_checkpoint(root, cutoff)
-        if dropped_ops:
-            _record_vacuumed_ops(root, dropped_ops)
     removed = 0
     # table-root containment (Delta's rule: VACUUM only ever deletes
     # files under the table directory): a shallow clone's manifests
@@ -1760,7 +1687,7 @@ def optimize(
     snapshot_pruned keeps skipping them; otherwise rows spread round-
     robin. Returns the committed version."""
     base = current_version(root)
-    old_files, _, dvs = _resolve(root, base)
+    old_files, _, dvs, _ = _resolve(root, base)
     # DV-aware read: compaction MATERIALIZES merge-on-read deletes —
     # vector-hidden rows never enter the compacted files, after which
     # the old vectors target only removed files and are inert
@@ -1840,7 +1767,7 @@ def optimize_zorder(
     partitions, and the rewrite commits as remove(old)+add(new).
     Returns the committed version."""
     base = current_version(root)
-    old_files, _, dvs = _resolve(root, base)
+    old_files, _, dvs, _ = _resolve(root, base)
     # DV-aware, like optimize: clustering must not resurrect
     # vector-hidden rows
     snap = _apply_dvs(spark, _scan(spark, root, base, old_files), dvs)
@@ -1901,8 +1828,8 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
             f"{cut}; its data files may have been physically removed"
         )
     head = current_version(root)
-    cur, _, cur_dvs = _resolve(root, head)
-    tgt, tgt_stats, tgt_dvs = _resolve(root, version)
+    cur, _, cur_dvs, _ = _resolve(root, head)
+    tgt, tgt_stats, tgt_dvs, _ = _resolve(root, version)
     add = sorted(set(tgt) - set(cur))
     # the deletion-vector set rewinds WITH the file set: vectors
     # committed after the target would otherwise keep hiding rows the
@@ -2026,7 +1953,7 @@ def snapshot_bloom_lookup(
     never a Python re-implementation of the hash). Returns
     (DataFrame, n_files_read, n_files_total)."""
     v = current_version(root) if version is None else version
-    files, stats, dvs = _resolve(root, v)
+    files, stats, dvs, _ = _resolve(root, v)
     key = f"bloom:{col}"
     configs = {
         (e["b"], e["k"])

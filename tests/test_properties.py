@@ -1130,9 +1130,10 @@ def test_interval_overlap_matches_naive(spark, spans):
 def test_acid_committed_ops_survive_vacuum(spark, tmp_path):
     """Exactly-once history must survive table maintenance: after
     vacuum() physically removes old manifests, committed_ops() still
-    returns their op tags (persisted sidecar, Delta's txn appId
-    pattern) and append_idempotent still (a) runs without crashing on
-    the vacuumed log and (b) skips a replay of a PRE-vacuum batch."""
+    returns their op tags (the cutoff checkpoint carries them, as
+    Delta's checkpoints carry txn appIds) and append_idempotent still
+    (a) runs without crashing on the vacuumed log and (b) skips a
+    replay of a PRE-vacuum batch."""
     from pyspark.sql import functions as F
 
     from bitcoin_olap_spark.operators import acidtable as AT
@@ -1146,7 +1147,6 @@ def test_acid_committed_ops_survive_vacuum(spark, tmp_path):
             )
             is not None
         )
-    AT._OPS_CACHE.pop(root, None)  # force a cold scan of the log
     AT.vacuum(root, keep_versions=1)
     # manifests 0..2 are gone, but their tags must survive
     ops = AT.committed_ops(root)
@@ -1169,10 +1169,9 @@ def test_acid_committed_ops_survive_vacuum(spark, tmp_path):
 
 
 def test_acid_committed_ops_cache_incremental_and_recreate(spark, tmp_path):
-    """The committed_ops per-process cache must (a) pick up commits
-    made after a cached scan and (b) never serve stale tags for a
-    table recreated at the same root (validated by re-reading the
-    cached version's op)."""
+    """committed_ops must (a) include commits made after an earlier
+    call in the same process and (b) never return tags of a table
+    dropped and recreated at the same root."""
     from pyspark.sql import functions as F
 
     from bitcoin_olap_spark.operators import acidtable as AT
@@ -1181,9 +1180,9 @@ def test_acid_committed_ops_cache_incremental_and_recreate(spark, tmp_path):
     df = spark.range(3).select(F.col("id"))
     AT.init_table(spark, root, df)
     AT.append_idempotent(spark, root, df, "x-1")
-    assert "x-1" in AT.committed_ops(root)  # populates the cache
+    assert "x-1" in AT.committed_ops(root)
     AT.append_idempotent(spark, root, df, "x-2")
-    assert "x-2" in AT.committed_ops(root)  # incremental pickup
+    assert "x-2" in AT.committed_ops(root)  # a later commit shows up
 
     # recreate the table at the same root: old tags must vanish
     import shutil
@@ -1445,11 +1444,11 @@ def test_acid_stats_null_and_nonjson_types(spark, tmp_path):
 def test_acid_ops_cache_ignores_recreated_table_tag_coincidence(
     spark, tmp_path
 ):
-    """The committed_ops cache is keyed on the table's identity uuid:
-    a table dropped and recreated at the same root whose SAME-NUMBERED
-    head version carries the SAME generic op tag ('append') must not
-    validate the stale cache — otherwise append_idempotent would
-    silently skip a legitimate first-time batch on the new table."""
+    """A table dropped and recreated at the same root, whose
+    SAME-NUMBERED head version carries the SAME generic op tag
+    ('append'), must not report the old table's tags: otherwise
+    append_idempotent would silently skip a legitimate first-time
+    batch on the new table."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -1461,18 +1460,118 @@ def test_acid_ops_cache_ignores_recreated_table_tag_coincidence(
     AT.init_table(spark, root, df)                      # v0 'init'
     AT.append_idempotent(spark, root, df, "batch-1")    # v1 'batch-1'
     AT.append(spark, root, df)                          # v2 'append'
-    assert "batch-1" in AT.committed_ops(root)  # cache: head=2,'append'
+    assert "batch-1" in AT.committed_ops(root)  # head=2, 'append'
 
     shutil.rmtree(root)
     AT.init_table(spark, root, df)                      # v0 'init'
     AT.append(spark, root, df)                          # v1 'append'
     AT.append(spark, root, df)                          # v2 'append'
-    # same head version, same tag — the op-tag re-read alone would
-    # validate coincidentally; the uuid check must reject it
+    # same head version, same tag: only the new table's own log may
+    # answer
     assert "batch-1" not in AT.committed_ops(root)
     v = AT.append_idempotent(spark, root, df, "batch-1")
     assert v is not None, "first-time batch skipped on recreated table"
     assert AT.snapshot(spark, root).count() == 12
+
+
+def _metadata_only_table(spark, root, n_commits):
+    """An ACID table at version `n_commits`: init_table, then
+    `n_commits` commits that add no file, tagged op-1 .. op-n."""
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    AT.init_table(spark, root, spark.range(3).select("id"))
+    for v in range(1, n_commits + 1):
+        AT._commit(root, v, f"op-{v}")
+    return {"init", *(f"op-{v}" for v in range(1, n_commits + 1))}
+
+
+def test_acid_committed_ops_reads_from_nearest_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """committed_ops answers from the head snapshot: a first call on a
+    40-version table (checkpoints at 0, 16 and 32) reads only the
+    manifests above the nearest checkpoint, not the whole log, and
+    still returns every tag the log ever committed."""
+    import os
+
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    root = str(tmp_path / "tbl")
+    want = _metadata_only_table(spark, root, 40)
+    assert AT.current_version(root) == 40
+    for v in (0, 16, 32):
+        assert os.path.exists(AT._checkpoint_path(root, v))
+    reads = []
+    real = AT._read_raw
+
+    def counted(r, v):
+        reads.append(v)
+        return real(r, v)
+
+    monkeypatch.setattr(AT, "_read_raw", counted)
+    assert AT.committed_ops(root) == want
+    assert len(reads) <= AT.CHECKPOINT_EVERY, reads
+
+
+def test_acid_committed_ops_survive_concurrent_vacuum(
+    spark, tmp_path, monkeypatch
+):
+    """A vacuum that unlinks manifests while committed_ops walks the
+    log must not lose a tag: vacuum checkpoints its cutoff before it
+    unlinks, and committed_ops walks once more from the head. A replay
+    of a pre-vacuum op afterwards is still skipped."""
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    root = str(tmp_path / "tbl")
+    want = _metadata_only_table(spark, root, 5)
+    real = AT._read_raw
+    ran = []
+
+    def vacuum_first(r, v):
+        if not ran:
+            ran.append(v)
+            AT.vacuum(root, keep_versions=1)
+        return real(r, v)
+
+    monkeypatch.setattr(AT, "_read_raw", vacuum_first)
+    assert AT.committed_ops(root) == want
+    assert ran and AT._earliest_version(root) == 5  # vacuum did run
+    monkeypatch.setattr(AT, "_read_raw", real)
+    df = spark.range(3).select("id")
+    assert AT.append_idempotent(spark, root, df, "op-2") is None
+    assert AT.append_idempotent(spark, root, df, "init") is None
+    assert AT.current_version(root) == 5
+
+
+def test_acid_cow_writers_resolve_head_once(spark, tmp_path, monkeypatch):
+    """delete_where and merge_upsert resolve the head snapshot once:
+    the deletion-vector interlock and the rewrite share one walk of
+    the log. Both commit at versions that are not checkpoints, so
+    _commit resolves nothing itself."""
+    from pyspark.sql import functions as F
+
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    root = str(tmp_path / "tbl")
+    AT.init_table(spark, root, spark.range(0, 20).select("id"))
+    calls = []
+    real = AT._resolve
+
+    def counted(r, v):
+        calls.append(v)
+        return real(r, v)
+
+    monkeypatch.setattr(AT, "_resolve", counted)
+    assert AT.delete_where(spark, root, F.col("id") < 5) == 1
+    assert calls == [0]
+    calls.clear()
+    updates = spark.range(3, 8).select("id")
+    assert AT.merge_upsert(spark, root, updates, ["id"]) == 2
+    assert calls == [1]
+    monkeypatch.setattr(AT, "_resolve", real)
+    assert sorted(r.id for r in AT.snapshot(spark, root).collect()) == list(
+        range(3, 20)
+    )
 
 
 @SETTINGS
@@ -1973,7 +2072,7 @@ def test_acid_footer_stats_match_spark_aggregate(spark, tmp_path):
     AT.append(spark, root, mar)
     AT.append(spark, root, nulls)
 
-    files, stats, _ = AT._resolve(root, AT.current_version(root))
+    files, stats, _, _ = AT._resolve(root, AT.current_version(root))
     want = {}
     for r in (
         AT.snapshot(spark, root)
@@ -2067,7 +2166,7 @@ def test_acid_pruning_survives_merge_delete_optimize(spark, tmp_path):
 
     def check(lo, hi):
         v = AT.current_version(root)
-        files, stats, _ = AT._resolve(root, v)
+        files, stats, _, _ = AT._resolve(root, v)
         assert all("id" in stats.get(f, {}) for f in files)
         pruned, n_read, n_total = AT.snapshot_pruned(spark, root, "id", lo, hi)
         assert n_read < n_total, (AT._read_raw(root, v)["op"], n_read)
@@ -2745,6 +2844,15 @@ def test_cdf_replication_mirrors_source_and_lands_exactly_once(spark):
     assert AT.current_version(land) == head_before
 
 
+def _head_dv_targets(root):
+    """The head snapshot's data files that a live deletion vector
+    targets: the input of the copy-on-write writers' interlock."""
+    from bitcoin_olap_spark.operators import acidtable as AT
+
+    files, _, dvs, _ = AT._resolve(root, AT.current_version(root))
+    return AT._live_dv_targets(files, dvs)
+
+
 def test_deletion_vectors_full_lifecycle(spark, tmp_path):
     """Merge-on-read DELETE contract (operators/acidtable
     delete_where_mor + deletion vectors): (a) a MoR delete rewrites NO
@@ -2809,7 +2917,7 @@ def test_deletion_vectors_full_lifecycle(spark, tmp_path):
         )
     AT.optimize(spark, root, target_files=2)  # v3 materializes
     assert AT.snapshot(spark, root).count() == 850
-    assert not AT._live_dv_targets(root)
+    assert not _head_dv_targets(root)
     AT.delete_where(spark, root, F.col("id") < 200)  # CoW works again
     assert AT.snapshot(spark, root).count() == 800
 
@@ -3086,7 +3194,7 @@ def test_acid_mor_interlock_fires_with_relative_root(spark, tmp_path):
     rel_root = os.path.relpath(str(tmp_path / "tbl"))
     AT.init_table(spark, rel_root, spark.range(0, 20).select("id"))
     AT.delete_where_mor(spark, rel_root, F.col("id") < 5)
-    assert AT._live_dv_targets(rel_root), "interlock input empty"
+    assert _head_dv_targets(rel_root), "interlock input empty"
     with pytest.raises(AT.DeletionVectorsPending):
         AT.delete_where(spark, rel_root, F.col("id") >= 15)
     # after optimize materializes the vectors, CoW proceeds
@@ -3118,7 +3226,7 @@ def test_acid_stale_dv_target_is_inert_not_invalid(spark, tmp_path):
         spark, root, spark.range(0, 100).select("id").coalesce(1)
     )
     AT.delete_where_mor(spark, root, F.col("id") < 10)  # v1: live DV
-    targets = AT._live_dv_targets(root)
+    targets = _head_dv_targets(root)
     assert targets, "DV must target the v0 file"
     # synthesize a rewrite commit: replacement file with the SAME live
     # rows the vector's math would produce, old file removed, vector
@@ -3128,7 +3236,7 @@ def test_acid_stale_dv_target_is_inert_not_invalid(spark, tmp_path):
     (newfile,) = glob.glob(os.path.join(newdir, "*.parquet"))
     AT._commit(root, 2, "rewrite", add=[newfile], remove=sorted(targets))
     # the stale vector maps to no live file: interlock input is empty
-    assert AT._live_dv_targets(root) == set()
+    assert _head_dv_targets(root) == set()
     # reads stay correct and CoW delete proceeds instead of raising
     assert AT.snapshot(spark, root).count() == 90
     AT.delete_where(spark, root, F.col("id") >= 95)
